@@ -188,14 +188,9 @@ def _register(
     # Prefer the typed (zero-copy buffer) implementation when built —
     # results are bit-identical (merge-order invariance / certified
     # reads; TypedAggs.scala header), only the per-row buffer copy
-    # disappears. SPARK_GRAFT_NO_TYPED_AGG=1 forces the UDAF form
-    # (A/B benchmarking, tools/r14_typed_probe.py).
-    if (
-        typed_method
-        and k is not None
-        and not os.environ.get("SPARK_GRAFT_NO_TYPED_AGG")
-        and typed_available()
-    ):
+    # disappears: 2-4x faster than the UDAF form on 8M rows (PERF.md,
+    # round 14 "Zero-copy JVM aggregate buffers").
+    if typed_method and k is not None and typed_available():
         try:
             _register_scala(spark, typed_method, name, k)
             _REGISTERED.add(key)

@@ -11,20 +11,13 @@ Unlike Flink, the probe-time column is a plain parameter, so joining as-of a
 *different* time column (J2, App.java:228-233) needs none of the
 watermark-reassignment machinery (App.java:207-225).
 
-Three strategies, one API (SURVEY.md §7.3):
-
-- ``union``  (default): tag version and probe rows, union, per-key
-  cumulative ``last(value) IGNORE NULLS`` ordered by (time, tag), keep probe
-  rows. ONE shuffle + per-key sort, bounded memory per partition — the
-  100 TB-scale plan. Probes at a version's exact timestamp sort after it
-  (tag 1 > 0) ⇒ inclusive ``<=``.
-- ``rank``: equi-join on key, filter ``version_time <= probe_time``,
-  ``row_number() = 1`` per probe. Simple and exact, but materializes
-  |versions-per-key| × |probes-per-key| intermediates — fine for small/
-  broadcastable version tables, quadratic-per-key at scale.
-- ``pandas``: cogrouped ``applyInPandas`` + ``pandas.merge_asof`` —
-  per-key sorted merge in Arrow batches; needs each key group to fit in
-  memory. Kept as the escape hatch for semantics built-ins can't express.
+One plan (SURVEY.md §7.3): tag version and probe rows, union, per-key
+cumulative ``last(value) IGNORE NULLS`` ordered by (time, tag), keep probe
+rows. ONE shuffle + per-key sort, bounded memory per partition — the
+100 TB-scale plan. Probes at a version's exact timestamp sort after it
+(tag 1 > 0) ⇒ inclusive ``<=``. The pure-Python model in
+tests/test_asof_properties.py and the DuckDB twins in ``__spark_entry__``
+are its oracles.
 """
 
 from __future__ import annotations
@@ -34,7 +27,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_TIME, _TAG, _VAL, _PID = "__asof_t", "__asof_tag", "__asof_v", "__asof_pid"
+_TIME, _TAG, _VAL = "__asof_t", "__asof_tag", "__asof_v"
 
 
 def _as_list(x: str | Sequence[str]) -> list[str]:
@@ -48,8 +41,6 @@ def asof_join(
     probe_time: str,
     version_time: str = "_change_time",
     how: str = "left",
-    strategy: str = "union",
-    salt: int | None = None,
     direction: str = "backward",
     tolerance: str | None = None,
 ) -> DataFrame:
@@ -62,23 +53,14 @@ def asof_join(
     (e.g. ``"7 days"``) — pandas ``merge_asof(tolerance=...)`` semantics.
     A match further than ``tolerance`` from the probe instant is treated
     as no match (values null under ``how='left'``, row dropped under
-    ``how='inner'``). Works with every strategy and direction: the match
-    time rides along as an extra value column and the bound is applied as
-    a post-filter, so the core strategies stay untouched.
+    ``how='inner'``). Works in both directions: the match time rides along
+    as an extra value column and the bound is applied as a post-filter, so
+    the core plan stays untouched.
 
-    ``salt``: hot-key mitigation for the ``union`` strategy at cluster scale.
-    Probes spread across ``salt`` sub-partitions of their key; versions
-    replicate to every sub-partition, so each probe still sees the full
-    version history. Trades ``salt``x version replication for ``salt``x
-    probe-side parallelism — the right trade when one entity dominates the
-    probe stream (versions-per-key ≪ probes-per-key).
-
-    Duplicate ``(key, version_time)`` version rows: the union and rank
-    strategies break the tie deterministically (the duplicate with the
-    largest ``xxhash64`` of its value columns wins, consistently across both
-    strategies and across runs). ``version_history`` outputs never contain
-    such duplicates; the pandas strategy assumes they don't (its winner
-    follows pandas' stable sort of the incoming Arrow batch order).
+    Duplicate ``(key, version_time)`` version rows: the tie breaks
+    deterministically — the duplicate with the largest ``xxhash64`` of its
+    value struct wins, in both directions and across runs.
+    ``version_history`` outputs never contain such duplicates.
     """
     if how not in ("left", "inner"):
         raise ValueError(f"how must be 'left' or 'inner', got {how!r}")
@@ -110,8 +92,6 @@ def asof_join(
             probe_time=probe_time,
             version_time=version_time,
             how="left",
-            strategy=strategy,
-            salt=salt,
             direction=direction,
         )
         if direction == "backward":
@@ -127,40 +107,15 @@ def asof_join(
         if how == "inner":
             out = out.filter(F.col("__asof_keep"))
         return out.drop("__asof_keep")
-    if salt is not None:
-        if strategy != "union":
-            raise ValueError("salt is only supported with the 'union' strategy")
-        return _asof_union_salted(
-            probes, versions, keys, probe_time, version_time, vcols, how, salt, direction
-        )
-    impl = {"union": _asof_union, "rank": _asof_rank, "pandas": _asof_pandas}.get(strategy)
-    if impl is None:
-        raise ValueError(f"unknown strategy {strategy!r}")
-    return impl(probes, versions, keys, probe_time, version_time, vcols, how, direction)
+    return _asof_union(probes, versions, keys, probe_time, version_time, vcols, how, direction)
 
 
-def _asof_union_salted(
-    probes, versions, keys, probe_time, version_time, vcols, how, salt, direction="backward"
-):
-    """Salted union strategy: deterministic probe salt from the probe time,
-    versions exploded to all salts; then the plain union strategy keyed by
-    (keys..., __salt)."""
-    salt_col = "__asof_salt"
-    p = probes.withColumn(salt_col, F.pmod(F.xxhash64(F.col(probe_time)), F.lit(salt)))
-    v = versions.withColumn(
-        salt_col, F.explode(F.sequence(F.lit(0), F.lit(salt - 1)).cast("array<long>"))
-    )
-    out = _asof_union(p, v, [*keys, salt_col], probe_time, version_time, vcols, how, direction)
-    return out.drop(salt_col)
-
-
-def _asof_union(probes, versions, keys, probe_time, version_time, vcols, how, direction="backward"):
+def _asof_union(probes, versions, keys, probe_time, version_time, vcols, how, direction):
     # Pack value columns into one struct so a legitimately-NULL value inside a
     # version can't make last(..., ignorenulls) skip back to an older version.
     pcols = probes.columns
-    # NULL-time versions are meaningless ("valid since unknown"); drop them so
-    # all three strategies agree (rank/pandas reject them via the <= filter,
-    # but asc_nulls_first would have sorted them before every probe here).
+    # NULL-time versions are meaningless ("valid since unknown"); drop them,
+    # or asc_nulls_first would sort them before every probe.
     versions = versions.filter(F.col(version_time).isNotNull())
     v_part = versions.select(
         *keys,
@@ -178,17 +133,14 @@ def _asof_union(probes, versions, keys, probe_time, version_time, vcols, how, di
     )
     unioned = v_part.unionByName(p_part)
     # Third sort key: deterministic winner among duplicate (key, time) version
-    # rows — both directions pick the max value-hash, matching _asof_rank's
-    # hash-desc tiebreak. No-op for unique histories.
+    # rows — both directions pick the max value-hash. No-op for unique
+    # histories.
     #
     # backward: versions sort BEFORE probes at the same instant (tag 0 < 1)
     # and each probe takes the cumulative last version ⇒ inclusive <=.
-    # forward: flip the frame — probes take the FIRST version at-or-after
-    # their instant; versions at the same instant must fall inside the
-    # (currentRow, unboundedFollowing] frame, which tag 0 < 1 already
-    # guarantees... except ordering must put probes first, so the tag order
-    # flips (probe tag stays 1 but descending) — equivalently order _TAG
-    # desc and hash desc, frame currentRow→following, first(ignorenulls).
+    # forward: probes take the FIRST version at-or-after their instant, so
+    # probes must sort before versions at the same instant — order _TAG and
+    # the hash descending, frame currentRow→following, first(ignorenulls).
     if direction == "backward":
         w = (
             Window.partitionBy(*keys)
@@ -216,83 +168,6 @@ def _asof_union(probes, versions, keys, probe_time, version_time, vcols, how, di
     )
 
 
-def _asof_rank(probes, versions, keys, probe_time, version_time, vcols, how, direction="backward"):
-    # The synthetic probe id is nondeterministic per evaluation; localCheckpoint
-    # (materialize + truncate lineage) so the version-join branch and the final
-    # left join see the SAME ids even under task retries. Checkpoint blocks are
-    # auto-freed when the result DataFrame is GC'd — unlike persist(), repeated
-    # calls in a long session don't accumulate cached partitions.
-    p = probes.withColumn(_PID, F.monotonically_increasing_id()).localCheckpoint(
-        eager=True
-    )
-    band = (
-        F.col(version_time) <= F.col(probe_time)
-        if direction == "backward"
-        else F.col(version_time) >= F.col(probe_time)
-    )
-    joined = p.join(versions, on=keys, how="inner").filter(band)
-    # hash-desc tiebreak: same winner as the union strategy on duplicate
-    # (key, version_time) rows
-    order_t = (
-        F.col(version_time).desc() if direction == "backward" else F.col(version_time).asc()
-    )
-    w = Window.partitionBy(_PID).orderBy(
-        order_t, F.xxhash64(F.struct(*[F.col(c) for c in vcols])).desc()
-    )
-    best = (
-        joined.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(_PID, *vcols)
-    )
-    out = p.join(best, on=_PID, how=how).drop(_PID)
-    return out.select(*probes.columns, *vcols)
-
-
-def _asof_pandas(probes, versions, keys, probe_time, version_time, vcols, how, direction="backward"):
-    import pandas as pd
-    from pyspark.sql.types import StructType
-
-    out_schema = StructType(
-        [probes.schema[c] for c in probes.columns]
-        + [versions.schema[c] for c in vcols]
-    )
-    pcols = probes.columns
-
-    def merge(left: "pd.DataFrame", right: "pd.DataFrame") -> "pd.DataFrame":
-        if left.empty:
-            return pd.DataFrame(columns=pcols + vcols)
-        left = left.sort_values(probe_time, kind="mergesort")
-        if right.empty:
-            if how == "inner":
-                return pd.DataFrame(columns=pcols + vcols)
-            out = left.copy()
-            for c in vcols:
-                out[c] = None
-            return out[pcols + vcols]
-        right = right.sort_values(version_time, kind="mergesort")
-        merged = pd.merge_asof(
-            left,
-            right[[version_time, *vcols]],
-            left_on=probe_time,
-            right_on=version_time,
-            direction=direction,
-            allow_exact_matches=True,  # inclusive (<= backward / >= forward)
-        )
-        if how == "inner":
-            merged = merged[merged[version_time].notna()]
-        # Keep integer value columns nullable (NaN from unmatched LEFT rows
-        # would otherwise arrive as float at the Arrow boundary).
-        for c in vcols:
-            if pd.api.types.is_float_dtype(merged[c]) and not pd.api.types.is_float_dtype(
-                right[c]
-            ):
-                merged[c] = merged[c].astype("object").where(merged[c].notna(), None)
-        return merged[pcols + vcols]
-
-    grouped = probes.groupBy(*keys).cogroup(versions.groupBy(*keys))
-    return grouped.applyInPandas(merge, schema=out_schema)
-
-
 def asof_nearest(
     probes: DataFrame,
     versions: DataFrame,
@@ -300,7 +175,6 @@ def asof_nearest(
     probe_time: str,
     probe_id: str,
     version_time: str = "_change_time",
-    strategy: str = "union",
 ) -> DataFrame:
     """Nearest-in-time as-of join (pandas ``merge_asof(direction=
     'nearest')``) — sensor-fusion semantics: each probe takes whichever
@@ -310,8 +184,8 @@ def asof_nearest(
     must).
 
     Composed from the two directional as-ofs this module already
-    provides (each the efficient union/rank/pandas strategy, not a
-    brute-force candidate join): the matched version time rides along
+    provides (each the one-shuffle union plan, not a brute-force
+    candidate join): the matched version time rides along
     (the tolerance-path device), and one CASE per probe picks the
     smaller |delta|. ``probe_id`` must uniquely identify probe rows
     (the recombination join key).
@@ -335,7 +209,6 @@ def asof_nearest(
             probe_time=probe_time,
             version_time=version_time,
             how="left",
-            strategy=strategy,
             direction=direction,
         )
         sel = [F.col(probe_id)] + [

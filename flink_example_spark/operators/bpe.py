@@ -102,7 +102,7 @@ def bpe_train(
     # round's top-pair aggregation fills the cache as a side effect, fusing
     # what used to be two jobs per merge (agg + eager localCheckpoint) into
     # one — measured 8.5s -> 3.7s for 8 merges at sf0.01 with identical
-    # merge tables (tools/bpe_probe.py). The logical plan grows by one
+    # merge tables. The logical plan grows by one
     # interpreted merge-fold per round, but execution short-circuits at the
     # cached round, so only analysis cost grows (negligible through 8
     # rounds).

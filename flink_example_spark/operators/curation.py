@@ -16,7 +16,7 @@ Scale design (100 TB posture):
   n-gram SET: the benchmark side (eval suites: MMLU/GSM8K/... ~1e6 n-grams)
   is broadcast, so the corpus side streams map-side with NO shuffle;
   ``hashed=True`` reduces both sides to xxhash64(ngram) first (8-byte
-  broadcast + shuffle keys — measured in tools/hash_shuffle_probe.py).
+  broadcast + shuffle keys — 2.6x fewer shuffle bytes at sf0.1).
 - shared-span detection is one hash aggregation keyed on the span; at
   100 TB pass ``hashed=True`` to carry xxhash64(span) through the shuffle
   instead of the string and resolve strings only for the survivors.
@@ -89,8 +89,8 @@ def decontaminate(
     ``hashed=True`` is the 100 TB shuffle diet this module's header
     prescribes: both sides reduce to ``xxhash64(ngram)`` before the join,
     so the broadcast table and the aggregation shuffle carry 8-byte longs
-    instead of ~n-word strings (~10x fewer bytes; tools/hash_shuffle_probe
-    records the measured delta). Counting distinct hashes instead of
+    instead of ~n-word strings (2.6x fewer shuffle bytes measured at
+    sf0.1). Counting distinct hashes instead of
     distinct strings differs only on a 64-bit collision *within one
     document's overlap set* — at 1e6 benchmark n-grams the chance is
     ~1e-7 per corpus — which is why the exact form stays the oracle

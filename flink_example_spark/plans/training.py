@@ -62,20 +62,15 @@ def training_examples(
     key: str = "_entity",
     prediction_time: str = "_prediction_time",
     label_time: str = "_label_time",
-    strategy: str = "union",
 ) -> DataFrame:
     """J1 + J2 (App.java:200-205, 228-233): LEFT as-of joins, features as of
     prediction time, targets as of label time. Inclusive ``<=`` semantics
     verified against the golden rows (SURVEY.md §0)."""
-    with_features = asof_join(
-        examples, feature_history, on=key, probe_time=prediction_time, strategy=strategy
-    )
-    return asof_join(
-        with_features, target_history, on=key, probe_time=label_time, strategy=strategy
-    )
+    with_features = asof_join(examples, feature_history, on=key, probe_time=prediction_time)
+    return asof_join(with_features, target_history, on=key, probe_time=label_time)
 
 
-def reference_pipeline(spark: SparkSession, strategy: str = "union") -> DataFrame:
+def reference_pipeline(spark: SparkSession) -> DataFrame:
     """The reference's full main() pipeline on its own fixture rows; must
     reproduce the golden output (App.java:80-81) exactly.
 
@@ -100,4 +95,4 @@ def reference_pipeline(spark: SparkSession, strategy: str = "union") -> DataFram
     examples = consecutive_loss_examples(
         gp, key="user", time_col="ts", loss_col=nullif_("won", True)
     )
-    return training_examples(examples, feature_history, target_history, strategy=strategy)
+    return training_examples(examples, feature_history, target_history)

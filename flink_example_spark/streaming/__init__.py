@@ -1,7 +1,6 @@
 from flink_example_spark.streaming.pipeline import (
     run_streaming_features,
     stream_events,
-    streaming_asof_join,
 )
 
-__all__ = ["stream_events", "run_streaming_features", "streaming_asof_join"]
+__all__ = ["stream_events", "run_streaming_features"]

@@ -1,11 +1,11 @@
 """Fully-JVM stream-stream as-of join via chained stateful operators.
 
-The exercised stream-stream as-of (``streaming/stateful.py``) keeps pickled
-Python state per key (``applyInPandasWithState``); the JVM-state
-``transformWithState`` port is blocked on google.protobuf being absent from
-this container. This module provides the third road: express the backward
-as-of as TWO built-in stateful operators chained in append mode (supported
-since Spark 3.5 / first-class in Spark 4):
+The stream-stream as-of (this module, and the same device inside
+``streaming/e2e.py``) keeps no Python state: a per-key Python processor
+would pickle every key's state each micro-batch, and the JVM-state
+``transformWithState`` port needs google.protobuf. Instead the backward
+as-of is expressed as TWO built-in stateful operators chained in append
+mode (supported since Spark 3.5 / first-class in Spark 4):
 
 1. a watermarked stream-stream LEFT OUTER interval join — versions buffer in
    the JVM state store and are evicted once the probe watermark passes the

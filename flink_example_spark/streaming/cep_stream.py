@@ -14,8 +14,8 @@ here). The bounded replay below stages chunks by event id — event-time
 ordered in the harness data — so the replay converges EXACTLY to the
 batch ``funnel`` and shares its DuckDB oracle. An unbounded deployment
 with out-of-order arrival buffers events per key until the watermark
-passes them (Flink CEP's approach) — that needs per-key ListState, the
-same transformWithState port gated on protobuf (streaming/stateful.py).
+passes them (Flink CEP's approach) — that needs per-key ListState, a
+``transformWithState`` port, which needs google.protobuf.
 
 Scale: one shuffle on the key (the same exchange the batch frontier chain
 needs, but paid once instead of k-1 times); state per key is O(k)

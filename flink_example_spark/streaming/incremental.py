@@ -22,8 +22,8 @@ folded into a single running value and dropped from the buffer.
 
 At scale this runs per-key-partitioned with no shuffle beyond the one the
 grouped aggregate needs anyway; swap ``applyInPandasWithState`` for
-``transformWithStateInPandas`` (streaming/stateful.py shows the port) to
-move state into the JVM store when google.protobuf is available.
+``transformWithStateInPandas`` to move state into the JVM store when
+google.protobuf is available.
 """
 
 from __future__ import annotations

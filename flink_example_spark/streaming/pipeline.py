@@ -8,9 +8,10 @@ Reference mapping:
 - T3/T4 changelog→versioned table (AddWatermark.java) → unnecessary: version
   history is computed directly from event time (SURVEY.md §7.1); the
   streaming as-of join consumes micro-batches via foreachBatch
-- J1/J2 temporal join → ``streaming_asof_join``: each probe micro-batch is
-  as-of joined against the version history (stream-static); exact same
-  operator as batch, so streaming results converge to the batch result.
+- J1/J2 temporal join → ``run_streaming_training_examples``: each probe
+  micro-batch is as-of joined against the version histories (stream-static)
+  in ``foreachBatch``; exact same operator as batch, so streaming results
+  converge to the batch result.
 
 All sources here are file streams over the harness parquet (maxFilesPerTrigger
 simulates arrival); production would swap in Kafka/Kinesis sources — the
@@ -175,40 +176,6 @@ def run_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         q.awaitTermination()
     return spark.table(name)
-
-
-def streaming_asof_join(
-    spark: SparkSession,
-    probe_stream: DataFrame,
-    versions: DataFrame,
-    on: str,
-    probe_time: str,
-    sink_table: str | None = None,
-) -> DataFrame:
-    """Temporal join of a probe stream against a version history (J1/J2,
-    App.java:200-233) via foreachBatch: every micro-batch of probes is as-of
-    joined with the SAME operator as batch, appended to an in-memory sink.
-
-    Because the as-of result for a probe row never changes once emitted (the
-    no-temporal-leakage property, App.java:29-33), per-micro-batch evaluation
-    is exact — no retraction handling is needed, which is precisely why the
-    version-history formulation beats changelog replay.
-
-    foreachBatch is at-least-once: a failed/restarted micro-batch re-runs.
-    Writes are therefore keyed on ``batch_id`` (mode=overwrite into a
-    per-batch partition directory), so a replayed batch overwrites its own
-    prior output instead of duplicating rows — the same contract a
-    transactional sink (Delta/Iceberg) gives via (queryId, batchId) dedup.
-    """
-    outdir = sink_table or tempfile.mkdtemp(prefix="stream_asof_")
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        out = asof_join(batch, versions, on=on, probe_time=probe_time, strategy="union")
-        out.write.mode("overwrite").parquet(f"{outdir}/batch={batch_id}")
-
-    q = probe_stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
-    return _read_batches(spark, outdir)
 
 
 def run_streaming_training_examples(spark: SparkSession, sf_dir: str) -> DataFrame:

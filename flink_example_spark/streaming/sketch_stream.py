@@ -11,9 +11,9 @@ fingerprints per language so far" without ever materializing the distinct
 set. Bounded replay converges EXACTLY to the batch ``kmv_distinct`` (the
 merge property, pinned in tests/test_sketch.py) and shares its oracle.
 
-State here is the pickled sorted list (applyInPandasWithState); the
-transformWithState port (ListState of longs, JVM-side) follows
-streaming/stateful.py's pattern once google.protobuf lands.
+State here is the pickled sorted list (applyInPandasWithState); a
+transformWithState port (ListState of longs, JVM-side) needs
+google.protobuf.
 
 Round 12 adds the stronger form that does NOT wait for protobuf:
 ``run_streaming_kmv_jvm`` holds the bottom-k state in the Java

@@ -2,8 +2,7 @@
 
 Spark jobs are slow per example, so examples are few but each is a full
 randomized relation; the pure-Python model from test_asof_properties is the
-oracle. Strategy equivalence (union == rank == model) is the key invariant —
-the two implementations share no code paths.
+oracle — it shares no code path with the Spark plan.
 """
 
 from __future__ import annotations
@@ -36,15 +35,10 @@ probes_strategy = st.lists(st.tuples(keys, minutes), min_size=1, max_size=15)
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-def test_union_and_rank_match_model(spark, vs, ps):
+def test_asof_join_matches_model(spark, vs, ps):
     versions = [(k, BASE + timedelta(minutes=m), v) for k, m, v in vs]
     probes = [(k, i, BASE + timedelta(minutes=m)) for i, (k, m) in enumerate(ps)]
     vdf = spark.createDataFrame(versions, VERSION_SCHEMA) if versions else spark.createDataFrame([], VERSION_SCHEMA)
     pdf = spark.createDataFrame(probes, PROBE_SCHEMA)
-    expected = model(versions, probes)
-    for strategy in ("union", "rank"):
-        got = {
-            r["pid"]: r["v"]
-            for r in asof_join(pdf, vdf, on="k", probe_time="t", strategy=strategy).collect()
-        }
-        assert got == expected, f"strategy={strategy}"
+    got = {r["pid"]: r["v"] for r in asof_join(pdf, vdf, on="k", probe_time="t").collect()}
+    assert got == model(versions, probes)

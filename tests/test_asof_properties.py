@@ -5,7 +5,7 @@ Invariants from the reference's core thesis (App.java:22-35):
 - no temporal leakage: versions arriving after t never change the row at t
 - inclusive boundary: a version AT the probe instant is visible
 - LEFT null-extension when no version <= t exists
-All three strategies must agree with a pure-Python reference model.
+The join must agree with a pure-Python reference model.
 """
 
 from __future__ import annotations
@@ -73,38 +73,19 @@ def model(versions, probes):
     return out
 
 
-@pytest.mark.parametrize("strategy", ["union", "rank", "pandas"])
 @pytest.mark.parametrize("seed", [1, 2])
-def test_asof_matches_model(spark, strategy, seed):
+def test_asof_matches_model(spark, seed):
     versions, probes = gen(seed)
     vdf = spark.createDataFrame(versions, VERSION_SCHEMA)
     pdf = spark.createDataFrame(probes, PROBE_SCHEMA)
     got = {
         r["pid"]: r["v"]
-        for r in asof_join(pdf, vdf, on="k", probe_time="t", strategy=strategy).collect()
+        for r in asof_join(pdf, vdf, on="k", probe_time="t").collect()
     }
     assert got == model(versions, probes)
 
 
-@pytest.mark.parametrize("seed", [3, 4])
-def test_salted_matches_unsalted(spark, seed):
-    """Hot-key mitigation must not change results: salted == plain union."""
-    versions, probes = gen(seed)
-    vdf = spark.createDataFrame(versions, VERSION_SCHEMA)
-    pdf = spark.createDataFrame(probes, PROBE_SCHEMA)
-    plain = {
-        r["pid"]: r["v"]
-        for r in asof_join(pdf, vdf, on="k", probe_time="t").collect()
-    }
-    salted = {
-        r["pid"]: r["v"]
-        for r in asof_join(pdf, vdf, on="k", probe_time="t", salt=4).collect()
-    }
-    assert salted == plain == model(versions, probes)
-
-
-@pytest.mark.parametrize("strategy", ["union", "rank"])
-def test_no_temporal_leakage(spark, strategy):
+def test_no_temporal_leakage(spark):
     """Appending versions later than every probe must not change any result."""
     versions, probes = gen(7)
     max_t = max(t for _, _, t in probes)
@@ -113,18 +94,17 @@ def test_no_temporal_leakage(spark, strategy):
     vdf2 = spark.createDataFrame(versions + future, VERSION_SCHEMA)
     pdf = spark.createDataFrame(probes, PROBE_SCHEMA)
     before = sorted(
-        asof_join(pdf, vdf, on="k", probe_time="t", strategy=strategy).collect(),
+        asof_join(pdf, vdf, on="k", probe_time="t").collect(),
         key=lambda r: r["pid"],
     )
     after = sorted(
-        asof_join(pdf, vdf2, on="k", probe_time="t", strategy=strategy).collect(),
+        asof_join(pdf, vdf2, on="k", probe_time="t").collect(),
         key=lambda r: r["pid"],
     )
     assert before == after
 
 
-@pytest.mark.parametrize("strategy", ["union", "rank", "pandas"])
-def test_inclusive_boundary_and_null_extension(spark, strategy):
+def test_inclusive_boundary_and_null_extension(spark):
     t0 = BASE
     vdf = spark.createDataFrame([("a", t0, 42)], VERSION_SCHEMA)
     pdf = spark.createDataFrame(
@@ -132,36 +112,41 @@ def test_inclusive_boundary_and_null_extension(spark, strategy):
     )
     got = {
         r["pid"]: r["v"]
-        for r in asof_join(pdf, vdf, on="k", probe_time="t", strategy=strategy).collect()
+        for r in asof_join(pdf, vdf, on="k", probe_time="t").collect()
     }
     # probe at exactly the version instant sees it (inclusive <=)
     assert got == {1: 42, 2: None, 3: None}
-    inner = asof_join(pdf, vdf, on="k", probe_time="t", how="inner", strategy=strategy)
+    inner = asof_join(pdf, vdf, on="k", probe_time="t", how="inner")
     assert {r["pid"] for r in inner.collect()} == {1}
 
 
 def test_duplicate_version_rows_tie_break_deterministically(spark):
-    """Duplicate (key, version_time) rows: union and rank must pick the SAME
-    winner (max xxhash64 of the value struct), consistently across runs."""
+    """Duplicate (key, version_time) rows: in both directions the winner is
+    the duplicate with the largest xxhash64 of its value struct, however
+    the versions are partitioned and on every run."""
+    from pyspark.sql import functions as F
+
+    dups = [("a", BASE, v) for v in range(1, 6)]
     versions = spark.createDataFrame(
-        [("a", BASE, 1), ("a", BASE, 2), ("a", BASE, 3)], VERSION_SCHEMA
+        [("a", BASE - timedelta(hours=1), 100), *dups, ("a", BASE + timedelta(hours=1), 200)],
+        VERSION_SCHEMA,
+    ).repartition(3)
+    winner = (
+        spark.createDataFrame(dups, VERSION_SCHEMA)
+        .orderBy(F.xxhash64(F.struct("v")).desc())
+        .first()["v"]
     )
-    probes = spark.createDataFrame(
-        [("a", 0, BASE + timedelta(hours=1))], PROBE_SCHEMA
-    )
-    winners = set()
-    for strategy in ("union", "rank"):
+    cases = {"backward": BASE + timedelta(minutes=30), "forward": BASE - timedelta(minutes=30)}
+    for direction, t in cases.items():
+        probes = spark.createDataFrame([("a", 0, t)], PROBE_SCHEMA)
         for _ in range(3):
             rows = asof_join(
-                probes, versions, on="k", probe_time="t", strategy=strategy
+                probes, versions, on="k", probe_time="t", direction=direction
             ).collect()
-            assert len(rows) == 1
-            winners.add(rows[0]["v"])
-    assert len(winners) == 1, f"nondeterministic tie-break: {winners}"
+            assert [r["v"] for r in rows] == [winner], direction
 
 
-@pytest.mark.parametrize("strategy", ["union", "rank", "pandas"])
-def test_forward_direction_first_at_or_after(spark, strategy):
+def test_forward_direction_first_at_or_after(spark):
     """direction='forward': FIRST version at-or-after the probe instant;
     inclusive >=; LEFT null-extension when no later version exists."""
     t0 = BASE + timedelta(hours=1)
@@ -181,20 +166,18 @@ def test_forward_direction_first_at_or_after(spark, strategy):
     got = {
         r["pid"]: r["v"]
         for r in asof_join(
-            probes, versions, on="k", probe_time="t",
-            strategy=strategy, direction="forward",
+            probes, versions, on="k", probe_time="t", direction="forward"
         ).collect()
     }
     assert got == {1: 10, 2: 20, 3: None, 4: 7}
     inner = asof_join(
-        probes, versions, on="k", probe_time="t",
-        how="inner", strategy=strategy, direction="forward",
+        probes, versions, on="k", probe_time="t", how="inner", direction="forward"
     )
     assert {r["pid"] for r in inner.collect()} == {1, 2, 4}
 
 
 def test_forward_random_model_agreement(spark):
-    """Randomized: all strategies must match a pure-Python forward model."""
+    """Randomized: the join must match a pure-Python forward model."""
     rng = random.Random(7)
     versions = [
         (k, BASE + timedelta(minutes=rng.randrange(0, 600)), rng.randrange(100))
@@ -218,21 +201,16 @@ def test_forward_random_model_agreement(spark):
         return min(cand)[1] if cand else None
 
     expected = {pid: model(k, t) for (k, pid, t) in probes}
-    for strategy in ("union", "rank", "pandas"):
-        got = {
-            r["pid"]: r["v"]
-            for r in asof_join(
-                pdf, vdf, on="k", probe_time="t",
-                strategy=strategy, direction="forward",
-            ).collect()
-        }
-        assert got == expected, strategy
+    got = {
+        r["pid"]: r["v"]
+        for r in asof_join(pdf, vdf, on="k", probe_time="t", direction="forward").collect()
+    }
+    assert got == expected
 
 
 def test_tolerance_bounds_staleness(spark):
     """tolerance='0 seconds' keeps only exact-instant matches; a tolerance
-    covering the span equals no tolerance; inner drops out-of-bound rows —
-    across all three strategies."""
+    covering the span equals no tolerance; inner drops out-of-bound rows."""
     from datetime import timedelta
 
     from flink_example_spark.operators.asof import asof_join
@@ -246,28 +224,20 @@ def test_tolerance_bounds_staleness(spark):
     ]
     vdf = spark.createDataFrame(versions, VERSION_SCHEMA)
     pdf = spark.createDataFrame(probes, PROBE_SCHEMA)
-    for strategy in ("union", "rank", "pandas"):
-        got = {
-            r["pid"]: r["v"]
-            for r in asof_join(
-                pdf, vdf, on="k", probe_time="t", strategy=strategy,
-                tolerance="6 minutes",
-            ).collect()
-        }
-        assert got == {0: 1, 1: 1, 2: None, 3: None}, strategy
-        exact = {
-            r["pid"]: r["v"]
-            for r in asof_join(
-                pdf, vdf, on="k", probe_time="t", strategy=strategy,
-                tolerance="0 seconds",
-            ).collect()
-        }
-        assert exact == {0: 1, 1: None, 2: None, 3: None}, strategy
-        inner = asof_join(
-            pdf, vdf, on="k", probe_time="t", strategy=strategy,
-            how="inner", tolerance="6 minutes",
-        )
-        assert {r["pid"] for r in inner.collect()} == {0, 1}, strategy
+    got = {
+        r["pid"]: r["v"]
+        for r in asof_join(pdf, vdf, on="k", probe_time="t", tolerance="6 minutes").collect()
+    }
+    assert got == {0: 1, 1: 1, 2: None, 3: None}
+    exact = {
+        r["pid"]: r["v"]
+        for r in asof_join(pdf, vdf, on="k", probe_time="t", tolerance="0 seconds").collect()
+    }
+    assert exact == {0: 1, 1: None, 2: None, 3: None}
+    inner = asof_join(
+        pdf, vdf, on="k", probe_time="t", how="inner", tolerance="6 minutes"
+    )
+    assert {r["pid"] for r in inner.collect()} == {0, 1}
 
 
 def test_asof_nearest_picks_closer_side_and_tie_backward(spark):

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 from datetime import datetime
 
-import pytest
 from pyspark.sql import functions as F
 
 from flink_example_spark.functions.scalar import nullif_
@@ -22,9 +21,8 @@ def rows_set(df, cols):
     return {tuple(r[c] for c in cols) for r in df.collect()}
 
 
-@pytest.mark.parametrize("strategy", ["union", "rank", "pandas"])
-def test_golden_output(spark, strategy):
-    out = reference_pipeline(spark, strategy=strategy)
+def test_golden_output(spark):
+    out = reference_pipeline(spark)
     cols = ["_entity", "_prediction_time", "_label_time", "loss_duration", "cnt"]
     assert out.columns == cols
     assert rows_set(out, cols) == set(GOLDEN_ROWS)

@@ -131,37 +131,6 @@ def test_topk_avoids_global_sort(spark):
         assert "TakeOrderedAndProject" in plan, q
 
 
-def test_asof_salted_partitions_on_salt(spark):
-    """salt=N must show up in the shuffle key: the Exchange partitions on
-    (keys..., __asof_salt) so a hot entity spreads across N sub-partitions,
-    and versions replicate via explode (no extra probe-side shuffle)."""
-    from flink_example_spark.operators.asof import asof_join
-    from flink_example_spark.plans.events_demo import (
-        examples,
-        feature_history,
-        load_events,
-    )
-
-    ev = load_events(spark, SF)
-    salted = asof_join(
-        examples(ev),
-        feature_history(ev),
-        on="_entity",
-        probe_time="_prediction_time",
-        salt=8,
-    )
-    plan = physical(salted)
-    assert "__asof_salt" in plan and "hashpartitioning" in plan
-    # the salt column participates in the window partition spec
-    assert plan.count("Window") >= 1
-
-    # and the salted result matches the unsalted one exactly
-    unsalted = asof_join(
-        examples(ev), feature_history(ev), on="_entity", probe_time="_prediction_time"
-    )
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, unsalted.collect()))
-
-
 def test_ivf_centroid_sampling_no_global_sort(spark):
     """Centroid seeding must stay TakeOrderedAndProject (per-partition top-k,
     k-row driver merge) — no Sort+Exchange of the corpus — and its numbering

@@ -1213,6 +1213,22 @@ def test_cox_forced_distributed_matches(spark):
     assert any("beta" == f for f, _ in local[0])
 
 
+def test_cox_scores_large_risk_set_matches_exact(spark):
+    """An at-risk count of 1e7 with covariate values up to 20 pushes the
+    score numerator ``num`` to ~2e13, so ``num * 1e6`` no longer fits in
+    BIGINT while ``den * 1e6`` still does. The in-engine score must equal
+    the driver's arbitrary-precision sum."""
+    from flink_example_spark.operators.timeseries import _cox_scores
+
+    de, n = (5, 2), (10_000_000, 2_000_000)
+    ev_s = [100_000, 250_000]
+    vals_list = [[20, 3], [0, 1], [1, 1]]
+    risk = spark.createDataFrame([(*de, *n)], "de0 long, de1 long, n0 long, n1 long")
+    exact = _cox_scores([(de, n)], 2, ev_s, vals_list)
+    assert _cox_scores(risk, 2, ev_s, vals_list) == exact
+    assert exact[2] == 0  # every stratum carries the same value: no score
+
+
 def test_holt_forced_recursive_gate(spark):
     """r15 size gate: with SPARK_GRAFT_HOLT_LOCAL_MAX=0 holt_forecast must
     route to the in-engine recursive CTE and return the same rows as the
