@@ -7883,7 +7883,6 @@ def _streaming_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     converge to the batch results, so they share the batch oracles."""
     from flink_example_spark.streaming.pipeline import (
         run_streaming_features,
-        run_streaming_training_examples,
         run_streaming_session_windows,
         run_streaming_sliding_counts,
         run_streaming_tumbling_counts,
@@ -7895,7 +7894,7 @@ def _streaming_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     return {
         "streaming_features_agg": run_streaming_features,
-        "streaming_training_examples": run_streaming_training_examples,
+        "streaming_training_examples": _run_streaming_pipeline_e2e,
         # the whole flagship graph (examples + both as-ofs, histories fused
         # into interval-join+agg) as ONE streaming query, all state JVM-side;
         # converges exactly to batch training_examples → shares its oracle
@@ -8045,8 +8044,9 @@ def _streaming_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # watermark-evicted): converges to the batch range join → shares
         # its oracle
         "streaming_interval_join": _run_streaming_interval_join,
-        # fully-JVM stream-stream as-of: chained interval join + arg-max agg
-        # (no Python state) — converges to the batch backward as-of
+        # the single backward as-of (examples x feature history): the same
+        # e2e query without the label-time count — converges to the batch
+        # backward as-of
         "streaming_asof_interval": _run_streaming_asof_interval,
     }
 
@@ -8058,9 +8058,7 @@ def _run_streaming_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_streaming_asof_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_example_spark.streaming.asof_stream import run_streaming_asof_interval
-
-    return run_streaming_asof_interval(spark, sf_dir)
+    return _run_streaming_pipeline_e2e(spark, sf_dir).drop("cnt")
 
 
 def _run_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:

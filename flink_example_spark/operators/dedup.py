@@ -78,35 +78,23 @@ def apply_cluster_dedup(
 
 
 def duplicate_clusters(
-    pairs: DataFrame, id_col: str = "doc_id", max_iter: int = 25, method: str = "distributed"
+    pairs: DataFrame, id_col: str = "doc_id", max_iter: int = 25
 ) -> DataFrame:
     """Connected components over near-dup pair edges: every doc in a pair
     gets ``cluster_id`` = the minimum doc id transitively reachable through
     duplicate relations (so A≈B, B≈C puts all three in one cluster even if
     A≈C was never emitted).
 
-    ``method``: 'distributed' (default) — the alternating large-star /
-    small-star algorithm (Kiveris et al., "Connected Components in MapReduce
-    and Beyond"): each round is two groupBy+join passes over the edge set,
-    and the edge set contracts toward star forests in O(log²) rounds
-    regardless of component DIAMETER (plain min-label propagation needs
-    diameter rounds — a 1M-long duplicate chain would need 1M rounds; stars
-    collapse it in ~20). Nothing edge-sized ever reaches the driver, so the
-    default path scales to any corpus. 'local' — driver-side union-find,
-    only for interactive use on small pair sets.
+    Above the ``SPARK_GRAFT_CC_LOCAL_MAX`` size gate this is the alternating
+    large-star / small-star algorithm (Kiveris et al., "Connected Components
+    in MapReduce and Beyond"): each round is two groupBy+join passes over
+    the edge set, and the edge set contracts toward star forests in O(log²)
+    rounds regardless of component DIAMETER (plain min-label propagation
+    needs diameter rounds — a 1M-long duplicate chain would need 1M rounds;
+    stars collapse it in ~20). Nothing edge-sized ever reaches the driver,
+    so it scales to any corpus. Below the gate a driver-side union-find over
+    the same canonical edges returns identical labels.
     """
-    if method == "local":
-        return _clusters_local(
-            pairs.select(F.col("doc_b").alias("hi"), F.col("doc_a").alias("lo"))
-            .filter(F.col("hi") != F.col("lo"))
-            .distinct(),
-            pairs.select(F.col("doc_a").alias(id_col))
-            .union(pairs.select(F.col("doc_b").alias(id_col)))
-            .distinct(),
-            id_col,
-        )
-    if method != "distributed":
-        raise ValueError(f"unknown method {method!r}")
 
     def large_star(e: DataFrame) -> DataFrame:
         # symmetric neighborhoods; connect strictly-larger neighbors to the

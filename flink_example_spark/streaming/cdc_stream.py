@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from flink_example_spark.operators.versioned import UPDATE_BEFORE, merge_net_changes
 from flink_example_spark.session import shuffle_partitions, tune
-from flink_example_spark.streaming.staging import stamp_chunk_mtimes
+from flink_example_spark.streaming.staging import stage_table_by_key
 
 SPLIT_TS = "2024-01-20 00:00:00"
 
@@ -54,36 +54,6 @@ def _changes_cols(ev: DataFrame, split) -> DataFrame:
     )
 
 
-def _stage_events_chunks(spark: SparkSession, sf_dir: str, chunks: int) -> tuple[str, object]:
-    """Stage the events table as event_id-ranged chunk files (arrival order
-    = chunk index via explicit mtimes). Range filters only."""
-    from flink_example_spark.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    tmpdir = tempfile.mkdtemp(prefix="stream_cdc_")
-    cuts = (
-        ev.agg(
-            F.percentile_approx(
-                F.col("event_id").cast("double"),
-                [i / chunks for i in range(1, chunks)],
-                10000,
-            )
-        ).first()[0]
-        if chunks > 1
-        else []
-    )
-    bounds = [None, *cuts, None]
-    for i in range(chunks):
-        part = ev
-        if bounds[i] is not None:
-            part = part.filter(F.col("event_id").cast("double") >= bounds[i])
-        if bounds[i + 1] is not None:
-            part = part.filter(F.col("event_id").cast("double") < bounds[i + 1])
-        part.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmpdir, f"chunk_{i}"))
-    stamp_chunk_mtimes(tmpdir)
-    return tmpdir, ev.schema
-
-
 def run_streaming_cdc_apply(
     spark: SparkSession, sf_dir: str, split_ts: str = SPLIT_TS, chunks: int = 3
 ) -> DataFrame:
@@ -93,7 +63,7 @@ def run_streaming_cdc_apply(
     from flink_example_spark.tables import load_table
 
     tune(spark)
-    tmpdir, schema = _stage_events_chunks(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -149,14 +119,12 @@ def run_streaming_attribution(
     ``cep_attribution`` and shares its oracle. foreachBatch writes are
     keyed on batch_id (overwrite per batch dir) for at-least-once safety.
     """
-    import tempfile
-
     from flink_example_spark.operators.asof import asof_join
     from flink_example_spark.streaming.pipeline import _read_batches
     from flink_example_spark.tables import load_table
 
     tune(spark)
-    tmpdir, schema = _stage_events_chunks(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from flink_example_spark.session import shuffle_partitions, tune
 from flink_example_spark.operators.util import fresh_local
-from flink_example_spark.streaming.staging import stamp_chunk_mtimes
+from flink_example_spark.streaming.staging import stage_table_by_key
 
 
 def streaming_exact_dedup(
@@ -85,7 +85,7 @@ def run_streaming_text_features(spark: SparkSession, sf_dir: str, chunks: int = 
     from flink_example_spark.operators.text import text_features
 
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -104,47 +104,11 @@ def run_streaming_text_features(spark: SparkSession, sf_dir: str, chunks: int = 
     return spark.table(name)
 
 
-def _stage_by_id(spark: SparkSession, sf_dir: str, chunks: int) -> tuple[str, object]:
-    """Stage the documents table as id-ordered chunk files so arrival order
-    follows doc_id (first-seen == min-id). Range filters only — no row data
-    crosses the driver. Session-memoized (immutable once stamped) — see
-    ``staging.stage_table_by_key``."""
-    from flink_example_spark.streaming.staging import _STAGE_MEMO
-    from flink_example_spark.tables import load_table
-
-    memo_key = (spark.sparkContext.applicationId, sf_dir, "documents", "doc_id", chunks)
-    if memo_key in _STAGE_MEMO:
-        return _STAGE_MEMO[memo_key]
-    docs = load_table(spark, sf_dir, "documents")
-    tmpdir = tempfile.mkdtemp(prefix="stream_dedup_")
-    cuts = (
-        docs.agg(
-            F.percentile_approx(
-                F.col("doc_id").cast("double"), [i / chunks for i in range(1, chunks)], 10000
-            )
-        ).first()[0]
-        if chunks > 1
-        else []
-    )
-    bounds = [None, *cuts, None]
-    for i in range(chunks):
-        part = docs
-        if bounds[i] is not None:
-            part = part.filter(F.col("doc_id").cast("double") >= bounds[i])
-        if bounds[i + 1] is not None:
-            part = part.filter(F.col("doc_id").cast("double") < bounds[i + 1])
-        part.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmpdir, f"chunk_{i}"))
-    # arrival order = chunk index via explicit mtimes (not write timing)
-    stamp_chunk_mtimes(tmpdir)
-    _STAGE_MEMO[memo_key] = (tmpdir, docs.schema)
-    return tmpdir, docs.schema
-
-
 def run_streaming_exact_dedup(spark: SparkSession, sf_dir: str, chunks: int = 3) -> DataFrame:
     """Bounded replay of the documents table through the streaming dedup
     aggregate; converges exactly to the batch ``exact_dedup`` relation."""
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -175,7 +139,7 @@ def run_streaming_first_seen(spark: SparkSession, sf_dir: str, chunks: int = 3) 
     holder validity (kept id belongs to the content's id set), not identity.
     """
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -204,7 +168,7 @@ def run_streaming_gopher(spark: SparkSession, sf_dir: str, chunks: int = 3) -> D
     from flink_example_spark.operators.curation import gopher_flags
 
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -250,7 +214,7 @@ def run_streaming_lm_filter(
     freqs, total = lm_vocab(docs)
     # freeze the model once — every micro-batch joins the SAME counts
     freqs, total = freqs.localCheckpoint(), total.localCheckpoint()
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -280,7 +244,7 @@ def run_streaming_drift(spark: SparkSession, sf_dir: str, chunks: int = 3) -> Da
     from flink_example_spark.tables import load_table
 
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -348,7 +312,7 @@ def run_streaming_minhash_dedup(
     k = shingle_k
     r = num_hashes // bands
     cs = _portable_perm_coeffs(num_hashes)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -416,7 +380,7 @@ def run_streaming_trending_terms(
     from flink_example_spark.session import shuffle_partitions
 
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -521,7 +485,7 @@ def run_streaming_ppjoin(
     )
     dfr.count()  # materialize once: each micro-batch re-reads the cache
 
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -677,7 +641,7 @@ def run_streaming_burstiness(
     from flink_example_spark.operators.text import normalized, tokens
 
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -751,7 +715,7 @@ def run_streaming_template_mining(
     from flink_example_spark.operators.text import normalized, tokens
 
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -829,7 +793,7 @@ def run_streaming_substring_dedup(
     from flink_example_spark.tables import load_table
 
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

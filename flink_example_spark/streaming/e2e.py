@@ -19,10 +19,12 @@ at-or-before probe time, so
 
 — one interval join + one aggregation per as-of, no materialized history,
 no Python in the loop. The trade-off vs the batch operator is the bounded
-lookback ``horizon`` (exactly the feature-staleness bound of
-streaming/asof_stream.py); the bounded replay sets horizon to cover the
-data span and therefore converges EXACTLY to batch ``training_examples``,
-sharing its oracle.
+lookback ``horizon`` (exactly the feature-staleness bound real feature
+stores impose); the bounded replay sets horizon to cover the data span and
+therefore converges EXACTLY to batch ``training_examples``, sharing its
+oracle. This is the one stream replay of the temporal join: the registry's
+single-as-of row (``streaming_asof_interval``) is this query without the
+label-time ``cnt`` column.
 
 Six chained stateful operators (3 interval joins + 3 aggregations) in
 append mode — the multiple-stateful-operator support added in Spark 3.5,
@@ -48,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_example_spark.session import shuffle_partitions, tune
-from flink_example_spark.streaming.staging import stamp_chunk_mtimes
+from flink_example_spark.streaming.staging import split_chunks, stamp_chunk_mtimes
 
 LOSS, TARGET = "error", "purchase"
 
@@ -57,7 +59,7 @@ def run_streaming_pipeline_e2e(
     spark: SparkSession,
     sf_dir: str,
     horizon_days: int | None = None,
-    chunks: int | None = None,
+    chunks: int = 1,
     label_delay_hours: int = 1,
     waves: int = 3,
 ) -> DataFrame:
@@ -66,14 +68,10 @@ def run_streaming_pipeline_e2e(
     ``horizon_days`` covers the data span (production sets it from the
     feature-staleness SLA instead).
 
-    ``chunks`` defaults to the ``SPARK_GRAFT_E2E_CHUNKS`` env var (else 2).
     Convergence is chunk/wave-count-invariant (each micro-batch costs the
     full state-store overhead, so fewer chunks = fewer batches = faster):
-    chunks=1 is the wall-budget fast path for a tight harness sweep —
-    measured ~32s vs ~45-55s at sf0.01, identical result hash (pinned in
-    tests/test_e2e_stream.py)."""
-    if chunks is None:
-        chunks = int(os.environ.get("SPARK_GRAFT_E2E_CHUNKS", "2"))
+    the default ``chunks=1`` measured ~32s vs ~45-55s for 2 chunks at
+    sf0.01, identical result hash (pinned in tests/test_e2e_stream.py)."""
     tmpdir, src_schema, horizon_days, sentinel_cut = stage_replay(
         spark, sf_dir, horizon_days, chunks, waves
     )
@@ -128,10 +126,11 @@ def stage_replay(
     """Stage the bounded replay: time-split chunk files + sentinel waves.
 
     Returns ``(tmpdir, src_schema, horizon_days, sentinel_cut)``.
-    ``skip_chunks``/``skip_waves`` let a caller stage the replay in PARTS
-    into the same ``tmpdir`` (checkpoint-recovery tests run the query,
-    stage more files, and restart it from the same checkpoint — the file
-    source picks up the new files and the state store carries on).
+    ``skip_chunks`` (0 or ``chunks``) and ``skip_waves`` let a caller stage
+    the replay in PARTS into the same ``tmpdir`` (checkpoint-recovery tests
+    run the query, stage more files, and restart it from the same
+    checkpoint — the file source picks up the new files and the state store
+    carries on).
     """
     from flink_example_spark.plans.events_demo import load_events
 
@@ -147,23 +146,10 @@ def stage_replay(
         horizon_days = (max_t - min_t).days + 2
 
     tmpdir = tmpdir or tempfile.mkdtemp(prefix="e2e_stream_")
-    cuts = (
-        src.agg(
-            F.percentile_approx(
-                F.col("ts").cast("double"), [i / chunks for i in range(1, chunks)], 10000
-            )
-        ).first()[0]
-        if chunks > 1
-        else []
-    )
-    bounds = [None, *cuts, None]
-    for i in range(skip_chunks, chunks):
-        part = src
-        if bounds[i] is not None:
-            part = part.filter(F.col("ts").cast("double") >= bounds[i])
-        if bounds[i + 1] is not None:
-            part = part.filter(F.col("ts").cast("double") < bounds[i + 1])
-        part.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmpdir, f"chunk_{i}"))
+    if skip_chunks == 0:
+        split_chunks(src, "ts", chunks, tmpdir)
+    elif skip_chunks != chunks:
+        raise ValueError("skip_chunks must be 0 (stage every chunk) or chunks (none)")
 
     # Sentinel waves: past max_t + 3·horizon (the full chain's watermark
     # lag), spaced 6h apart (within one horizon of each other, so wave w's

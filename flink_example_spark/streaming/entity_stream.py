@@ -136,34 +136,14 @@ def run_streaming_entity_links(
 
 def _restage(spark: SparkSession, src_dir: str, chunks: int):
     """Split an already-written parquet relation into id-ordered chunk
-    files (reuses the generic stager's pattern on a derived relation)."""
+    files (the generic splitter on a derived relation)."""
     import tempfile
 
-    from flink_example_spark.streaming.staging import stamp_chunk_mtimes
+    from flink_example_spark.streaming.staging import split_chunks, stamp_chunk_mtimes
 
     df = spark.read.parquet(src_dir)
     tmpdir = tempfile.mkdtemp(prefix="stream_entity_chunks_")
-    cuts = (
-        df.agg(
-            F.percentile_approx(
-                F.col("id").cast("double"),
-                [i / chunks for i in range(1, chunks)],
-                10000,
-            )
-        ).first()[0]
-        if chunks > 1
-        else []
-    )
-    bounds = [None, *cuts, None]
-    for i in range(chunks):
-        p = df
-        if bounds[i] is not None:
-            p = p.filter(F.col("id").cast("double") >= bounds[i])
-        if bounds[i + 1] is not None:
-            p = p.filter(F.col("id").cast("double") < bounds[i + 1])
-        p.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmpdir, f"chunk_{i}")
-        )
+    split_chunks(df, "id", chunks, tmpdir)
     stamp_chunk_mtimes(tmpdir)
     return tmpdir, df.schema
 

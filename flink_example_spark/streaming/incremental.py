@@ -165,16 +165,14 @@ def run_incremental_feature_history(
     from datetime import timedelta
 
     from flink_example_spark.plans.events_demo import LOSS_TYPE, TARGET_TYPE, load_events
-    from flink_example_spark.streaming.staging import stamp_chunk_mtimes
+    from flink_example_spark.streaming.staging import split_chunks, stamp_chunk_mtimes
 
     ev = load_events(spark, sf_dir)
     etype = LOSS_TYPE if agg == "sum" else TARGET_TYPE
     src = ev.filter(F.col("event_type") == etype).select(
         "user_id", F.col("ts").cast("timestamp").alias("ts"), F.col("value").cast("double").alias("value")
     )
-    # scalar aggregates only — no row data ever reaches the driver; the
-    # staged chunks are written by time-range filters (any time-disjoint
-    # split works, so approximate cutpoints are fine)
+    # scalar aggregates only — no row data ever reaches the driver
     lo_t, max_t = src.agg(F.min("ts"), F.max("ts")).first()
     sentinel = (
         src.select("user_id")
@@ -188,25 +186,7 @@ def run_incremental_feature_history(
     sentinel_cut = max_t + timedelta(hours=10)
 
     tmpdir = tempfile.mkdtemp(prefix="incr_hist_")
-    cuts = (
-        src.agg(
-            F.percentile_approx(
-                F.col("ts").cast("double"), [i / chunks for i in range(1, chunks)], 10000
-            )
-        ).first()[0]
-        if chunks > 1
-        else []
-    )
-    bounds = [None, *cuts, None]
-    for i in range(chunks):
-        part = src
-        if bounds[i] is not None:
-            part = part.filter(F.col("ts").cast("double") >= bounds[i])
-        if bounds[i + 1] is not None:
-            part = part.filter(F.col("ts").cast("double") < bounds[i + 1])
-        part.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmpdir, f"chunk_{i}")
-        )
+    split_chunks(src, "ts", chunks, tmpdir)
     # Two sentinel waves: the watermark in batch N reflects data through
     # batch N-1, so the FIRST sentinel batch still runs at wm = max real
     # event time (the strict-< gate parks the latest real event); the second

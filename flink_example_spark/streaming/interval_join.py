@@ -9,9 +9,9 @@ semantics emit the null-padded row for match-less purchases only when the
 watermark passes their join window.
 
 This is the Spark-native analog of Flink's interval join — and unlike the
-foreachBatch/stream-static variants (streaming/pipeline.py), state for BOTH
-inputs lives in the state store with watermark-driven cleanup, so the join
-runs unbounded with O(window) state per key.
+foreachBatch/stream-static replays (e.g. cdc_stream's attribution), state
+for BOTH inputs lives in the state store with watermark-driven cleanup, so
+the join runs unbounded with O(window) state per key.
 
 Bounded-replay mechanics (availableNow): the global watermark is the MIN
 across both inputs and advances at batch boundaries, so the staged stream
@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_example_spark.session import shuffle_partitions, tune
-from flink_example_spark.streaming.staging import stamp_chunk_mtimes
+from flink_example_spark.streaming.staging import split_chunks, stamp_chunk_mtimes
 
 PURCHASE, ERROR = "purchase", "error"
 
@@ -63,23 +63,7 @@ def run_streaming_interval_join(
     sentinel_cut = max_t + timedelta(hours=5)
 
     tmpdir = tempfile.mkdtemp(prefix="interval_join_")
-    cuts = (
-        relevant.agg(
-            F.percentile_approx(
-                F.col("ts").cast("double"), [i / chunks for i in range(1, chunks)], 10000
-            )
-        ).first()[0]
-        if chunks > 1
-        else []
-    )
-    bounds = [None, *cuts, None]
-    for i in range(chunks):
-        part = relevant
-        if bounds[i] is not None:
-            part = part.filter(F.col("ts").cast("double") >= bounds[i])
-        if bounds[i + 1] is not None:
-            part = part.filter(F.col("ts").cast("double") < bounds[i + 1])
-        part.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmpdir, f"chunk_{i}"))
+    split_chunks(relevant, "ts", chunks, tmpdir)
     # sentinel waves: one row of EACH type so both filtered streams' own
     # watermark operators see them (filtered-out rows don't advance a wm)
     for wave, hours in ((8, 5), (9, 10)):

@@ -48,7 +48,7 @@ def run_streaming_assoc_rules(
     aggregate; output equals batch ``assoc_rules`` (same oracle)."""
     from flink_example_spark.operators.mining import rules_from_counts
     from flink_example_spark.operators.text import normalized, tokens
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
+    from flink_example_spark.streaming.staging import stage_table_by_key
     from flink_example_spark.tables import load_table
 
     tune(spark)
@@ -73,7 +73,7 @@ def run_streaming_assoc_rules(
     n_docs = docs.select("doc_id").distinct().agg(F.count(F.lit(1)).alias("__n"))
 
     # ---- live pair-count maintenance over the replayed stream ----
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -48,10 +48,10 @@ def run_streaming_linear_fit(
     """Bounded replay of the documents table through the streaming fit;
     converges exactly to the batch per-language chars~tokens calibration."""
     from flink_example_spark.operators.text import normalized, tokens
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -94,7 +94,7 @@ def run_streaming_nb_inference(
 
     from flink_example_spark.operators.ml import nb_score, nb_train
     from flink_example_spark.session import shuffle_partitions, tune
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
+    from flink_example_spark.streaming.staging import stage_table_by_key
     from flink_example_spark.streaming.pipeline import _read_batches
     from flink_example_spark.tables import load_table
 
@@ -104,7 +104,7 @@ def run_streaming_nb_inference(
     model = model.localCheckpoint()
     priors = priors.localCheckpoint()
 
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -301,7 +301,7 @@ def run_streaming_perceptron_inference(
         perceptron_train,
     )
     from flink_example_spark.session import shuffle_partitions, tune
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
+    from flink_example_spark.streaming.staging import stage_table_by_key
     from flink_example_spark.streaming.pipeline import _read_batches
     from flink_example_spark.tables import load_table
 
@@ -313,7 +313,7 @@ def run_streaming_perceptron_inference(
         .localCheckpoint()
     )
 
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -534,10 +534,10 @@ def run_streaming_roc_auc(
     BIT-exactly — same BIGINT sufficient statistics, same one double
     division — so it shares the ``ml_roc_auc`` oracle."""
     from flink_example_spark.operators.ml import roc_auc_from_counts
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -632,10 +632,10 @@ def run_streaming_mutual_info(
     (``ml.mutual_info_from_cells``) are read-time algebra over the sink.
     BIT-equal to the batch ``ml_mutual_info`` (shared oracle)."""
     from flink_example_spark.operators.ml import mutual_info_from_cells
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -676,11 +676,11 @@ def run_streaming_logistic_inference(
     oracle."""
     import __spark_entry__ as entry
     from flink_example_spark.operators.ml import logistic_score
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     w = entry._logistic_trained_weights(spark, sf_dir)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

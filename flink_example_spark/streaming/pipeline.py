@@ -6,12 +6,11 @@ Reference mapping:
   complete output; the state store holds per-key running aggregates (what
   Flink emits as a changelog)
 - T3/T4 changelog→versioned table (AddWatermark.java) → unnecessary: version
-  history is computed directly from event time (SURVEY.md §7.1); the
-  streaming as-of join consumes micro-batches via foreachBatch
-- J1/J2 temporal join → ``run_streaming_training_examples``: each probe
-  micro-batch is as-of joined against the version histories (stream-static)
-  in ``foreachBatch``; exact same operator as batch, so streaming results
-  converge to the batch result.
+  history is computed directly from event time (SURVEY.md §7.1)
+- J1/J2 temporal join → ``streaming/e2e.py``: ONE streaming query from the
+  raw events to training examples, each as-of fused with the history it
+  probes into an interval join + aggregate with state in the JVM; it
+  converges exactly to the batch result.
 
 All sources here are file streams over the harness parquet (maxFilesPerTrigger
 simulates arrival); production would swap in Kafka/Kinesis sources — the
@@ -21,13 +20,11 @@ transformations are source-agnostic DataFrame code.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_example_spark.operators.asof import asof_join
 from flink_example_spark.session import tune
 
 
@@ -176,40 +173,3 @@ def run_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         q.awaitTermination()
     return spark.table(name)
-
-
-def run_streaming_training_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full streaming pipeline: streamed examples as-of joined against the
-    feature/target version histories; converges to the batch flagship query."""
-    from flink_example_spark.plans.events_demo import (
-        examples,
-        feature_history,
-        load_events,
-        target_history,
-    )
-
-    ev_batch = load_events(spark, sf_dir)
-    fh, th = feature_history(ev_batch), target_history(ev_batch)
-
-    # The examples relation needs a per-key ordered window (W1), which batch
-    # computes; stream the *examples* (prediction points) instead — in a live
-    # deployment this is the upstream model-serving event stream.
-    ex_batch = examples(ev_batch)
-    tmpdir = tempfile.mkdtemp(prefix="stream_examples_")
-    ex_batch.repartition(4).write.mode("overwrite").parquet(tmpdir)
-    ex_stream = (
-        spark.readStream.schema(ex_batch.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(tmpdir)
-    )
-    sink = tempfile.mkdtemp(prefix="stream_training_")
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        step1 = asof_join(batch, fh, on="_entity", probe_time="_prediction_time")
-        step2 = asof_join(step1, th, on="_entity", probe_time="_label_time")
-        # batch_id-keyed overwrite: idempotent under at-least-once replay
-        step2.write.mode("overwrite").parquet(f"{sink}/batch={batch_id}")
-
-    q = ex_stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
-    return _read_batches(spark, sink)

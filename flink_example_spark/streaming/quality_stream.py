@@ -279,10 +279,9 @@ def run_streaming_gini_lorenz(
     distributed cumsum) runs at read time. BIT-equal to the batch
     ``gini_lorenz`` (shared oracle)."""
     from flink_example_spark.operators.quality import gini_lorenz_from_counts
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
 
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

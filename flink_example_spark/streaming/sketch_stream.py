@@ -118,10 +118,10 @@ def run_streaming_kmv(
 
     from flink_example_spark.operators.text import fingerprint
     from flink_example_spark.session import shuffle_partitions, tune
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -166,11 +166,11 @@ def run_streaming_kmv_jvm(
     from flink_example_spark.jvm import register_kmv_bottomk
     from flink_example_spark.operators.text import fingerprint
     from flink_example_spark.session import shuffle_partitions, tune
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     fn = register_kmv_bottomk(spark, k)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -229,10 +229,10 @@ def run_streaming_cm_sketch(
     from flink_example_spark.operators.sketch import cm_coords
     from flink_example_spark.operators.text import normalized, tokens
     from flink_example_spark.session import shuffle_partitions, tune
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -276,11 +276,11 @@ def run_streaming_cm_jvm(
     from flink_example_spark.jvm import register_cm
     from flink_example_spark.operators.text import normalized, tokens
     from flink_example_spark.session import shuffle_partitions, tune
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     fn = register_cm(spark, depth, width)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -381,10 +381,10 @@ def run_streaming_kmv_quantiles(
     import uuid
 
     from flink_example_spark.session import shuffle_partitions, tune
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -433,11 +433,11 @@ def run_streaming_quantiles_jvm(
 
     from flink_example_spark.jvm import register_kmv_sample_bottomk
     from flink_example_spark.session import shuffle_partitions, tune
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     fn = register_kmv_sample_bottomk(spark, k)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -499,10 +499,10 @@ def run_streaming_hll_distinct(
     from flink_example_spark.operators.sketch import hll_finalize, hll_registers
     from flink_example_spark.operators.text import normalized, tokens
     from flink_example_spark.session import shuffle_partitions, tune
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -545,11 +545,11 @@ def run_streaming_hll_jvm(
     from flink_example_spark.operators.sketch import portable_hash32
     from flink_example_spark.operators.text import normalized, tokens
     from flink_example_spark.session import shuffle_partitions, tune
-    from flink_example_spark.streaming.dedup_stream import _stage_by_id
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     fn = register_hll(spark, p)
-    tmpdir, schema = _stage_by_id(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -714,11 +714,11 @@ def run_streaming_dyadic_jvm(
     from flink_example_spark.jvm import register_dyadic_hist
     from flink_example_spark.operators.sketch import dyadic_read
     from flink_example_spark.session import shuffle_partitions, tune
-    from flink_example_spark.streaming.cdc_stream import _stage_events_chunks
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     fn = register_dyadic_hist(spark, k)
-    tmpdir, schema = _stage_events_chunks(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -767,12 +767,12 @@ def run_streaming_mg_jvm(
 
     from flink_example_spark.jvm import register_mg_topk
     from flink_example_spark.session import shuffle_partitions, tune
-    from flink_example_spark.streaming.cdc_stream import _stage_events_chunks
+    from flink_example_spark.streaming.staging import stage_table_by_key
     from flink_example_spark.tables import load_table
 
     tune(spark)
     fm = register_mg_topk(spark, k)
-    tmpdir, schema = _stage_events_chunks(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
     band = "CAST(floor(value / 25) AS BIGINT)"
     stream = (
         spark.readStream.schema(schema)
@@ -841,11 +841,11 @@ def run_streaming_dyadic_daily(
     from flink_example_spark.jvm import register_dyadic_hist
     from flink_example_spark.operators.sketch import dyadic_read
     from flink_example_spark.session import shuffle_partitions, tune
-    from flink_example_spark.streaming.cdc_stream import _stage_events_chunks
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     fn = register_dyadic_hist(spark, k)
-    tmpdir, schema = _stage_events_chunks(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
     vq = "CAST(floor(value * 1000000 + 0.5) AS BIGINT)"
     stream = (
         spark.readStream.schema(schema)
@@ -896,11 +896,11 @@ def run_streaming_dyadic_rollup(
     from flink_example_spark.jvm import register_dyadic_hist
     from flink_example_spark.operators.sketch import dyadic_rollup_read
     from flink_example_spark.session import shuffle_partitions, tune
-    from flink_example_spark.streaming.cdc_stream import _stage_events_chunks
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     fn = register_dyadic_hist(spark, k)
-    tmpdir, schema = _stage_events_chunks(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
     vq = "CAST(floor(value * 1000000 + 0.5) AS BIGINT)"
     stream = (
         spark.readStream.schema(schema)
@@ -957,11 +957,11 @@ def run_streaming_kmv_rolling(
     from flink_example_spark.jvm import register_kmv_bottomk
     from flink_example_spark.operators.sketch import kmv_rolling_read
     from flink_example_spark.session import shuffle_partitions, tune
-    from flink_example_spark.streaming.cdc_stream import _stage_events_chunks
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     fn = register_kmv_bottomk(spark, k)
-    tmpdir, schema = _stage_events_chunks(spark, sf_dir, chunks)
+    tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

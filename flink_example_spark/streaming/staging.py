@@ -1,13 +1,16 @@
-"""Deterministic arrival-order stamping for staged bounded-replay chunks.
+"""Bounded-replay staging: one chunk splitter and deterministic arrival order.
 
-The file stream source (``readStream.parquet`` + ``maxFilesPerTrigger=1``)
-orders files by modification time.  The bounded replays stage chunk
-directories sequentially and previously relied on 0.05s inter-write sleeps
-for distinct mtimes — fragile on filesystems with coarse mtime granularity,
-where a sentinel wave sharing an mtime with a data chunk collapses into the
-same micro-batch and defeats the two-wave watermark flush.
+Every bounded replay stages its input as ``chunk_<i>`` parquet directories
+read by a file stream source (``readStream.parquet`` +
+``maxFilesPerTrigger=1``), then appends sentinel waves that lift the
+watermark past the data. ``split_chunks`` is the one splitter: it cuts a
+relation at approximate quantiles of its event-time (or key) column.
 
-``stamp_chunk_mtimes`` makes ordering explicit: every file under
+The file source orders files by modification time. Relying on write timing
+for distinct mtimes is fragile on filesystems with coarse mtime
+granularity, where a sentinel wave sharing an mtime with a data chunk
+collapses into the same micro-batch and defeats the two-wave watermark
+flush. ``stamp_chunk_mtimes`` makes ordering explicit: every file under
 ``chunk_<i>*`` gets mtime ``base + i`` seconds (whole-second spacing clears
 any filesystem's resolution), so batch order equals chunk index regardless
 of write timing.
@@ -42,22 +45,46 @@ def stamp_chunk_mtimes(tmpdir: str) -> None:
             os.utime(os.path.join(d, f), (ts, ts))
 
 
+def split_chunks(df, order_col: str, chunks: int, tmpdir: str) -> None:
+    """Write ``df`` as ``chunk_0`` .. ``chunk_<chunks-1>`` parquet dirs under
+    ``tmpdir``, cut at approximate ``order_col`` quantiles so chunk ``i``
+    holds the i-th range. Range filters only — no row data crosses the
+    driver, and any disjoint split works, so approximate cutpoints are
+    fine. Callers add their sentinel waves, then ``stamp_chunk_mtimes``."""
+    from pyspark.sql import functions as F
+
+    key = F.col(order_col).cast("double")
+    cuts = (
+        df.agg(
+            F.percentile_approx(key, [i / chunks for i in range(1, chunks)], 10000)
+        ).first()[0]
+        if chunks > 1
+        else []
+    )
+    bounds = [None, *cuts, None]
+    for i in range(chunks):
+        part = df
+        if bounds[i] is not None:
+            part = part.filter(key >= bounds[i])
+        if bounds[i + 1] is not None:
+            part = part.filter(key < bounds[i + 1])
+        part.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(tmpdir, f"chunk_{i}")
+        )
+
+
 _STAGE_MEMO: dict = {}
 
 
 def stage_table_by_key(spark, sf_dir: str, table: str, key_col: str, chunks: int):
     """Stage any harness table as key-ordered chunk files for bounded
-    replay (the generalization of ``dedup_stream._stage_by_id``, which
-    predates it and stages the documents table). Range filters only —
-    no row data crosses the driver. Returns (tmpdir, schema).
+    replay. Returns (tmpdir, schema).
 
     Session-memoized: a sweep runs dozens of bounded-replay twins, and
     re-staging the same deterministic chunk files per twin is pure
-    waste — the staged dir is immutable once stamped, so every
-    identically-parameterized caller shares it."""
+    waste — the staged dir is immutable once stamped (callers only read
+    it), so every identically-parameterized caller shares it."""
     import tempfile
-
-    from pyspark.sql import functions as F
 
     from flink_example_spark.tables import load_table
 
@@ -68,27 +95,7 @@ def stage_table_by_key(spark, sf_dir: str, table: str, key_col: str, chunks: int
         return _STAGE_MEMO[memo_key]
     df = load_table(spark, sf_dir, table)
     tmpdir = tempfile.mkdtemp(prefix=f"stream_{table}_")
-    cuts = (
-        df.agg(
-            F.percentile_approx(
-                F.col(key_col).cast("double"),
-                [i / chunks for i in range(1, chunks)],
-                10000,
-            )
-        ).first()[0]
-        if chunks > 1
-        else []
-    )
-    bounds = [None, *cuts, None]
-    for i in range(chunks):
-        part = df
-        if bounds[i] is not None:
-            part = part.filter(F.col(key_col).cast("double") >= bounds[i])
-        if bounds[i + 1] is not None:
-            part = part.filter(F.col(key_col).cast("double") < bounds[i + 1])
-        part.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(tmpdir, f"chunk_{i}")
-        )
+    split_chunks(df, key_col, chunks, tmpdir)
     stamp_chunk_mtimes(tmpdir)
     _STAGE_MEMO[memo_key] = (tmpdir, df.schema)
     return tmpdir, df.schema

@@ -21,14 +21,13 @@ def test_e2e_pipeline_converges_to_batch(spark):
     assert rows_set(streamed) == rows_set(batch)
 
 
-def test_e2e_chunks_fast_path_identical(spark, monkeypatch):
-    """The SPARK_GRAFT_E2E_CHUNKS wall-budget knob must not change results:
-    convergence is chunk-count-invariant (chunks=1 = fewer micro-batches =
-    faster; same rows, same hash)."""
+def test_e2e_chunks_fast_path_identical(spark):
+    """The chunk count must not change results: convergence is
+    chunk-count-invariant (chunks=1 = fewer micro-batches = faster; same
+    rows, same hash)."""
     from flink_example_spark.streaming.e2e import run_streaming_pipeline_e2e
 
-    monkeypatch.setenv("SPARK_GRAFT_E2E_CHUNKS", "1")
-    fast = rows_set(run_streaming_pipeline_e2e(spark, SF))
+    fast = rows_set(run_streaming_pipeline_e2e(spark, SF, chunks=1))
     two = rows_set(run_streaming_pipeline_e2e(spark, SF, chunks=2))
     assert fast == two
 

@@ -86,16 +86,19 @@ def test_short_docs_do_not_crash_dedup(spark):
 
 
 @pytest.mark.parametrize("method", ["local", "distributed"])
-def test_duplicate_clusters_transitive(spark, method):
+def test_duplicate_clusters_transitive(spark, monkeypatch, method):
     """A≈B and B≈C must land A, B, C in one cluster labeled min(id);
-    both the union-find and label-propagation paths must agree."""
+    both the union-find (default size gate) and star-contraction
+    (gate forced to 0) paths must agree."""
+    if method == "distributed":
+        monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX", "0")
     pairs = spark.createDataFrame(
         [(1, 2, 0.9), (2, 3, 0.9), (10, 11, 0.95)],
         "doc_a long, doc_b long, jaccard double",
     )
     out = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup.duplicate_clusters(pairs, method=method).collect()
+        for r in dedup.duplicate_clusters(pairs).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
@@ -264,7 +267,7 @@ def test_duplicate_clusters_long_chain(spark):
 
     os.environ["SPARK_GRAFT_CC_LOCAL_MAX"] = "0"  # force the scale path
     try:
-        out = dedup.duplicate_clusters(pairs, max_iter=10)  # default method
+        out = dedup.duplicate_clusters(pairs, max_iter=10)
         rows = orig_collect(out)
     finally:
         DataFrame.collect = orig_collect

@@ -21,14 +21,35 @@ def test_streaming_features_converges_to_batch(spark):
     assert rows_set(streamed) == rows_set(batch)
 
 
-def test_streaming_training_examples_converges_to_batch(spark):
-    from flink_example_spark.plans.events_demo import pipeline
-    from flink_example_spark.streaming.pipeline import run_streaming_training_examples
+def test_split_chunks_stages_input_in_order(spark, tmp_path):
+    """The one replay splitter: chunk_0..chunk_2 hold the input multiset
+    (duplicates included) in disjoint, increasing ranges of the order
+    column, and after stamp_chunk_mtimes their files arrive in chunk order."""
+    import os
 
-    streamed = run_streaming_training_examples(spark, SF)
-    batch = pipeline(spark, SF)
-    assert streamed.columns == batch.columns
-    assert rows_set(streamed) == rows_set(batch)
+    from pyspark.sql import functions as F
+
+    from flink_example_spark.streaming.staging import split_chunks, stamp_chunk_mtimes
+
+    rows = [(i % 7, i * 60, f"r{i}") for i in range(60)] + [(3, 600, "dup")] * 2
+    df = spark.createDataFrame(rows, "k long, t long, s string").withColumn(
+        "t", F.timestamp_seconds("t")
+    )
+    split_chunks(df, "t", 3, str(tmp_path))
+    dirs = sorted(d for d in os.listdir(tmp_path) if d.startswith("chunk_"))
+    assert dirs == ["chunk_0", "chunk_1", "chunk_2"]
+    parts = [spark.read.parquet(str(tmp_path / d)) for d in dirs]
+    back = parts[0].unionByName(parts[1]).unionByName(parts[2])
+    assert back.exceptAll(df).isEmpty() and df.exceptAll(back).isEmpty()
+    spans = [p.agg(F.min("t"), F.max("t")).first() for p in parts]
+    assert all(lo[1] < hi[0] for lo, hi in zip(spans, spans[1:]))
+
+    stamp_chunk_mtimes(str(tmp_path))
+    mtimes = [
+        [os.path.getmtime(tmp_path / d / f) for f in os.listdir(tmp_path / d)]
+        for d in dirs
+    ]
+    assert all(max(a) < min(b) for a, b in zip(mtimes, mtimes[1:]))
 
 
 def test_streaming_tumbling_window_converges(spark):

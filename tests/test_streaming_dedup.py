@@ -45,11 +45,11 @@ def test_streaming_first_seen_within_watermark(spark):
 
     from flink_example_spark.session import shuffle_partitions
     from flink_example_spark.streaming.dedup_stream import (
-        _stage_by_id,
         streaming_first_seen_within_watermark,
     )
+    from flink_example_spark.streaming.staging import stage_table_by_key
 
-    tmpdir, schema = _stage_by_id(spark, SF, 3)
+    tmpdir, schema = stage_table_by_key(spark, SF, "documents", "doc_id", 3)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -39,7 +39,7 @@ TABLES = (
 # ~100s of Spark-side wall plus their oracle runs). Driver keys are
 # never eligible (asserted in main).
 FAST_SKIP: set[str] = {
-    "streaming_asof_interval",      # 26.5s
+    "streaming_asof_interval",      # 27.7s: the e2e replay minus `cnt`
     "streaming_interval_join",      # 15.2s
     "streaming_cep_funnel_ooo",     # 13.0s
     "streaming_bm25",               # 10.1s
@@ -135,10 +135,6 @@ def main() -> int:
         driver_keys = set(getattr(entrymod, "DRIVER_KEYS", []) or entrymod.queries())
         clash = FAST_SKIP & driver_keys
         assert not clash, f"--fast may not skip driver keys: {sorted(clash)}"
-        # the e2e bounded replay's chunks=1 fast path is hash-identical
-        # (tests/test_e2e_stream.py pins it); one chunk halves the
-        # micro-batch count of the sweep's single slowest row (~57s)
-        os.environ.setdefault("SPARK_GRAFT_E2E_CHUNKS", "1")
     failures = 0
     row_secs: dict[str, float] = {}
     duck_secs: dict[str, float] = {}
