@@ -330,7 +330,9 @@ def user_knn(
             .agg(F.sum(F.col("a.n") * F.col("b.n")).alias("dot"))
         )
     else:
-        n_salt = prof.sparkSession.sparkContext.defaultParallelism * 4
+        # fixed salt count: the build side is copied once per salt, so it
+        # must not grow with the core count
+        n_salt = 16
         pa = prof.select(
             F.col("u").alias("__ua"),
             F.col("d").alias("__da"),

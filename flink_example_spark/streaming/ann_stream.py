@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_example_spark.session import tune
-from flink_example_spark.streaming.staging import stamp_chunk_mtimes
+from flink_example_spark.streaming.staging import drain, read_chunks, stamp_chunk_mtimes
 
 
 def run_streaming_ann_topk(
@@ -50,19 +50,14 @@ def run_streaming_ann_topk(
         ).parquet(os.path.join(tmpdir, f"chunk_{i}"))
     stamp_chunk_mtimes(tmpdir)
 
-    q_stream = (
-        spark.readStream.schema(queries.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    q_stream = read_chunks(spark, tmpdir, queries.schema)
     sink = tempfile.mkdtemp(prefix="stream_ann_out_")
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         out = cosine_topk(corpus, batch, k=k)
         out.write.mode("overwrite").parquet(f"{sink}/batch={batch_id}")
 
-    q = q_stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
+    drain(q_stream.writeStream.foreachBatch(handle))
     return _read_batches(spark, sink)
 
 
@@ -94,19 +89,14 @@ def run_streaming_bm25(
         ).parquet(os.path.join(tmpdir, f"chunk_{i}"))
     stamp_chunk_mtimes(tmpdir)
 
-    q_stream = (
-        spark.readStream.schema(qdf.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    q_stream = read_chunks(spark, tmpdir, qdf.schema)
     sink = tempfile.mkdtemp(prefix="stream_bm25_out_")
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         out = bm25_topk(corpus, batch, topk=topk)
         out.write.mode("overwrite").parquet(f"{sink}/batch={batch_id}")
 
-    q = q_stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
+    drain(q_stream.writeStream.foreachBatch(handle))
     return _read_batches(spark, sink)
 
 
@@ -120,11 +110,10 @@ def run_streaming_centroid_inference(
     ``ann_nearest_centroid`` and shares its oracle."""
     import os
     import tempfile
-    import uuid
 
     from pyspark.sql import functions as F
 
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.pipeline import _read_batches
     from flink_example_spark.streaming.staging import stamp_chunk_mtimes
     from flink_example_spark.tables import load_table
@@ -161,9 +150,7 @@ def run_streaming_centroid_inference(
         )
     stamp_chunk_mtimes(tmpdir)
     stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, emb.schema)
         .filter(F.col("vec_id") % 5 == 0)
     )
     outdir = tempfile.mkdtemp(prefix="stream_nc_out_")
@@ -195,9 +182,7 @@ def run_streaming_centroid_inference(
         )
         best.write.mode("overwrite").parquet(f"{outdir}/batch={batch_id}")
 
-    with shuffle_partitions(spark, 8):
-        q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-        q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(handle))
     best = _read_batches(spark, outdir)
     truth = emb.filter(F.col("vec_id") % 5 == 0).select(
         F.col("vec_id").alias("id"), F.col("label").alias("true_label")

@@ -20,16 +20,19 @@ lakehouse MERGE pipeline runs at 100 TB.
 
 from __future__ import annotations
 
-import os
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_example_spark.operators.versioned import UPDATE_BEFORE, merge_net_changes
-from flink_example_spark.session import shuffle_partitions, tune
-from flink_example_spark.streaming.staging import stage_table_by_key
+from flink_example_spark.session import tune
+from flink_example_spark.streaming.staging import (
+    drain,
+    drain_to_table,
+    read_chunks,
+    stage_table_by_key,
+)
 
 SPLIT_TS = "2024-01-20 00:00:00"
 
@@ -64,11 +67,7 @@ def run_streaming_cdc_apply(
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     split = F.to_timestamp(F.lit(split_ts))
     ch = _changes_cols(stream, split)
     # -U retractions never carry net state (paired with a +U at the same
@@ -78,17 +77,7 @@ def run_streaming_cdc_apply(
         .groupBy("_entity")
         .agg(F.max_by(F.struct("op", "cnt"), F.struct("ts", "seq")).alias("__last"))
     )
-    name = f"stream_cdc_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            latest.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    last = spark.table(name).select(
+    last = drain_to_table(latest, "complete").select(
         "_entity",
         F.translate(F.col("__last.op"), "+-", "").alias("__op"),
         F.col("__last.cnt").alias("__c_cnt"),
@@ -125,11 +114,7 @@ def run_streaming_attribution(
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     conv = stream.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("_entity"),
         F.col("ts").alias("_conv_time"),
@@ -153,8 +138,7 @@ def run_streaming_attribution(
         )
         out.write.mode("overwrite").parquet(f"{outdir}/batch={batch_id}")
 
-    q = conv.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
+    drain(conv.writeStream.foreachBatch(handle))
     joined = _read_batches(spark, outdir)
     return (
         joined.groupBy(F.coalesce(F.col("_channel"), F.lit("direct")).alias("channel"))

@@ -28,7 +28,6 @@ from __future__ import annotations
 import os
 import pickle
 import tempfile
-import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -37,8 +36,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-from flink_example_spark.session import shuffle_partitions, tune
-from flink_example_spark.streaming.staging import stamp_chunk_mtimes
+from flink_example_spark.session import tune
+from flink_example_spark.streaming.staging import (
+    drain_to_table,
+    read_chunks,
+    stamp_chunk_mtimes,
+)
 
 _STATE_SCHEMA = StructType([StructField("pkl", BinaryType(), True)])
 
@@ -220,23 +223,9 @@ def run_streaming_funnel(
             os.path.join(tmpdir, f"chunk_{i}")
         )
     stamp_chunk_mtimes(tmpdir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, ev.schema)
     out = streaming_funnel(stream, steps, within_sec)
-    name = f"stream_cep_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    res = spark.table(name)
+    res = drain_to_table(out, "update")
     k = len(steps)
     ts_cols = [
         F.timestamp_micros(F.col(f"u_{i}")).cast("timestamp_ntz").alias(f"t_{i}")
@@ -286,25 +275,11 @@ def run_streaming_funnel_unordered(
             os.path.join(tmpdir, f"chunk_{n_chunks - 1 + w}")
         )
     stamp_chunk_mtimes(tmpdir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, ev.schema)
     out = streaming_funnel(
         stream, steps, within_sec, watermark_delay=f"{delay_days} days"
     )
-    name = f"stream_cep_ooo_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    res = spark.table(name).filter(F.col("key") >= 0)
+    res = drain_to_table(out, "update").filter(F.col("key") >= 0)
     k = len(steps)
     ts_cols = [
         F.timestamp_micros(F.col(f"u_{i}")).cast("timestamp_ntz").alias(f"t_{i}")
@@ -412,23 +387,9 @@ def run_streaming_bursts(
             os.path.join(tmpdir, f"chunk_{i}")
         )
     stamp_chunk_mtimes(tmpdir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, ev.schema)
     out = streaming_bursts(stream, event_type, n, within_sec)
-    name = f"stream_burst_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    return drain_to_table(out, "update").select(
         "key",
         "event_id",
         F.timestamp_micros(F.col("u")).cast("timestamp_ntz").alias("ts"),

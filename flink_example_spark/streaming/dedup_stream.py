@@ -1,37 +1,31 @@
 """Streaming deduplication — dedup-on-ingest for a document stream.
 
-Two complementary shapes, both pure Structured Streaming built-ins (state
-lives in the JVM state store; no Python in the hot path):
+``streaming_exact_dedup`` maintains the batch ``exact_dedup`` relation as a
+streaming grouped aggregate keyed on the content hash (pure Structured
+Streaming built-ins; state lives in the JVM state store, no Python in the
+hot path): the min-id keeper and copy count update as documents arrive.
+The production sink is a KV upsert (update mode); the bounded replay uses
+complete mode into a memory sink and converges EXACTLY to batch.
 
-- ``streaming_exact_dedup``: the batch ``exact_dedup`` relation maintained
-  as a streaming grouped aggregate keyed on the content hash — min-id keeper
-  and copy count update as documents arrive. Complete/update output; the
-  production sink is a KV upsert (update mode), the bounded-replay harness
-  uses complete mode into a memory sink and converges EXACTLY to batch.
-- ``streaming_first_seen``: emit only the first document seen per content
-  hash (append mode) — the ingest-time filter that keeps duplicate payloads
-  out of downstream storage entirely. ``dropDuplicates`` keyed on the hash;
-  at unbounded scale use ``dropDuplicatesWithinWatermark`` so state ages out
-  (exactness then holds within the watermark horizon — the standard
-  trade-off).
-
-Scale: both are one shuffle on the content hash — the same exchange the
-batch aggregate needs; state per key is O(1) (keeper id + count / presence
-bit).
+Scale: one shuffle on the content hash — the same exchange the batch
+aggregate needs; state per key is O(1) (keeper id + count).
 """
 
 from __future__ import annotations
 
-import os
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_example_spark.session import shuffle_partitions, tune
+from flink_example_spark.session import tune
 from flink_example_spark.operators.util import fresh_local
-from flink_example_spark.streaming.staging import stage_table_by_key
+from flink_example_spark.streaming.staging import (
+    drain,
+    drain_to_table,
+    read_chunks,
+    stage_table_by_key,
+)
 
 
 def streaming_exact_dedup(
@@ -46,36 +40,6 @@ def streaming_exact_dedup(
     )
 
 
-def streaming_first_seen(
-    doc_stream: DataFrame, content_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """First document per distinct content, in arrival order (append mode).
-    Unbounded streams should add a watermark column and use
-    ``dropDuplicatesWithinWatermark`` to bound state."""
-    return doc_stream.withColumn("content_md5", F.md5(F.col(content_col))).dropDuplicates(
-        ["content_md5"]
-    )
-
-
-def streaming_first_seen_within_watermark(
-    doc_stream: DataFrame,
-    delay: str = "1 hour",
-    ts_col: str = "ingest_ts",
-    content_col: str = "text",
-) -> DataFrame:
-    """State-BOUNDED first-seen filter: ``dropDuplicatesWithinWatermark``
-    keyed on the content hash, so per-key state is evicted once the
-    watermark passes ``delay`` — the unbounded-ingest configuration (exact
-    dedup holds within the watermark horizon; a duplicate arriving later
-    than ``delay`` after its first copy can slip through, the standard
-    trade-off). Same single content-hash shuffle as the exact variant."""
-    return (
-        doc_stream.withColumn("content_md5", F.md5(F.col(content_col)))
-        .withWatermark(ts_col, delay)
-        .dropDuplicatesWithinWatermark(["content_md5"])
-    )
-
-
 def run_streaming_text_features(spark: SparkSession, sf_dir: str, chunks: int = 3) -> DataFrame:
     """Streaming text analysis at ingest: the ``text_features`` projection
     (token counts, fingerprint, lang-id, quality) applied to a live document
@@ -86,22 +50,8 @@ def run_streaming_text_features(spark: SparkSession, sf_dir: str, chunks: int = 
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
-    name = f"stream_textfeat_{uuid.uuid4().hex[:8]}"
-    q = (
-        text_features(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    stream = read_chunks(spark, tmpdir, schema)
+    return drain_to_table(text_features(stream), "append")
 
 
 def run_streaming_exact_dedup(spark: SparkSession, sf_dir: str, chunks: int = 3) -> DataFrame:
@@ -109,54 +59,8 @@ def run_streaming_exact_dedup(spark: SparkSession, sf_dir: str, chunks: int = 3)
     aggregate; converges exactly to the batch ``exact_dedup`` relation."""
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            streaming_exact_dedup(stream)
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
-
-
-def run_streaming_first_seen(spark: SparkSession, sf_dir: str, chunks: int = 3) -> DataFrame:
-    """Bounded replay through the first-seen filter: keeps one valid holder
-    per content value.
-
-    NOT oracle-safe against the batch min-id keeper relation: within a
-    micro-batch ``dropDuplicates`` keeps an ARBITRARY row per key, so two
-    same-content docs landing in one chunk file can keep a non-min id even
-    though chunks are staged in id order.  Oracle comparisons must check
-    holder validity (kept id belongs to the content's id set), not identity.
-    """
-    tune(spark)
-    tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
-    name = f"stream_first_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            streaming_first_seen(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    stream = read_chunks(spark, tmpdir, schema)
+    return drain_to_table(streaming_exact_dedup(stream), "complete")
 
 
 def run_streaming_gopher(spark: SparkSession, sf_dir: str, chunks: int = 3) -> DataFrame:
@@ -169,22 +73,8 @@ def run_streaming_gopher(spark: SparkSession, sf_dir: str, chunks: int = 3) -> D
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
-    name = f"stream_gopher_{uuid.uuid4().hex[:8]}"
-    q = (
-        gopher_flags(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    stream = read_chunks(spark, tmpdir, schema)
+    return drain_to_table(gopher_flags(stream), "append")
 
 
 def run_streaming_lm_filter(
@@ -215,11 +105,7 @@ def run_streaming_lm_filter(
     # freeze the model once — every micro-batch joins the SAME counts
     freqs, total = freqs.localCheckpoint(), total.localCheckpoint()
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     sink = tempfile.mkdtemp(prefix="stream_lmfilter_")
 
     def handle(batch: DataFrame, batch_id: int) -> None:
@@ -227,9 +113,7 @@ def run_streaming_lm_filter(
         kept = scored.filter(F.col("avg_surprisal_bits") <= max_bits)
         kept.write.mode("overwrite").parquet(f"{sink}/batch={batch_id}")
 
-    with shuffle_partitions(spark, 8):
-        q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-        q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(handle))
     return _read_batches(spark, sink)
 
 
@@ -246,26 +130,13 @@ def run_streaming_drift(spark: SparkSession, sf_dir: str, chunks: int = 3) -> Da
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         .filter(F.col("doc_id") % 2 == 1)
         .select((F.expr("n_chars DIV 50").cast("long") * 50).alias("bucket_lo"))
     )
     counts = stream.groupBy("bucket_lo").agg(F.count(F.lit(1)).alias("n_cur"))
-    name = f"stream_drift_{uuid.uuid4().hex[:8]}"
-    from flink_example_spark.session import shuffle_partitions
 
-    with shuffle_partitions(spark, 8):
-        q = (
-            counts.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    cur_hist = spark.table(name)
+    cur_hist = drain_to_table(counts, "complete")
     ref_hist = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 2 == 0)
@@ -305,7 +176,6 @@ def run_streaming_minhash_dedup(
         _portable_perm_coeffs,
         minhash_portable_keep,
     )
-    from flink_example_spark.session import shuffle_partitions
     from flink_example_spark.tables import load_table
 
     tune(spark)
@@ -313,11 +183,7 @@ def run_streaming_minhash_dedup(
     r = num_hashes // bands
     cs = _portable_perm_coeffs(num_hashes)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     t = F.lower(F.col("text"))
     src = stream.filter(F.char_length(t) >= k).select(
         "doc_id",
@@ -345,23 +211,14 @@ def run_streaming_minhash_dedup(
         "doc_id", F.expr(f"stack({bands}, {stack}) AS (band, key)")
     )
     minima = band_rows.groupBy("band", "key").agg(F.min("doc_id").alias("keeper"))
-    name = f"stream_minhash_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            minima.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    bucket_minima = drain_to_table(minima, "complete")
     docs = load_table(spark, sf_dir, "documents")
     return minhash_portable_keep(
         docs,
         num_hashes=num_hashes,
         bands=bands,
         shingle_k=shingle_k,
-        bucket_minima=spark.table(name),
+        bucket_minima=bucket_minima,
     ).select("doc_id", "lang", "source")
 
 
@@ -377,15 +234,9 @@ def run_streaming_trending_terms(
     → shares its oracle."""
     from pyspark.sql import Window
 
-    from flink_example_spark.session import shuffle_partitions
-
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     tf = (
         stream.select(
             "lang", F.explode(F.split(F.trim("text"), r"\s+")).alias("term")
@@ -393,19 +244,9 @@ def run_streaming_trending_terms(
         .groupBy("lang", "term")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"stream_trending_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            tf.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     w = Window.partitionBy("lang").orderBy(F.col("n").desc(), F.col("term"))
     return (
-        spark.table(name)
+        drain_to_table(tf, "complete")
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("lang", "term", "n", "rank")
@@ -464,7 +305,6 @@ def run_streaming_ppjoin(
     )
 
     from flink_example_spark.operators.text import normalized, tokens
-    from flink_example_spark.session import shuffle_partitions
     from flink_example_spark.tables import load_table
 
     tune(spark)
@@ -486,11 +326,7 @@ def run_streaming_ppjoin(
     dfr.count()  # materialize once: each micro-batch re-reads the cache
 
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     # exploded live token relation; stream-static broadcast join attaches
     # the frozen order JVM-side (left join: a token unseen at freeze time
     # sorts first with df=0, same as the batch twin's convention)
@@ -614,18 +450,9 @@ def run_streaming_ppjoin(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stream_ppjoin_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            pairs.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    emitted = drain_to_table(pairs, "update")
     dfr.unpersist()
-    return spark.table(name)
+    return emitted
 
 
 def run_streaming_burstiness(
@@ -642,11 +469,7 @@ def run_streaming_burstiness(
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     tf = (
         stream.select(
             F.col("doc_id").alias("d"),
@@ -656,20 +479,10 @@ def run_streaming_burstiness(
         .groupBy("t", "d")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    name = f"stream_burst_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            tf.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # update-mode sink holds every emitted version; final tf per (t, d)
     # is the max (counts only grow)
     latest = (
-        spark.table(name)
+        drain_to_table(tf, "update")
         .groupBy("t", "d")
         .agg(F.max("tf").alias("tf"))
         .localCheckpoint(eager=True)
@@ -716,11 +529,7 @@ def run_streaming_template_mining(
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     toks = F.filter(tokens(normalized(F.col("text"))), lambda t: t != "")
     keyed = (
         stream.select(
@@ -739,19 +548,9 @@ def run_streaming_template_mining(
         F.min("d").cast("long").alias("mn"),
         F.sum("n_chars").cast("long").alias("chars"),
     )
-    name = f"stream_tmpl_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            state.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # update-mode sink keeps every emitted version; c/chars only grow and
     # mn only shrinks — take the per-key envelope, then roll up per frame
-    latest = spark.table(name).groupBy("prefix_key", "suffix_key").agg(
+    latest = drain_to_table(state, "update").groupBy("prefix_key", "suffix_key").agg(
         F.max("c").alias("c"), F.min("mn").alias("mn"), F.max("chars").alias("chars")
     )
     return (
@@ -794,27 +593,10 @@ def run_streaming_substring_dedup(
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     occ = _substring_occurrences(stream, k, "doc_id", "text")
     state = occ.groupBy("__h", "doc_id").agg(F.min("__ok").alias("__mo"))
-    name = f"stream_substr_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            state.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # update-mode sink keeps every emitted version; __mo only decreases,
-    # so a pair's final state is its min — then the per-gram read:
-    # nd = #distinct docs, canon = min over the pair minima
-    latest = spark.table(name)
+    latest = drain_to_table(state, "update")
     fresh = fresh_local(latest)
     pairs = fresh.groupBy("__h", "doc_id").agg(F.min("__mo").alias("__mo"))
     rep = (

@@ -43,14 +43,18 @@ from __future__ import annotations
 
 import os
 import tempfile
-import uuid
 from datetime import timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_example_spark.session import shuffle_partitions, tune
-from flink_example_spark.streaming.staging import split_chunks, stamp_chunk_mtimes
+from flink_example_spark.session import tune
+from flink_example_spark.streaming.staging import (
+    drain_to_table,
+    read_chunks,
+    split_chunks,
+    stamp_chunk_mtimes,
+)
 
 LOSS, TARGET = "error", "purchase"
 
@@ -75,29 +79,17 @@ def run_streaming_pipeline_e2e(
     tmpdir, src_schema, horizon_days, sentinel_cut = stage_replay(
         spark, sf_dir, horizon_days, chunks, waves
     )
-    stream = (
-        spark.readStream.schema(src_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, src_schema)
     final = build_pipeline_stream(stream, horizon_days, label_delay_hours)
 
-    name = f"pipeline_e2e_{uuid.uuid4().hex[:8]}"
     # 4 partitions: the 6-operator stateful chain pays per-partition
     # state-store overhead EVERY micro-batch; measured 49.5/33.7/31.3s at
     # 8/4/2 partitions (chunks=1, sf0.01) with IDENTICAL result hashes —
     # 4 keeps parallelism headroom for larger SFs while shedding most of
     # the overhead
-    with shuffle_partitions(spark, 4):
-        q = (
-            final.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return strip_sentinels(spark.table(name), sentinel_cut)
+    return strip_sentinels(
+        drain_to_table(final, "append", partitions=4), sentinel_cut
+    )
 
 
 def strip_sentinels(result: DataFrame, sentinel_cut) -> DataFrame:

@@ -20,12 +20,12 @@ relation and shares its oracle.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_example_spark.session import shuffle_partitions, tune
+from flink_example_spark.session import tune
+from flink_example_spark.streaming.staging import drain_to_table, read_chunks
 
 
 def run_streaming_entity_links(
@@ -60,9 +60,7 @@ def run_streaming_entity_links(
     )
     staged_dir, schema = _restage(spark, os.path.join(tmpdir, "src"), chunks)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(staged_dir, "chunk_*"))
+        read_chunks(spark, staged_dir, schema)
         .select("id", _normalized("name").alias("nm"))
         .filter(F.col("nm") != "")
     )
@@ -83,34 +81,13 @@ def run_streaming_entity_links(
         .agg(F.min("canonical_id").alias("canonical_id"))
         .select("id", "nm", "canonical_id", F.lit("fuzzy").alias("method"))
     )
-    name1 = f"stream_ent_asgn_{uuid.uuid4().hex[:8]}"
-    name2 = f"stream_ent_new_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        # fuzzy uses a per-batch aggregate over (id, nm) — update mode keeps
-        # it append-equivalent because each key appears in ONE batch
-        q1 = (
-            exact.unionByName(fuzzy)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name1)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q1.awaitTermination()
-        # Q2: min-id-per-name monoid over ALL arriving names (anchors)
-        q2 = (
-            stream.groupBy("nm")
-            .agg(F.min("id").alias("anchor_id"))
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name2)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q2.awaitTermination()
-
-    assigned = spark.table(name1)
-    anchors = spark.table(name2)
+    # fuzzy uses a per-batch aggregate over (id, nm) — update mode keeps
+    # it append-equivalent because each key appears in ONE batch
+    assigned = drain_to_table(exact.unionByName(fuzzy), "update")
+    # Q2: min-id-per-name monoid over ALL arriving names (anchors)
+    anchors = drain_to_table(
+        stream.groupBy("nm").agg(F.min("id").alias("anchor_id")), "complete"
+    )
     raw = new_batch.select("id", _normalized("name").alias("nm")).filter(
         F.col("nm") != ""
     )
@@ -184,42 +161,25 @@ def run_streaming_golden_records(
     src.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmpdir, "src"))
     staged_dir, schema = _restage(spark, os.path.join(tmpdir, "src"), chunks)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(staged_dir, "chunk_*"))
+        read_chunks(spark, staged_dir, schema)
         .select("id", _normalized("name").alias("nm"), "cat", "num")
         .join(F.broadcast(cmap), "nm")
     )
-    n1 = f"stream_gold_cat_{uuid.uuid4().hex[:8]}"
-    n2 = f"stream_gold_env_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q1 = (
-            stream.groupBy("canonical_id", "cat")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(n1)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q1.awaitTermination()
-        q2 = (
-            stream.groupBy("canonical_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_records"),
-                F.min("num").alias("num_min"),
-                F.max("num").alias("num_max"),
-            )
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(n2)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q2.awaitTermination()
+    cat_counts = drain_to_table(
+        stream.groupBy("canonical_id", "cat").agg(F.count(F.lit(1)).alias("c")),
+        "complete",
+    )
+    envelope = drain_to_table(
+        stream.groupBy("canonical_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_records"),
+            F.min("num").alias("num_min"),
+            F.max("num").alias("num_max"),
+        ),
+        "complete",
+    )
     modal = (
-        spark.table(n1)
-        .select(
+        cat_counts.select(
             "canonical_id",
             F.concat(
                 F.lpad((F.lit(_INV) - F.col("c")).cast("string"), 12, "0"),
@@ -237,8 +197,7 @@ def run_streaming_golden_records(
         )
     )
     return (
-        spark.table(n2)
-        .join(modal, "canonical_id")
+        envelope.join(modal, "canonical_id")
         .select(
             F.col("canonical_id").cast("long").alias("canonical_id"),
             "n_records",

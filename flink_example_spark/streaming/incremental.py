@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from flink_example_spark.streaming.staging import drain_to_table, read_chunks
+
 _STATE_SCHEMA = StructType([StructField("pkl", BinaryType(), True)])
 _Q = Decimal("0.01")
 
@@ -200,26 +202,10 @@ def run_incremental_feature_history(
     # arrival order = chunk index via explicit mtimes (not write timing)
     stamp_chunk_mtimes(tmpdir)
 
-    stream = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, src.schema)
     hist = incremental_version_history(
         stream, key="user_id", time_col="ts", value_col="value", agg=agg
     )
-    import uuid
 
-    from flink_example_spark.session import shuffle_partitions
-
-    name = f"incr_hist_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            hist.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).filter(F.col("_change_time") < F.lit(sentinel_cut))
+    rows = drain_to_table(hist, "append")
+    return rows.filter(F.col("_change_time") < F.lit(sentinel_cut))

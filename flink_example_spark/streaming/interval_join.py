@@ -25,14 +25,18 @@ from __future__ import annotations
 
 import os
 import tempfile
-import uuid
 from datetime import timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_example_spark.session import shuffle_partitions, tune
-from flink_example_spark.streaming.staging import split_chunks, stamp_chunk_mtimes
+from flink_example_spark.session import tune
+from flink_example_spark.streaming.staging import (
+    drain_to_table,
+    read_chunks,
+    split_chunks,
+    stamp_chunk_mtimes,
+)
 
 PURCHASE, ERROR = "purchase", "error"
 
@@ -83,9 +87,7 @@ def run_streaming_interval_join(
 
     def side(prefix: str, etype: str) -> DataFrame:
         return (
-            spark.readStream.schema(relevant.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(tmpdir, "chunk_*"))
+            read_chunks(spark, tmpdir, relevant.schema)
             .filter(F.col("event_type") == etype)
             .select(
                 F.col("event_id").alias(f"{prefix}_event_id"),
@@ -103,15 +105,5 @@ def run_streaming_interval_join(
         ),
         "leftOuter",
     )
-    name = f"interval_join_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    rows = spark.table(name).filter(F.col("p_ts") < F.lit(sentinel_cut))
+    rows = drain_to_table(joined, "append").filter(F.col("p_ts") < F.lit(sentinel_cut))
     return interval_join_counts(rows)

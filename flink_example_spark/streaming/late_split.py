@@ -21,13 +21,17 @@ from __future__ import annotations
 
 import os
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_example_spark.session import tune
-from flink_example_spark.streaming.staging import stamp_chunk_mtimes
+from flink_example_spark.streaming.staging import (
+    drain,
+    drain_to_table,
+    read_chunks,
+    stamp_chunk_mtimes,
+)
 
 
 def _stage_mod_chunks(spark: SparkSession, sf_dir: str, chunks: int) -> tuple[str, object]:
@@ -54,11 +58,7 @@ def run_streaming_late_split(
     the mod-chunk staging rule exactly."""
     tune(spark)
     tmpdir, schema = _stage_mod_chunks(spark, sf_dir, chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     outdir = tempfile.mkdtemp(prefix="stream_late_out_")
     state = {"wm_us": None}  # foreachBatch runs sequentially on the driver
 
@@ -79,8 +79,7 @@ def run_streaming_late_split(
         if mx is not None:
             state["wm_us"] = mx if wm is None else max(wm, mx)
 
-    q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(handle))
     from flink_example_spark.streaming.pipeline import _read_batches
 
     return _read_batches(spark, outdir)
@@ -131,11 +130,7 @@ def run_streaming_rule_filter(spark: SparkSession, sf_dir: str, chunks: int = 3)
         .localCheckpoint()  # the frozen rules index, re-joined per batch
     )
     tmpdir, schema = _stage_mod_chunks(spark, sf_dir, chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     outdir = tempfile.mkdtemp(prefix="stream_rules_")
 
     def handle(batch: DataFrame, batch_id: int) -> None:
@@ -143,8 +138,7 @@ def run_streaming_rule_filter(spark: SparkSession, sf_dir: str, chunks: int = 3)
         out = temporal_rule_filter(probes, rules, on="event_type", event_time="ts")
         out.write.mode("overwrite").parquet(f"{outdir}/batch={batch_id}")
 
-    q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(handle))
     return _read_batches(spark, outdir)
 
 
@@ -159,11 +153,7 @@ def run_streaming_quality(spark: SparkSession, sf_dir: str, chunks: int = 3) -> 
 
     tune(spark)
     tmpdir, schema = _stage_mod_chunks(spark, sf_dir, chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     ev = normalize_ts(stream, "ts")  # shared ingest guard (both layouts)
     rules = [
         ("user_id_not_null", F.col("user_id").isNotNull()),
@@ -182,22 +172,8 @@ def run_streaming_quality(spark: SparkSession, sf_dir: str, chunks: int = 3) -> 
         F.sum(F.when(~pred, 1).otherwise(0)).alias(f"__v{i}")
         for i, (_, pred) in enumerate(rules)
     ]
-    import uuid
 
-    from flink_example_spark.session import shuffle_partitions
-
-    name = f"stream_quality_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            ev.agg(*aggs)
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    s = spark.table(name)
+    s = drain_to_table(ev.agg(*aggs), "complete")
     arms = [
         F.struct(
             F.lit(rname).alias("check"),

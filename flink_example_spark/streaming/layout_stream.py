@@ -9,12 +9,11 @@ boxes are the tighter claim.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_example_spark.session import shuffle_partitions, tune
+from flink_example_spark.session import tune
+from flink_example_spark.streaming.staging import drain_to_table, read_chunks
 
 
 def run_streaming_hilbert_stats(
@@ -35,11 +34,7 @@ def run_streaming_hilbert_stats(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "events", "event_id", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     xe = "user_id % 256"
     ye = "(EXTRACT(hour FROM ts) * 60 + EXTRACT(minute FROM ts)) % 256"
     h = hilbert_index_df(normalize_ts(stream, "ts"), xe, ye, bits=bits)
@@ -58,19 +53,9 @@ def run_streaming_hilbert_stats(
             F.max("__mod").alias("mod_max"),
         )
     )
-    name = f"stream_hlb_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            boxes.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # update mode re-emits a bucket's row per batch with cumulative
     # monoids: n and max grow, min shrinks — pick each accordingly
-    return spark.table(name).groupBy("bucket").agg(
+    return drain_to_table(boxes, "update").groupBy("bucket").agg(
         F.max("n").alias("n"),
         F.min("uid_min").alias("uid_min"),
         F.max("uid_max").alias("uid_max"),

@@ -27,13 +27,11 @@ micro-batch.
 
 from __future__ import annotations
 
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_example_spark.session import shuffle_partitions, tune
+from flink_example_spark.session import tune
+from flink_example_spark.streaming.staging import drain_to_table, read_chunks
 
 
 def run_streaming_assoc_rules(
@@ -74,11 +72,7 @@ def run_streaming_assoc_rules(
 
     # ---- live pair-count maintenance over the replayed stream ----
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     # frequency gate = stream-static BROADCAST equi-join on the exploded
     # token relation — the dictionary never rides the driver or the plan
     # (a literal array scales with corpus vocabulary; a hash join does
@@ -117,18 +111,12 @@ def run_streaming_assoc_rules(
         .groupBy("__ta", "__tb")
         .agg(F.count(F.lit(1)).alias("__cab"))
     )
-    name = f"stream_assoc_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            pair_counts.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     # ---- read-time rule selection (shared with batch) ----
     return rules_from_counts(
-        spark.table(name), items, n_docs, min_pair_count, min_conf_pct
+        drain_to_table(pair_counts, "complete"),
+        items,
+        n_docs,
+        min_pair_count,
+        min_conf_pct,
     )

@@ -14,14 +14,13 @@ snapshot of the output table is a valid fit of everything seen so far.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_example_spark.operators.ml import fit_from_stats
-from flink_example_spark.session import shuffle_partitions, tune
+from flink_example_spark.session import tune
 from flink_example_spark.operators.util import fresh_local
+from flink_example_spark.streaming.staging import drain, drain_to_table, read_chunks
 
 
 def streaming_linear_fit(
@@ -52,28 +51,14 @@ def run_streaming_linear_fit(
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     src = stream.select(
         "lang",
         "n_chars",
         F.size(F.array_remove(tokens(normalized(F.col("text"))), "")).alias("n_tok"),
     )
     out = streaming_linear_fit(src, "lang", "n_tok", "n_chars")
-    name = f"stream_fit_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain_to_table(out, "complete")
 
 
 def run_streaming_nb_inference(
@@ -87,13 +72,12 @@ def run_streaming_nb_inference(
     ``ml_nb_language`` and shares its oracle. foreachBatch writes are
     batch-id-keyed (overwrite per batch dir) for at-least-once safety.
     """
-    import os
     import tempfile
 
     from pyspark.sql import functions as F
 
     from flink_example_spark.operators.ml import nb_score, nb_train
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
     from flink_example_spark.streaming.pipeline import _read_batches
     from flink_example_spark.tables import load_table
@@ -106,9 +90,7 @@ def run_streaming_nb_inference(
 
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         .filter(F.col("doc_id") % 5 == 0)
     )
     outdir = tempfile.mkdtemp(prefix="stream_nb_")
@@ -118,9 +100,7 @@ def run_streaming_nb_inference(
             f"{outdir}/batch={batch_id}"
         )
 
-    with shuffle_partitions(spark, 8):
-        q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-        q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(handle))
     best = _read_batches(spark, outdir)
     return best.join(
         docs.filter(F.col("doc_id") % 5 == 0).select(
@@ -156,7 +136,7 @@ def run_streaming_bootstrap_ci(
 
     from flink_example_spark.operators.ml import _POISSON_THRESHOLDS
     from flink_example_spark.operators.sketch import portable_hash32
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stamp_chunk_mtimes
     from flink_example_spark.tables import load_table
 
@@ -172,11 +152,7 @@ def run_streaming_bootstrap_ci(
             os.path.join(tmpdir, f"chunk_{i}")
         )
     stamp_chunk_mtimes(tmpdir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, ev.schema)
     rep = (
         stream.select(
             F.col("event_type").alias("grp"),
@@ -205,17 +181,7 @@ def run_streaming_bootstrap_ci(
             F.count(F.lit(1)).alias("nrep"),
         )
     )
-    name = f"stream_boot_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    t = spark.table(name)
+    t = drain_to_table(agg, "complete")
     # ONE aggregation over the converged (grp x B) table: replicate means
     # feed the percentile CI (null when a replicate drew no rows —
     # percentile skips nulls, matching the batch filter), and replicate
@@ -244,11 +210,9 @@ def run_streaming_stump_inference(
     serving-side monitor is ONE complete-mode aggregate of per-side
     outcome counts — the live confusion the model monitor watches for
     drift. Converges exactly to the batch crosstab at the same cut."""
-    import uuid
-
     from flink_example_spark.operators.ml import decision_stump
     from flink_example_spark.plans.events_demo import load_events
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.pipeline import stream_events
 
     tune(spark)
@@ -269,17 +233,7 @@ def run_streaming_stump_inference(
     agg = sided.groupBy("side").agg(
         F.count(F.lit(1)).alias("n"), F.sum("is_err").alias("n_pos")
     )
-    name = f"stream_stump_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select("side", "n", "n_pos")
+    return drain_to_table(agg, "complete").select("side", "n", "n_pos")
 
 
 def run_streaming_perceptron_inference(
@@ -291,7 +245,6 @@ def run_streaming_perceptron_inference(
     join (features are per-doc only, so any chunking yields identical
     predictions). The post-replay confusion aggregation converges exactly
     to batch ``ml_perceptron_confusion`` and shares its oracle."""
-    import os
     import tempfile
 
     from pyspark.sql import functions as F
@@ -300,7 +253,7 @@ def run_streaming_perceptron_inference(
         _perceptron_feats,
         perceptron_train,
     )
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
     from flink_example_spark.streaming.pipeline import _read_batches
     from flink_example_spark.tables import load_table
@@ -315,9 +268,7 @@ def run_streaming_perceptron_inference(
 
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         .filter(F.col("doc_id") % 5 == 0)
     )
     outdir = tempfile.mkdtemp(prefix="stream_perc_")
@@ -335,9 +286,7 @@ def run_streaming_perceptron_inference(
         )
         scored.write.mode("overwrite").parquet(f"{outdir}/batch={batch_id}")
 
-    with shuffle_partitions(spark, 8):
-        q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-        q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(handle))
     return (
         _read_batches(spark, outdir)
         .groupBy("pred", "truth")
@@ -397,11 +346,7 @@ def run_streaming_sprt(
             os.path.join(tmpdir, f"chunk_{i}")
         )
     stamp_chunk_mtimes(tmpdir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, ev.schema)
     src = stream.select(
         F.when(F.col("user_id") % 2 == 0, "A").otherwise("B").alias("_k"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("_us"),
@@ -455,24 +400,15 @@ def run_streaming_sprt(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stream_sprt_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return spark.sql(
-        f"""SELECT k AS variant, n AS n_total, kk AS k_total,
+        """SELECT k AS variant, n AS n_total, kk AS k_total,
                    llr AS llr_final_micro, decision_n,
                    COALESCE(decision, 'continue') AS decision
             FROM (
               SELECT *, ROW_NUMBER() OVER (PARTITION BY k ORDER BY version DESC) rn
-              FROM {name}
-            ) WHERE rn = 1"""
+              FROM {t}
+            ) WHERE rn = 1""",
+        t=drain_to_table(out, "update"),
     )
 
 
@@ -504,18 +440,8 @@ def run_streaming_att_strata(
         ).alias("outcome"),
         F.count(F.lit(1)).alias("total"),
     )
-    name = f"stream_att_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            profile.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     units = (
-        spark.table(name)
+        drain_to_table(profile, "complete")
         .localCheckpoint(eager=True)
         .withColumn("stratum", F.expr("total div 4"))
     )
@@ -538,11 +464,7 @@ def run_streaming_roc_auc(
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     counts = (
         stream.filter(F.col("n_chars").isNotNull())
         .select(
@@ -552,20 +474,10 @@ def run_streaming_roc_auc(
         .groupBy("s", "y")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    name = f"stream_auc_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # update-mode sink holds every emitted version; counts only grow, so
     # the final value per (s, y) is the max
     latest = (
-        spark.table(name)
+        drain_to_table(counts, "update")
         .groupBy("s", "y")
         .agg(F.max("c").alias("c"))
     )
@@ -587,11 +499,7 @@ def run_streaming_psi(
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     counts = (
         stream.filter(F.col("value").isNotNull())
         .select(
@@ -604,19 +512,9 @@ def run_streaming_psi(
             F.sum("cur").cast("long").alias("n_cur"),
         )
     )
-    name = f"stream_psi_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # update-mode sink keeps every emitted version; counts only grow, so
     # a bucket's final state is its max per component
-    latest = spark.table(name).groupBy("bucket").agg(
+    latest = drain_to_table(counts, "update").groupBy("bucket").agg(
         F.max("n_ref").alias("n_ref"), F.max("n_cur").alias("n_cur")
     )
     return psi_from_counts(latest)
@@ -636,27 +534,14 @@ def run_streaming_mutual_info(
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     cells = (
         stream.filter(F.col("lang").isNotNull() & F.col("source").isNotNull())
         .groupBy(F.col("lang").alias("a"), F.col("source").alias("b"))
         .agg(F.count(F.lit(1)).alias("o"))
     )
-    name = f"stream_mi_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            cells.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name).groupBy("a", "b").agg(F.max("o").alias("o"))
+    versions = drain_to_table(cells, "update")
+    latest = versions.groupBy("a", "b").agg(F.max("o").alias("o"))
     # the algebra joins `cells` against its own aggregates; memory-sink
     # branches share expr-ids (DESIGN.md "Conflicting attributes") — mint
     # fresh attributes with an RDD round-trip (cell-cardinality-sized)
@@ -681,25 +566,11 @@ def run_streaming_logistic_inference(
     tune(spark)
     w = entry._logistic_trained_weights(spark, sf_dir)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     scored = logistic_score(
         entry._logistic_feats(stream), w, ["en_hits", "len_b"], "doc_id"
     )
-    name = f"stream_logit_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            scored.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain_to_table(scored, "append")
 
 
 def run_streaming_switchback(
@@ -726,23 +597,9 @@ def run_streaming_switchback(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "events", "event_id", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     buckets = switchback_buckets(normalize_ts(stream, "ts"))
-    name = f"stream_swb_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            buckets.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name)
+    latest = drain_to_table(buckets, "complete")
     fresh = fresh_local(latest)
     return switchback_from_buckets(fresh)
 
@@ -766,11 +623,7 @@ def run_streaming_did(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "events", "event_id", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     from flink_example_spark.tables import normalize_ts
 
     cells = (
@@ -788,19 +641,9 @@ def run_streaming_did(
             F.sum("y").cast("long").alias("s"),
         )
     )
-    name = f"stream_did_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            cells.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # cumulative counts re-emitted per batch: col-wise max per cell is
     # the final state (both n and s are non-decreasing)
-    latest = spark.table(name).groupBy("g", "p").agg(
+    latest = drain_to_table(cells, "update").groupBy("g", "p").agg(
         F.max("n").alias("n"), F.max("s").alias("s")
     )
     fresh = fresh_local(latest)
@@ -823,11 +666,7 @@ def run_streaming_ks(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "events", "event_id", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     split = "unix_micros(CAST('2024-01-16 00:00:00' AS TIMESTAMP))"
     counts = (
         # NULL exclusion identical to batch ks_drift (ADVICE-r13): a
@@ -848,19 +687,9 @@ def run_streaming_ks(
             .alias("c1"),
         )
     )
-    name = f"stream_ks_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # update-mode sink keeps every emitted version; counts only grow,
     # so a value's final state is its max per component
-    latest = spark.table(name).groupBy("vq").agg(
+    latest = drain_to_table(counts, "update").groupBy("vq").agg(
         F.max("c0").alias("c0"), F.max("c1").alias("c1")
     )
     # ks_read now branches its input (dist_cumsum + the totals join) —

@@ -12,9 +12,12 @@ Reference mapping:
   probes into an interval join + aggregate with state in the JVM; it
   converges exactly to the batch result.
 
-All sources here are file streams over the harness parquet (maxFilesPerTrigger
-simulates arrival); production would swap in Kafka/Kinesis sources — the
-transformations are source-agnostic DataFrame code.
+``stream_events`` is a file stream over the harness events parquet
+(maxFilesPerTrigger simulates arrival); production would swap in a
+Kafka/Kinesis source — the transformations are source-agnostic DataFrame
+code. Every query here runs as a bounded replay through
+``staging.drain_to_table`` (availableNow into a memory sink, 8 shuffle
+partitions).
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_example_spark.session import tune
+from flink_example_spark.streaming.staging import drain_to_table
 
 
 def _read_batches(spark: SparkSession, outdir: str) -> DataFrame:
@@ -89,16 +93,7 @@ def run_streaming_features(
         .groupBy(F.col("user_id").alias("_entity"))
         .agg(F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("loss_value"))
     )
-    name = f"stream_features_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain_to_table(agg, "complete")
 
 
 def run_streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,16 +108,7 @@ def run_streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("day"), "event_type", "n")
     )
-    name = f"stream_tumbling_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain_to_table(agg, "complete")
 
 
 def run_streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -136,16 +122,7 @@ def run_streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("win_start"), "event_type", "n")
     )
-    name = f"stream_sliding_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain_to_table(agg, "complete")
 
 
 def run_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,7 +131,6 @@ def run_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame
     arrive (the hard part Flink's session windows also solve); complete
     output for bounded replay, converging to the batch session_window_counts
     (shared oracle)."""
-    from flink_example_spark.session import shuffle_partitions
 
     ev = stream_events(spark, sf_dir)
     agg = (
@@ -162,14 +138,4 @@ def run_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select("user_id", F.col("w.start").alias("session_start"), "n_events")
     )
-    name = f"stream_session_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain_to_table(agg, "complete")

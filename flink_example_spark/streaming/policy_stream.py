@@ -14,13 +14,12 @@ the batch oracle).
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_example_spark.session import shuffle_partitions, tune
+from flink_example_spark.session import tune
 from flink_example_spark.operators.util import fresh_local
+from flink_example_spark.streaming.staging import drain_to_table, read_chunks
 
 
 def run_streaming_ips(
@@ -40,29 +39,15 @@ def run_streaming_ips(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "events", "event_id", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     # synth_policy_logs is a stateless projection — streams as-is; the
     # five-sum monoid (the SAME ips_sums the batch row aggregates) is
     # the ONE stateful (global) aggregation
     sums = ips_sums(synth_policy_logs(stream))
-    name = f"stream_ips_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            sums.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # update mode re-emits THE row per batch with cumulative sums; every
     # sum is a non-negative-term monoid, so the col-wise max IS the
     # final state
-    latest = spark.table(name).agg(
+    latest = drain_to_table(sums, "update").agg(
         F.max("n").alias("n"),
         F.max("n_match").alias("n_match"),
         F.max("s_w").alias("s_w"),

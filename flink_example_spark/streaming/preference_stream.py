@@ -15,13 +15,12 @@ matches (shared oracle).
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_example_spark.session import shuffle_partitions, tune
+from flink_example_spark.session import tune
 from flink_example_spark.operators.util import fresh_local
+from flink_example_spark.streaming.staging import drain_to_table, read_chunks
 
 
 def run_streaming_bradley_terry(
@@ -40,11 +39,7 @@ def run_streaming_bradley_terry(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "events", "event_id", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     # synth_matches is a stateless projection — streams as-is; the
     # win-count monoid is the ONE stateful aggregation
     wc = (
@@ -60,19 +55,9 @@ def run_streaming_bradley_terry(
             F.sum(F.lit(1) - F.col("w_is_i")).alias("wj"),
         )
     )
-    name = f"stream_bt_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            wc.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # update mode re-emits a pair's row per batch with the cumulative
     # counts — max per key is the final state
-    latest = spark.table(name).groupBy("i", "j").agg(
+    latest = drain_to_table(wc, "update").groupBy("i", "j").agg(
         F.max("wi").alias("wi"), F.max("wj").alias("wj")
     )
     # the MM algebra reads the state relation through several consumers
@@ -99,11 +84,7 @@ def run_streaming_kripp_alpha(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "events", "event_id", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     nic = (
         stream.selectExpr(
             "abs(event_id) % 3000 AS item", "event_type AS cat"
@@ -111,17 +92,7 @@ def run_streaming_kripp_alpha(
         .groupBy("item", "cat")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    name = f"stream_ka_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            nic.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name).groupBy("item", "cat").agg(
+    latest = drain_to_table(nic, "update").groupBy("item", "cat").agg(
         F.max("c").alias("c")
     )
     # fresh expr-ids before the multi-consumer algebra (memory-sink rule)
@@ -147,11 +118,7 @@ def run_streaming_copeland(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "events", "event_id", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     wc = (
         synth_matches(stream, n_items=8)
         .select(
@@ -165,17 +132,7 @@ def run_streaming_copeland(
             F.sum(F.lit(1) - F.col("w_is_i")).alias("wj"),
         )
     )
-    name = f"stream_cope_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            wc.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name).groupBy("i", "j").agg(
+    latest = drain_to_table(wc, "update").groupBy("i", "j").agg(
         F.max("wi").alias("wi"), F.max("wj").alias("wj")
     )
     # the point algebra reads the state through a two-branch union —
@@ -204,11 +161,7 @@ def run_streaming_rater_quality(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "events", "event_id", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     dedup = (
         stream.selectExpr(
             "abs(event_id) % 3000 AS item",
@@ -218,19 +171,9 @@ def run_streaming_rater_quality(
         .groupBy("item", "rater")
         .agg(F.min("cat").alias("cat"))
     )
-    name = f"stream_rq_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            dedup.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # update mode re-emits a key's row per batch with the cumulative
     # min — the per-key MIN over the sink is the final state
-    latest = spark.table(name).groupBy("item", "rater").agg(
+    latest = drain_to_table(dedup, "update").groupBy("item", "rater").agg(
         F.min("cat").alias("cat")
     )
     # multi-consumer algebra over the memory sink: fresh expr-ids

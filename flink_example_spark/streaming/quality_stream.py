@@ -20,14 +20,15 @@ broadcast), one constant-size global aggregate; state is six BIGINTs.
 
 from __future__ import annotations
 
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_example_spark.session import shuffle_partitions, tune
-from flink_example_spark.streaming.staging import stage_table_by_key
+from flink_example_spark.session import tune
+from flink_example_spark.streaming.staging import (
+    drain_to_table,
+    read_chunks,
+    stage_table_by_key,
+)
 
 
 def run_streaming_expectations(
@@ -38,11 +39,7 @@ def run_streaming_expectations(
     tune(spark)
     customer = load_table(spark, sf_dir, "customer")
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "orders", "o_orderkey", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     joined = stream.join(
         F.broadcast(
             customer.select(F.col("c_custkey").alias("o_custkey")).distinct()
@@ -62,17 +59,7 @@ def run_streaming_expectations(
         ).alias("v_date"),
         viol(F.col("__has_parent").isNotNull()).alias("v_fk"),
     )
-    name = f"stream_expect_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    s = spark.table(name)
+    s = drain_to_table(agg, "complete")
     arms = [
         ("orders.o_orderkey_not_null", "v_key"),
         ("orders.o_totalprice_nonneg", "v_price"),
@@ -115,11 +102,7 @@ def run_streaming_t_closeness(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "customer", "c_custkey", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     counts = (
         stream.withColumn("bal_band", F.floor(F.col("c_acctbal") / 1000))
         .filter(F.col("bal_band").isNotNull())
@@ -128,20 +111,10 @@ def run_streaming_t_closeness(
         )
         .agg(F.count(F.lit(1)).cast("long").alias("cj"))
     )
-    name = f"stream_tclose_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            counts.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # memory-sink tables share expr-ids across spark.table() calls (the
     # round-6 "Conflicting attributes" trap) — cut to a fresh LogicalRDD
     # once, then every read-time branch derives from that one frame
-    cv = spark.table(name).localCheckpoint(eager=True)
+    cv = drain_to_table(counts, "complete").localCheckpoint(eager=True)
     gv = cv.groupBy("v").agg(F.sum("cj").alias("gj"))
     wv = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     wall = Window.orderBy("v").rangeBetween(
@@ -195,27 +168,13 @@ def run_streaming_uniqueness(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "lineitem", "l_orderkey", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     counts = stream.groupBy(F.col("l_orderkey").alias("k")).agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
-    name = f"stream_uniq_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # update-mode sink holds every emitted version; the key's final count
     # is its max (counts only grow). Counts-of-counts is read-time batch.
-    latest = spark.table(name).groupBy("k").agg(F.max("c").alias("c"))
+    latest = drain_to_table(counts, "update").groupBy("k").agg(F.max("c").alias("c"))
     return latest.agg(
         F.sum("c").alias("n_rows"),
         F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(0)).alias(
@@ -245,26 +204,12 @@ def run_streaming_skew_audit(
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     counts = stream.groupBy(F.col("user_id").alias("__k")).agg(
         F.count(F.lit(1)).alias("__c")
     )
-    name = f"stream_skew_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     latest = (
-        spark.table(name).groupBy("__k").agg(F.max("__c").alias("__c"))
+        drain_to_table(counts, "update").groupBy("__k").agg(F.max("__c").alias("__c"))
     )
     return skew_rollup(latest, "user_id")
 
@@ -282,27 +227,13 @@ def run_streaming_gini_lorenz(
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     counts = (
         stream.filter(F.col("n_chars").isNotNull())
         .groupBy(F.col("n_chars").cast("long").alias("v"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    name = f"stream_gini_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name).groupBy("v").agg(F.max("c").alias("c"))
+    latest = drain_to_table(counts, "update").groupBy("v").agg(F.max("c").alias("c"))
     return gini_lorenz_from_counts(latest)
 
 
@@ -322,11 +253,7 @@ def run_streaming_benford(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "orders", "o_orderkey", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     digits = (
         stream.filter(F.col("o_totalprice") >= 1)
         .select(
@@ -341,15 +268,6 @@ def run_streaming_benford(
         .groupBy("d")
         .agg(F.count(F.lit(1)).alias("obs"))
     )
-    name = f"stream_benford_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            digits.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name).groupBy("d").agg(F.max("obs").alias("obs"))
+    versions = drain_to_table(digits, "update")
+    latest = versions.groupBy("d").agg(F.max("obs").alias("obs"))
     return benford_from_counts(latest, "orders")

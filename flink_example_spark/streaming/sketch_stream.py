@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 )
 
 from flink_example_spark.operators.sketch import HASH_SPACE, portable_hash32
+from flink_example_spark.streaming.staging import drain_to_table, read_chunks
 
 _STATE_SCHEMA = StructType([StructField("pkl", BinaryType(), True)])
 
@@ -113,39 +114,24 @@ def run_streaming_kmv(
     """Bounded replay: per-language distinct-fingerprint sketch over the
     document stream; the final (max-version) row per language equals the
     batch ``kmv_distinct`` relation exactly — shares its oracle."""
-    import os
-    import uuid
-
     from flink_example_spark.operators.text import fingerprint
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         .select("lang", fingerprint(F.col("text")).alias("fp"))
     )
     sketch = streaming_kmv_distinct(stream, "lang", "fp", k=k)
-    name = f"stream_kmv_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            sketch.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     w_latest = (
         "SELECT lang, n_kept, kth_hash, est_distinct FROM ("
-        f"  SELECT *, ROW_NUMBER() OVER (PARTITION BY lang ORDER BY version DESC) rn"
-        f"  FROM {name}"
+        "  SELECT *, ROW_NUMBER() OVER (PARTITION BY lang ORDER BY version DESC) rn"
+        "  FROM {t}"
         ") WHERE rn = 1"
     )
-    return spark.sql(w_latest)
+    return spark.sql(w_latest, t=drain_to_table(sketch, "update"))
 
 
 def run_streaming_kmv_jvm(
@@ -160,38 +146,23 @@ def run_streaming_kmv_jvm(
     reference; this form is the production path. Converges exactly to
     batch ``kmv_distinct`` (bottom-k is a commutative, idempotent merge)
     and shares its oracle."""
-    import os
-    import uuid
-
     from flink_example_spark.jvm import register_kmv_bottomk
     from flink_example_spark.operators.text import fingerprint
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     fn = register_kmv_bottomk(spark, k)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         .select("lang", fingerprint(F.col("text")).alias("fp"))
     )
     src = stream.select(
         "lang", portable_hash32(F.col("fp")).alias("__h")
     ).filter(F.col("__h").isNotNull())
     g = src.groupBy("lang").agg(F.expr(f"{fn}(__h)").alias("__ks"))
-    name = f"stream_kmv_jvm_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            g.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name)
+    latest = drain_to_table(g, "complete")
     fresh = fresh_local(latest)
     return fresh.select(
         "lang",
@@ -223,37 +194,22 @@ def run_streaming_cm_sketch(
     so no watermark is needed and bounded replay converges EXACTLY to the
     batch ``cm_sketch`` — shares its oracle.
     """
-    import os
-    import uuid
-
     from flink_example_spark.operators.sketch import cm_coords
     from flink_example_spark.operators.text import normalized, tokens
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         .select(F.explode(tokens(normalized(F.col("text")))).alias("term"))
         .filter(F.col("term") != "")
         .select(F.explode(cm_coords(F.col("term"), depth, width)).alias("__c"))
         .select(F.col("__c.r").alias("r"), F.col("__c.j").alias("j"))
     )
     counts = stream.groupBy("r", "j").agg(F.count(F.lit(1)).alias("cnt"))
-    name = f"stream_cm_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            counts.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.sql(f"SELECT r, j, cnt FROM {name}")
+    return spark.sql("SELECT r, j, cnt FROM {t}", t=drain_to_table(counts, "complete"))
 
 
 def run_streaming_cm_jvm(
@@ -270,36 +226,21 @@ def run_streaming_cm_jvm(
     commutative monoid over pure-hash coordinates, so bounded replay
     converges to the batch matrix bit-exactly and shares
     ``cm_sketch``'s oracle."""
-    import os
-    import uuid
-
     from flink_example_spark.jvm import register_cm
     from flink_example_spark.operators.text import normalized, tokens
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     fn = register_cm(spark, depth, width)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         .select(F.explode(tokens(normalized(F.col("text")))).alias("term"))
         .filter(F.col("term") != "")
     )
     g = stream.groupBy().agg(F.expr(f"{fn}(term)").alias("__a"))
-    name = f"stream_cm_jvm_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            g.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name)
+    latest = drain_to_table(g, "complete")
     fresh = fresh_local(latest)
     return (
         fresh.select(F.posexplode("__a").alias("__i", "cnt"))
@@ -377,33 +318,18 @@ def run_streaming_kmv_quantiles(
     quantile arithmetic runs as the SAME Spark ``percentile`` aggregate the
     batch operator uses — so this shares the batch ``kmv_quantiles``
     oracle."""
-    import os
-    import uuid
-
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         .select("lang", "doc_id", "n_chars")
     )
     sample = streaming_kmv_quantile_sample(stream, "lang", "n_chars", "doc_id", k=k)
-    name = f"stream_kq_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            sample.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return spark.sql(
-        f"""
+        """
         SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_sample,
                percentile(v, 0.25) AS p25,
                percentile(v, 0.5) AS p50,
@@ -411,10 +337,11 @@ def run_streaming_kmv_quantiles(
         FROM (
           SELECT lang, v,
                  MAX(version) OVER (PARTITION BY lang) AS mx, version
-          FROM {name}
+          FROM {t}
         ) WHERE version = mx
         GROUP BY lang
-        """
+        """,
+        t=drain_to_table(sample, "update"),
     )
 
 
@@ -428,20 +355,15 @@ def run_streaming_quantiles_jvm(
     the zero-pad order device). The final sample — and therefore the
     percentile read — is bit-identical to batch ``kmv_quantiles``
     (shares its oracle)."""
-    import os
-    import uuid
-
     from flink_example_spark.jvm import register_kmv_sample_bottomk
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     fn = register_kmv_sample_bottomk(spark, k)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         .select("lang", "doc_id", "n_chars")
     )
     ks = F.col("doc_id").cast("string")
@@ -452,17 +374,7 @@ def run_streaming_quantiles_jvm(
         F.col("n_chars").cast("double").alias("__vd"),
     ).filter(F.col("__h").isNotNull())
     g = src.groupBy("lang").agg(F.expr(f"{fn}(__h, __ok, __vd)").alias("__vs"))
-    name = f"stream_kq_jvm_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            g.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name)
+    latest = drain_to_table(g, "complete")
     fresh = fresh_local(latest)
     return (
         fresh.select("lang", F.explode("__vs").alias("__v"))
@@ -493,35 +405,20 @@ def run_streaming_hll_distinct(
     its oracle; the finalize (exact integer harmonic sum + one division)
     runs as a batch expression over the sink table.
     """
-    import os
-    import uuid
-
     from flink_example_spark.operators.sketch import hll_finalize, hll_registers
     from flink_example_spark.operators.text import normalized, tokens
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         .select(F.col("lang"), F.explode(tokens(normalized(F.col("text")))).alias("term"))
         .filter(F.col("term") != "")
     )
     registers = hll_registers(stream, "lang", "term", p=p)
-    name = f"stream_hll_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            registers.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return hll_finalize(spark.table(name), "lang", p=p)
+    return hll_finalize(drain_to_table(registers, "complete"), "lang", p=p)
 
 
 def run_streaming_hll_jvm(
@@ -537,23 +434,18 @@ def run_streaming_hll_jvm(
     merge-order invariance (register-wise max of a pure hash function),
     so bounded replay converges to batch ``hll_distinct`` bit-exactly
     and shares its oracle verbatim."""
-    import os
-    import uuid
-
     from flink_example_spark.jvm import register_hll
     from flink_example_spark.operators.sketch import _hll_pairs, hll_finalize
     from flink_example_spark.operators.sketch import portable_hash32
     from flink_example_spark.operators.text import normalized, tokens
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     fn = register_hll(spark, p)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "documents", "doc_id", chunks)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         .select(
             F.col("lang"),
             F.explode(tokens(normalized(F.col("text")))).alias("term"),
@@ -564,17 +456,7 @@ def run_streaming_hll_jvm(
         "lang", portable_hash32(F.col("term")).alias("__h")
     ).filter(F.col("__h").isNotNull())
     g = src.groupBy("lang").agg(F.expr(f"{fn}(__h)").alias("__a"))
-    name = f"stream_hll_jvm_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            g.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name)
+    latest = drain_to_table(g, "complete")
     fresh = fresh_local(latest)
     return hll_finalize(_hll_pairs(fresh, ["lang"]), ["lang"], p=p)
 
@@ -599,16 +481,13 @@ def run_streaming_bloom_filter(
     fixed-size filter current while data streams in; probe sides consult it
     to skip shuffle work.
     """
-    import os
-    import uuid
-
     from flink_example_spark.operators.sketch import (
         BLOOM_BITS,
         BLOOM_K,
         bloom_probe_summary,
         bloom_words,
     )
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
     from flink_example_spark.tables import load_table
 
@@ -617,28 +496,16 @@ def run_streaming_bloom_filter(
     supplier = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
     part = load_table(spark, sf_dir, "part")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     shipped_stream = (
         stream.join(F.broadcast(supplier), stream.l_suppkey == supplier.s_suppkey)
         .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
         .select(F.col("n_name"), F.col("l_partkey"))
     )
     words = bloom_words(shipped_stream, ["n_name"], "l_partkey", BLOOM_BITS, BLOOM_K)
-    name = f"stream_bloom_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            words.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    bloom = spark.sql(f"SELECT n_name, word, bits FROM {name}")
+    bloom = spark.sql(
+        "SELECT n_name, word, bits FROM {t}", t=drain_to_table(words, "complete")
+    )
     lineitem = load_table(spark, sf_dir, "lineitem")
     shipped = (
         lineitem.join(F.broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey)
@@ -660,23 +527,17 @@ def run_streaming_order_stats(
     broadcast interval join on the target ranks) is read-time algebra.
     Identical output to the batch ``exact_order_stats`` (shared oracle) —
     exact percentiles, continuously maintained, value-cardinality state."""
-    import uuid
-
     from flink_example_spark.operators.sketch import (
         exact_order_stats_from_counts,
     )
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "events", "event_id", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     counts = (
         stream.filter(F.col("value").isNotNull())
         .groupBy(
@@ -684,17 +545,7 @@ def run_streaming_order_stats(
         )
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    name = f"stream_ostats_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name).groupBy("v").agg(F.max("c").alias("c"))
+    latest = drain_to_table(counts, "update").groupBy("v").agg(F.max("c").alias("c"))
     return exact_order_stats_from_counts(latest)
 
 def run_streaming_dyadic_jvm(
@@ -708,21 +559,16 @@ def run_streaming_dyadic_jvm(
     invariance theorem (DyadicHist.java) makes the replayed state — and
     therefore the quantile-bounds read — BIT-IDENTICAL to batch
     ``dyadic_quantiles`` (shares its oracle)."""
-    import os
-    import uuid
-
     from flink_example_spark.jvm import register_dyadic_hist
     from flink_example_spark.operators.sketch import dyadic_read
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     fn = register_dyadic_hist(spark, k)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         .select("event_type", "value")
     )
     vq = "CAST(floor(value * 1000000 + 0.5) AS BIGINT)"
@@ -735,17 +581,7 @@ def run_streaming_dyadic_jvm(
         ).alias("__vq"),
     )
     g = src.groupBy("event_type").agg(F.expr(f"{fn}(__vq)").alias("__a"))
-    name = f"stream_dyadic_jvm_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            g.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name)
+    latest = drain_to_table(g, "complete")
     fresh = fresh_local(latest)
     return dyadic_read(fresh, ["event_type"], (25, 50, 75, 90))
 
@@ -762,11 +598,8 @@ def run_streaming_mg_jvm(
     the MG guarantee makes the result deterministic and equal to the
     batch row on every replay (shares its oracle); a live summary that
     dropped a guaranteed-heavy key would lose a row and fail the gate."""
-    import os
-    import uuid
-
     from flink_example_spark.jvm import register_mg_topk
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
     from flink_example_spark.tables import load_table
 
@@ -775,24 +608,12 @@ def run_streaming_mg_jvm(
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
     band = "CAST(floor(value / 25) AS BIGINT)"
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         .selectExpr("event_type", f"CAST({band} AS STRING) AS __key")
         .filter(F.col("__key").isNotNull())
     )
     g = stream.groupBy("event_type").agg(F.expr(f"{fm}(__key)").alias("__mg"))
-    name = f"stream_mg_jvm_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            g.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name)
+    latest = drain_to_table(g, "complete")
     fresh = fresh_local(latest)
     survivors = fresh.select(
         "event_type", F.explode("__mg").alias("__e")
@@ -835,12 +656,9 @@ def run_streaming_dyadic_daily(
     arrival) and shares its oracle. Production runs update mode with
     the zero-delay watermark expiring closed windows from the state
     store."""
-    import os
-    import uuid
-
     from flink_example_spark.jvm import register_dyadic_hist
     from flink_example_spark.operators.sketch import dyadic_read
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
@@ -848,9 +666,7 @@ def run_streaming_dyadic_daily(
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
     vq = "CAST(floor(value * 1000000 + 0.5) AS BIGINT)"
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         # staged chunks carry the already-normalized ts; cast NTZ -> LTZ
         # (exact under the UTC pin) for the event-time window
         .withColumn("ts", F.col("ts").cast("timestamp"))
@@ -867,17 +683,7 @@ def run_streaming_dyadic_daily(
         .agg(F.expr(f"{fn}(__vq)").alias("__a"))
         .select(F.col("w.start").alias("day"), "__a")
     )
-    name = f"stream_dyadic_daily_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            g.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name)
+    latest = drain_to_table(g, "complete")
     fresh = fresh_local(latest)
     return dyadic_read(fresh, ["day"], (50, 90))
 
@@ -890,12 +696,9 @@ def run_streaming_dyadic_rollup(
     day-sketch relation — monoid-in-state, algebra-at-read applied to
     the no-rescan rollup. Converges bit-identically to batch
     ``dyadic_rollup`` (shares its oracle)."""
-    import os
-    import uuid
-
     from flink_example_spark.jvm import register_dyadic_hist
     from flink_example_spark.operators.sketch import dyadic_rollup_read
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
@@ -903,9 +706,7 @@ def run_streaming_dyadic_rollup(
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
     vq = "CAST(floor(value * 1000000 + 0.5) AS BIGINT)"
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "0 seconds")
         .selectExpr(
@@ -920,17 +721,7 @@ def run_streaming_dyadic_rollup(
         .agg(F.expr(f"{fn}(__vq)").alias("__a"))
         .select(F.col("w.start").alias("day"), "__a")
     )
-    name = f"stream_dyadic_rollup_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            g.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name)
+    latest = drain_to_table(g, "complete")
     fresh = fresh_local(latest)
     return dyadic_rollup_read(fresh, k=k, pcts=(50, 90))
 
@@ -951,21 +742,16 @@ def run_streaming_kmv_rolling(
     to batch ``kmv_rolling_distinct`` (bottom-k union is a
     commutative idempotent merge; ``window.start`` ==
     ``date_trunc('day')`` under the UTC pin) and shares its oracle."""
-    import os
-    import uuid
-
     from flink_example_spark.jvm import register_kmv_bottomk
     from flink_example_spark.operators.sketch import kmv_rolling_read
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
     fn = register_kmv_bottomk(spark, k)
     tmpdir, schema = stage_table_by_key(spark, sf_dir, "events", "event_id", chunks)
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
+        read_chunks(spark, tmpdir, schema)
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "0 seconds")
         .select(
@@ -979,16 +765,6 @@ def run_streaming_kmv_rolling(
         .agg(F.expr(f"{fn}(__h)").alias("__ks"))
         .select(F.col("w.start").alias("day"), "__ks")
     )
-    name = f"stream_kmv_roll_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            g.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name)
+    latest = drain_to_table(g, "complete")
     fresh = fresh_local(latest)
     return kmv_rolling_read(fresh, k=k, window_days=window_days)

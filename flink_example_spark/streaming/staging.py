@@ -1,10 +1,17 @@
-"""Bounded-replay staging: one chunk splitter and deterministic arrival order.
+"""Bounded replay: stage the input, read it back as a stream, drain the query.
 
-Every bounded replay stages its input as ``chunk_<i>`` parquet directories
-read by a file stream source (``readStream.parquet`` +
-``maxFilesPerTrigger=1``), then appends sentinel waves that lift the
-watermark past the data. ``split_chunks`` is the one splitter: it cuts a
-relation at approximate quantiles of its event-time (or key) column.
+Every bounded replay stages its input as ``chunk_<i>`` parquet directories,
+reads them with ``read_chunks`` (a file stream source, one chunk file per
+micro-batch), and runs its query to completion with ``drain`` (any
+``DataStreamWriter``) or ``drain_to_table`` (a memory sink, returned as a
+DataFrame). Those two are the only places a bounded replay starts a query:
+each runs with ``trigger(availableNow=True)`` at a small shuffle-partition
+count, since a stateful query pays per-partition state-store cost every
+micro-batch.
+
+``split_chunks`` is the one splitter: it cuts a relation at approximate
+quantiles of its event-time (or key) column. Time-ordered replays then
+append sentinel waves that lift the watermark past the data.
 
 The file source orders files by modification time. Relying on write timing
 for distinct mtimes is fragile on filesystems with coarse mtime
@@ -15,11 +22,13 @@ flush. ``stamp_chunk_mtimes`` makes ordering explicit: every file under
 any filesystem's resolution), so batch order equals chunk index regardless
 of write timing.
 """
-
 from __future__ import annotations
 
 import os
 import re
+import uuid
+
+from flink_example_spark.session import shuffle_partitions
 
 _CHUNK_RE = re.compile(r"^chunk_(\d+)")
 
@@ -71,6 +80,38 @@ def split_chunks(df, order_col: str, chunks: int, tmpdir: str) -> None:
         part.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(tmpdir, f"chunk_{i}")
         )
+
+
+def read_chunks(spark, tmpdir: str, schema):
+    """Stream the staged ``chunk_*`` dirs under ``tmpdir``, one file per
+    micro-batch, in mtime (= chunk index) order."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(tmpdir, "chunk_*"))
+    )
+
+
+def drain(writer, partitions: int = 8) -> None:
+    """Start ``writer`` with ``trigger(availableNow=True)`` and wait until it
+    has processed everything its source holds. Runs at ``partitions``
+    shuffle partitions; the session value is restored and the query stopped
+    afterwards, also when the query fails (its exception reaches the
+    caller)."""
+    with shuffle_partitions(writer._spark, partitions):
+        query = writer.trigger(availableNow=True).start()
+        try:
+            query.awaitTermination()
+        finally:
+            query.stop()
+
+
+def drain_to_table(df, mode: str, partitions: int = 8):
+    """Drain the streaming ``df`` into a fresh memory sink in output
+    ``mode`` and return the sink as a DataFrame."""
+    name = f"replay_{uuid.uuid4().hex}"
+    drain(df.writeStream.outputMode(mode).format("memory").queryName(name), partitions)
+    return df.sparkSession.table(name)
 
 
 _STAGE_MEMO: dict = {}

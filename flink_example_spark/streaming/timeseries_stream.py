@@ -13,13 +13,12 @@ stores run at ingest.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_example_spark.session import shuffle_partitions, tune
+from flink_example_spark.session import tune
 from flink_example_spark.streaming.pipeline import stream_events
+from flink_example_spark.streaming.staging import drain_to_table, read_chunks
 
 
 def run_streaming_ohlc(
@@ -45,17 +44,7 @@ def run_streaming_ohlc(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(v.cast("decimal(18,2)")).cast("double").alias("vol_sum"),
     )
-    name = f"stream_ohlc_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            bars.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain_to_table(bars, "complete")
 
 
 def run_streaming_rolling_actives(
@@ -74,8 +63,6 @@ def run_streaming_rolling_actives(
     accepting late activity) — the bounded replay needs no watermark.
     Converges to batch ``rolling_active_users`` → shares its oracle.
     """
-    import uuid
-
     from flink_example_spark.streaming.pipeline import stream_events
 
     tune(spark)
@@ -83,17 +70,7 @@ def run_streaming_rolling_actives(
     ud = ev.select(
         F.col("user_id").alias("__u"), F.date_trunc("day", F.col("ts")).alias("__d")
     ).dropDuplicates(["__u", "__d"])
-    name = f"stream_wau_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            ud.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    t = spark.table(name)
+    t = drain_to_table(ud, "append")
     mx = t.agg(F.max("__d").alias("__mx"))
     grid = t.select(
         "__u",
@@ -230,30 +207,17 @@ def run_streaming_cusum(
             os.path.join(tmpdir, f"chunk_{i}")
         )
     stamp_chunk_mtimes(tmpdir)
-    stream_src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream_src = read_chunks(spark, tmpdir, ev.schema)
     out = streaming_cusum(
         stream_src, "event_type", "ts", "value", "event_id", h=h, target=target,
         scale=scale,
     )
-    name = f"stream_cusum_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     final = spark.sql(
-        f"""SELECT k, n, n_alarms, first_alarm_us, max_s FROM (
+        """SELECT k, n, n_alarms, first_alarm_us, max_s FROM (
               SELECT *, ROW_NUMBER() OVER (PARTITION BY k ORDER BY version DESC) rn
-              FROM {name}
-            ) WHERE rn = 1"""
+              FROM {t}
+            ) WHERE rn = 1""",
+        t=drain_to_table(out, "update"),
     )
     return final.select(
         F.col("k").alias("event_type"),
@@ -365,23 +329,9 @@ def run_streaming_ewma(
             os.path.join(tmpdir, f"chunk_{i}")
         )
     stamp_chunk_mtimes(tmpdir)
-    stream_src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream_src = read_chunks(spark, tmpdir, ev.schema)
     out = streaming_ewma(stream_src, "user_id", "ts", "value", "event_id", scale=scale)
-    name = f"stream_ewma_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    return drain_to_table(out, "update").select(
         F.col("k").alias("user_id"),
         F.timestamp_micros(F.col("us")).alias("ts"),
         F.col("v").alias("value"),
@@ -415,11 +365,7 @@ def run_streaming_rate_limit(
             os.path.join(tmpdir, f"chunk_{i}")
         )
     stamp_chunk_mtimes(tmpdir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, ev.schema)
     per_key = (
         stream.select(
             F.col("user_id").alias("k"),
@@ -428,18 +374,8 @@ def run_streaming_rate_limit(
         .groupBy("k", "day")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"stream_rl_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            per_key.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        drain_to_table(per_key, "complete")
         .groupBy("day")
         .agg(
             F.sum("n").alias("n_events"),
@@ -479,18 +415,8 @@ def run_streaming_session_stats(
             ).alias("dur_s"),
         )
     )
-    name = f"stream_sess_stats_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            sessions.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        drain_to_table(sessions, "complete")
         .groupBy(F.col("k").alias("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_sessions"),
@@ -541,11 +467,7 @@ def run_streaming_bollinger(
             os.path.join(tmpdir, f"chunk_{i}")
         )
     stamp_chunk_mtimes(tmpdir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, ev.schema)
     state_schema = StructType([StructField("pkl", BinaryType(), True)])
     output_schema = StructType(
         [
@@ -608,24 +530,15 @@ def run_streaming_bollinger(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stream_boll_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return spark.sql(
-        f"""SELECT k AS event_type, n, n_up AS n_breakout_up,
+        """SELECT k AS event_type, n, n_up AS n_breakout_up,
                    n_down AS n_breakout_down,
                    timestamp_micros(first_us) AS first_breakout_ts
             FROM (
               SELECT *, ROW_NUMBER() OVER (PARTITION BY k ORDER BY version DESC) rn
-              FROM {name}
-            ) WHERE rn = 1"""
+              FROM {t}
+            ) WHERE rn = 1""",
+        t=drain_to_table(out, "update"),
     )
 
 
@@ -647,23 +560,14 @@ def run_streaming_survival(
     spans = ev.groupBy(F.col("user_id").alias("k")).agg(
         F.min(us).alias("lo"), F.max(us).alias("hi")
     )
-    name = f"stream_surv_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            spans.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     day_us = 86400 * 1_000_000
-    return spark.sql(f"""
-        WITH e AS (SELECT MAX(hi) AS span_end FROM {name}),
+    return spark.sql(
+        """
+        WITH e AS (SELECT MAX(hi) AS span_end FROM {t}),
         lt AS (
           SELECT (hi - lo) div {day_us} AS t_days,
-                 hi <= span_end - {horizon_days * day_us} AS observed
-          FROM {name} CROSS JOIN e
+                 hi <= span_end - {horizon_us} AS observed
+          FROM {t} CROSS JOIN e
         ),
         per_t AS (
           SELECT t_days,
@@ -688,7 +592,11 @@ def run_streaming_survival(
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                  AS DOUBLE) / 1e6 AS cum_hazard
         FROM risked
-    """)
+        """,
+        t=drain_to_table(spans, "complete"),
+        day_us=day_us,
+        horizon_us=horizon_days * day_us,
+    )
 
 
 def streaming_interval_merge(
@@ -773,21 +681,12 @@ def run_streaming_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("e"),
     )
     out = streaming_interval_merge(src, "key")
-    name = f"stream_imerge_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return spark.sql(
         "SELECT key, n_intervals, n_islands, covered_us, max_island_us FROM ("
-        f"  SELECT *, ROW_NUMBER() OVER (PARTITION BY key ORDER BY version DESC) rn"
-        f"  FROM {name}"
-        ") WHERE rn = 1"
+        "  SELECT *, ROW_NUMBER() OVER (PARTITION BY key ORDER BY version DESC) rn"
+        "  FROM {t}"
+        ") WHERE rn = 1",
+        t=drain_to_table(out, "update"),
     )
 
 
@@ -818,17 +717,8 @@ def run_streaming_granger(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("key", "day")
         .agg(F.sum("vq").alias("vq"))
     )
-    name = f"stream_granger_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            daily.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return granger_from_daily(spark.table(name).localCheckpoint(eager=True))
+    sums = drain_to_table(daily, "complete")
+    return granger_from_daily(sums.localCheckpoint(eager=True))
 
 
 def run_streaming_holt(
@@ -878,11 +768,7 @@ def run_streaming_holt(
             os.path.join(tmpdir, f"chunk_{i}")
         )
     stamp_chunk_mtimes(tmpdir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-    )
+    stream = read_chunks(spark, tmpdir, ev.schema)
     src = stream.filter(F.col("value").isNotNull()).select(
         F.col("event_type").alias("_k"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("_us"),
@@ -961,22 +847,13 @@ def run_streaming_holt(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stream_holt_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return spark.sql(
-        f"""SELECT k AS key, n_days, level_centi, trend_centi, forecast_centi
+        """SELECT k AS key, n_days, level_centi, trend_centi, forecast_centi
             FROM (
               SELECT *, ROW_NUMBER() OVER (PARTITION BY k ORDER BY version DESC) rn
-              FROM {name}
-            ) WHERE rn = 1"""
+              FROM {t}
+            ) WHERE rn = 1""",
+        t=drain_to_table(out, "update"),
     )
 
 
@@ -1006,17 +883,7 @@ def run_streaming_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("key", "day")
         .agg(F.sum("vq").alias("vq"))
     )
-    name = f"stream_locf_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            daily.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    d = spark.table(name).localCheckpoint(eager=True)
+    d = drain_to_table(daily, "complete").localCheckpoint(eager=True)
     spans = d.groupBy("key").agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
     grid = spans.select("key", F.explode(F.expr("sequence(lo, hi)")).alias("day"))
     joined = grid.join(d, ["key", "day"], "left")
@@ -1052,17 +919,7 @@ def _daily_sum_sink(spark: SparkSession, sf_dir: str, prefix: str) -> DataFrame:
         .groupBy("key", "day")
         .agg(F.sum("vq").alias("vq"))
     )
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            daily.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).localCheckpoint(eager=True)
+    return drain_to_table(daily, "complete").localCheckpoint(eager=True)
 
 
 def run_streaming_spectral_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1123,11 +980,9 @@ def run_streaming_rolling_slope(
     trailing-window OLS algebra (exact BIGINT frame sums, sign-safe
     milli division) runs at read time over the sink. Converges exactly
     to batch ``timeseries.rolling_slope`` (shared oracle)."""
-    import uuid
-
     from pyspark.sql import Window as W
 
-    from flink_example_spark.session import shuffle_partitions, tune
+    from flink_example_spark.session import tune
     from flink_example_spark.streaming.staging import stage_table_by_key
 
     tune(spark)
@@ -1136,11 +991,7 @@ def run_streaming_rolling_slope(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "events", "event_id", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     daily = (
         stream.filter(F.col("value").isNotNull())
         .groupBy(
@@ -1155,16 +1006,6 @@ def run_streaming_rolling_slope(
             ).alias("vq")
         )
     )
-    name = f"stream_rslope_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            daily.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # sums only grow across replayed batches (values are positive):
     # final per (key, day) = max
     from flink_example_spark.operators.timeseries import (
@@ -1172,7 +1013,7 @@ def run_streaming_rolling_slope(
     )
 
     latest = (
-        spark.table(name)
+        drain_to_table(daily, "update")
         .groupBy("key", "day")
         .agg(F.max("vq").alias("vq"))
     )
@@ -1205,17 +1046,7 @@ def run_streaming_ccf(
         .groupBy("series", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("x"))
     )
-    name = f"stream_ccf_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name).groupBy("series", "b").agg(
+    latest = drain_to_table(counts, "update").groupBy("series", "b").agg(
         F.max("x").alias("x")
     )
     return ccf_from_counts(latest, max_lag=max_lag)
@@ -1239,30 +1070,16 @@ def run_streaming_cox(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "events", "event_id", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     per = stream.groupBy("user_id").agg(
         F.expr("min(unix_micros(cast(ts as timestamp)))").alias("first_us"),
         F.expr("max(unix_micros(cast(ts as timestamp)))").alias("last_us"),
         F.sum((F.col("event_type") == "error").cast("long")).alias("ne"),
         F.count(F.lit(1)).alias("nt"),
     )
-    name = f"stream_cox_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            per.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # update-mode sink keeps every emitted version; first only shrinks,
     # the rest only grow — take the per-user envelope
-    latest = spark.table(name).groupBy("user_id").agg(
+    latest = drain_to_table(per, "update").groupBy("user_id").agg(
         F.min("first_us").alias("first_us"),
         F.max("last_us").alias("last_us"),
         F.max("ne").alias("ne"),
@@ -1294,11 +1111,7 @@ def run_streaming_cox_multi(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "events", "event_id", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     per = stream.groupBy("user_id").agg(
         F.expr("min(unix_micros(cast(ts as timestamp)))").alias("first_us"),
         F.expr("max(unix_micros(cast(ts as timestamp)))").alias("last_us"),
@@ -1306,17 +1119,7 @@ def run_streaming_cox_multi(
         F.sum((F.col("event_type") == "purchase").cast("long")).alias("np"),
         F.count(F.lit(1)).alias("nt"),
     )
-    name = f"stream_coxm_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            per.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name).groupBy("user_id").agg(
+    latest = drain_to_table(per, "update").groupBy("user_id").agg(
         F.min("first_us").alias("first_us"),
         F.max("last_us").alias("last_us"),
         F.max("ne").alias("ne"),
@@ -1349,27 +1152,13 @@ def run_streaming_cox_banded(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "events", "event_id", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     per = stream.groupBy("user_id").agg(
         F.expr("min(unix_micros(cast(ts as timestamp)))").alias("first_us"),
         F.expr("max(unix_micros(cast(ts as timestamp)))").alias("last_us"),
         F.sum((F.col("event_type") == "error").cast("long")).alias("ne"),
     )
-    name = f"stream_coxb_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            per.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name).groupBy("user_id").agg(
+    latest = drain_to_table(per, "update").groupBy("user_id").agg(
         F.min("first_us").alias("first_us"),
         F.max("last_us").alias("last_us"),
         F.max("ne").alias("n_err"),
@@ -1398,11 +1187,7 @@ def run_streaming_cox_adj(
     tmpdir, schema = stage_table_by_key(
         spark, sf_dir, "events", "event_id", chunks
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmpdir}/chunk_*")
-    )
+    stream = read_chunks(spark, tmpdir, schema)
     per = stream.groupBy("user_id").agg(
         F.expr("min(unix_micros(cast(ts as timestamp)))").alias("first_us"),
         F.expr("max(unix_micros(cast(ts as timestamp)))").alias("last_us"),
@@ -1410,17 +1195,7 @@ def run_streaming_cox_adj(
         F.sum((F.col("event_type") == "purchase").cast("long")).alias("np"),
         F.count(F.lit(1)).alias("nt"),
     )
-    name = f"stream_coxa_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            per.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    latest = spark.table(name).groupBy("user_id").agg(
+    latest = drain_to_table(per, "update").groupBy("user_id").agg(
         F.min("first_us").alias("first_us"),
         F.max("last_us").alias("last_us"),
         F.max("ne").alias("n_err"),

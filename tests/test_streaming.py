@@ -52,6 +52,48 @@ def test_split_chunks_stages_input_in_order(spark, tmp_path):
     assert all(max(a) < min(b) for a, b in zip(mtimes, mtimes[1:]))
 
 
+def test_drain_restores_partitions_on_failure(spark, tmp_path):
+    """The one replay runner: drain_to_table over a read_chunks stream
+    returns the batch answer; the query runs at the drain's partition
+    count, the session value is back after a good run and after a failing
+    one, the failure reaches the caller and no query is left running."""
+    from pyspark.sql import functions as F
+
+    from flink_example_spark.streaming.staging import (
+        drain,
+        drain_to_table,
+        read_chunks,
+        split_chunks,
+        stamp_chunk_mtimes,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    df = spark.range(30).withColumn("k", F.col("id") % 3)
+    split_chunks(df, "id", 3, str(tmp_path))
+    stamp_chunk_mtimes(str(tmp_path))
+    stream = read_chunks(spark, str(tmp_path), df.schema)
+
+    counts = drain_to_table(stream.groupBy("k").count(), "complete")
+    assert rows_set(counts) == rows_set(df.groupBy("k").count())
+    assert spark.conf.get(key) == before
+
+    seen = []
+    drain(
+        stream.writeStream.foreachBatch(
+            lambda b, _: seen.append(b.sparkSession.conf.get(key))
+        )
+    )
+    assert seen == ["8"] * 3
+    assert spark.conf.get(key) == before
+
+    failing = stream.select(F.raise_error(F.lit("drain-test-failure")).alias("x"))
+    with pytest.raises(Exception, match="drain-test-failure"):
+        drain_to_table(failing, "append")
+    assert spark.conf.get(key) == before
+    assert spark.streams.active == []
+
+
 def test_streaming_tumbling_window_converges(spark):
     """T6 streaming: watermarked tumbling-window aggregate converges to the
     batch daily counts."""

@@ -1,16 +1,10 @@
 """Streaming dedup-on-ingest: the running aggregate must converge exactly
-to the batch exact_dedup relation; the first-seen filter must keep exactly
-one valid document per distinct content."""
+to the batch exact_dedup relation."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from flink_example_spark.operators.dedup import exact_dedup
-from flink_example_spark.streaming.dedup_stream import (
-    run_streaming_exact_dedup,
-    run_streaming_first_seen,
-)
+from flink_example_spark.streaming.dedup_stream import run_streaming_exact_dedup
 from flink_example_spark.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -22,59 +16,6 @@ def test_streaming_exact_dedup_converges_to_batch(spark):
     got = {(r["doc_id"], r["content_md5"], r["n_copies"]) for r in streamed.collect()}
     exp = {(r["doc_id"], r["content_md5"], r["n_copies"]) for r in batch.collect()}
     assert got == exp and len(got) > 0
-
-
-def test_streaming_first_seen_semantics(spark):
-    docs = load_table(spark, SF, "documents")
-    kept = run_streaming_first_seen(spark, SF, chunks=3)
-    # exactly one kept row per distinct content
-    n_distinct = docs.select(F.md5("text")).distinct().count()
-    assert kept.count() == n_distinct
-    assert kept.select("content_md5").distinct().count() == n_distinct
-    # every kept (hash, id) is a genuine holder of that content
-    holders = docs.select(F.md5("text").alias("content_md5"), "doc_id")
-    bogus = kept.select("content_md5", "doc_id").exceptAll(holders)
-    assert bogus.count() == 0
-
-
-def test_streaming_first_seen_within_watermark(spark):
-    """State-bounded variant: dropDuplicatesWithinWatermark with a horizon
-    wider than the replay dedups exactly; state is watermark-evicted."""
-    import os
-    import uuid
-
-    from flink_example_spark.session import shuffle_partitions
-    from flink_example_spark.streaming.dedup_stream import (
-        streaming_first_seen_within_watermark,
-    )
-    from flink_example_spark.streaming.staging import stage_table_by_key
-
-    tmpdir, schema = stage_table_by_key(spark, SF, "documents", "doc_id", 3)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(tmpdir, "chunk_*"))
-        .withColumn(
-            "ingest_ts", F.timestamp_seconds(F.lit(1_600_000_000) + F.col("doc_id"))
-        )
-    )
-    name = f"fsw_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, 8):
-        q = (
-            streaming_first_seen_within_watermark(stream, delay="10 days")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    kept = spark.table(name)
-    docs = load_table(spark, SF, "documents")
-    n_distinct = docs.select(F.md5("text")).distinct().count()
-    assert kept.count() == n_distinct
-    holders = docs.select(F.md5("text").alias("content_md5"), "doc_id")
-    assert kept.select("content_md5", "doc_id").exceptAll(holders).count() == 0
 
 
 def test_streaming_ppjoin_equals_batch(spark):
