@@ -7648,7 +7648,7 @@ DRIVER_KEYS = [
     "streaming_cdc_apply",
     "streaming_session_windows",
     # the standalone interval-join row moves to extras (the fused e2e
-    # pipeline chains THREE interval joins under watermarks, keeping the
+    # pipeline runs an interval join under watermarks, keeping the
     # class driver-exercised); the slot records the live PPJoin — the
     # stateful prefix index with exactly-once pair emission
     "streaming_ppjoin",
@@ -7896,8 +7896,9 @@ def _streaming_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_features_agg": run_streaming_features,
         "streaming_training_examples": _run_streaming_pipeline_e2e,
         # the whole flagship graph (examples + both as-ofs, histories fused
-        # into interval-join+agg) as ONE streaming query, all state JVM-side;
-        # converges exactly to batch training_examples → shares its oracle
+        # into one interval join + one aggregation) as ONE streaming query,
+        # all state JVM-side; converges exactly to batch training_examples
+        # → shares its oracle
         "streaming_pipeline_e2e": _run_streaming_pipeline_e2e,
         # incremental feature-cache maintenance: converges exactly to the
         # batch feature_history relation → shares its oracle

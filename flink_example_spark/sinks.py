@@ -2,14 +2,13 @@
 
 The reference writes its changelog to the console and a text file
 (``print()`` / ``writeAsText("output.txt", OVERWRITE)``, App.java:83-85).
-Spark equivalents, batch and streaming.
+Spark batch equivalents.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 
 def to_console(df: DataFrame, n: int = 20, truncate: bool = False) -> None:
@@ -37,20 +36,3 @@ def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = Non
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-
-
-def stream_to_console(df: DataFrame) -> StreamingQuery:
-    """S4, streaming variant."""
-    return df.writeStream.format("console").outputMode("append").start()
-
-
-def stream_to_text(df: DataFrame, path: str, checkpoint: str) -> StreamingQuery:
-    """S5, streaming variant (checkpointed, exactly-once file output)."""
-    return (
-        serialize_row(df)
-        .writeStream.format("text")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )

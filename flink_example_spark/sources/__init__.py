@@ -1,4 +1,3 @@
 from flink_example_spark.sources.fixtures import game_play, purchase
-from flink_example_spark.sources.memory import from_rows
 
-__all__ = ["game_play", "purchase", "from_rows"]
+__all__ = ["game_play", "purchase"]

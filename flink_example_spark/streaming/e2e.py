@@ -6,9 +6,11 @@ in App.java:143-234). This module is the Spark counterpart: a SINGLE
 Structured Streaming query from the raw event stream to finished training
 examples, with every operator's state in the JVM state store:
 
-    raw events ──self interval join──► arg-max agg   = examples   (W1 + P3)
-      examples ──interval join (errors)──► decimal-SUM agg        (J1 as-of)
-       + loss  ──interval join (purchases)──► COUNT agg           (J2 as-of)
+    errors ──interval join [e.ts−h < q.ts ≤ e.ts+delay]──► all events
+           ──GROUP BY (entity, e.ts) with conditional aggregates:
+             arg-max(q.ts < e.ts)               = previous event  (W1 + P3)
+             SUM(error value, q.ts ≤ e.ts)      = feature as-of   (J1)
+             COUNT(purchase, q.ts ≤ e.ts+delay) = target as-of    (J2)
 
 The as-of joins are FUSED with the version histories they probe: the latest
 cumulative aggregate at probe time equals the aggregate over all deltas
@@ -17,26 +19,27 @@ at-or-before probe time, so
     asof(probe, version_history(E))  ≡  probe ⋈[t−h < e.ts ≤ t] E
                                         GROUP BY probe AGG(delta)
 
-— one interval join + one aggregation per as-of, no materialized history,
-no Python in the loop. The trade-off vs the batch operator is the bounded
-lookback ``horizon`` (exactly the feature-staleness bound real feature
-stores impose); the bounded replay sets horizon to cover the data span and
-therefore converges EXACTLY to batch ``training_examples``, sharing its
-oracle. This is the one stream replay of the temporal join: the registry's
-single-as-of row (``streaming_asof_interval``) is this query without the
-label-time ``cnt`` column.
+and since the examples, the feature and the target all aggregate the same
+entity's deltas around the same probe, one band (wide enough for all three)
+and one aggregation with a condition per output serve them all — no
+materialized history, no Python in the loop. The trade-off vs the batch
+operator is the bounded lookback ``horizon`` (exactly the feature-staleness
+bound real feature stores impose); the bounded replay sets horizon to cover
+the data span and therefore converges EXACTLY to batch
+``training_examples``, sharing its oracle. This is the one stream replay of
+the temporal join: the registry's single-as-of row
+(``streaming_asof_interval``) is this query without the label-time ``cnt``
+column.
 
-Six chained stateful operators (3 interval joins + 3 aggregations) in
-append mode — the multiple-stateful-operator support added in Spark 3.5,
+Two stateful operators (1 interval join + 1 aggregation) in append mode,
 with per-operator watermark propagation doing the event-time bookkeeping.
 
-Watermark mechanics: each outer/interval join's output watermark lags its
-input by the lookback horizon, so after three joins the final aggregation
-only closes a probe's group once the SOURCE watermark passes
-``p_ts + 3·horizon``. The sentinel waves therefore sit past
-``max_t + 3·horizon`` and are spaced within one horizon of each other so
-every wave flows through the example self-join (filtered-out rows advance
-no operator's watermark — DESIGN.md round-2 rule).
+Watermark mechanics: the join's output watermark lags its input by the
+lookback horizon, so the aggregation closes a probe's group once the SOURCE
+watermark passes ``e_ts + horizon``. The sentinel waves therefore sit past
+``max_t + horizon`` (filtered-out rows advance no operator's watermark —
+DESIGN.md round-2 rule — so each wave carries an error row for the probe
+side).
 """
 
 from __future__ import annotations
@@ -74,19 +77,20 @@ def run_streaming_pipeline_e2e(
 
     Convergence is chunk/wave-count-invariant (each micro-batch costs the
     full state-store overhead, so fewer chunks = fewer batches = faster):
-    the default ``chunks=1`` measured ~32s vs ~45-55s for 2 chunks at
-    sf0.01, identical result hash (pinned in tests/test_e2e_stream.py)."""
+    the default ``chunks=1`` measured 13.6s vs 15.3s for 2 chunks at
+    sf0.01 (warm medians of 3, 4 cores), identical result hash (pinned in
+    tests/test_e2e_stream.py)."""
     tmpdir, src_schema, horizon_days, sentinel_cut = stage_replay(
         spark, sf_dir, horizon_days, chunks, waves
     )
     stream = read_chunks(spark, tmpdir, src_schema)
     final = build_pipeline_stream(stream, horizon_days, label_delay_hours)
 
-    # 4 partitions: the 6-operator stateful chain pays per-partition
-    # state-store overhead EVERY micro-batch; measured 49.5/33.7/31.3s at
-    # 8/4/2 partitions (chunks=1, sf0.01) with IDENTICAL result hashes —
-    # 4 keeps parallelism headroom for larger SFs while shedding most of
-    # the overhead
+    # 4 partitions: each stateful operator pays per-partition state-store
+    # overhead EVERY micro-batch; measured 20.7/13.6/11.9s at 8/4/2
+    # partitions (chunks=1, sf0.01, warm medians of 3, 4 cores) with
+    # IDENTICAL result hashes — 4 keeps parallelism headroom for larger SFs
+    # while shedding most of the overhead
     return strip_sentinels(
         drain_to_table(final, "append", partitions=4), sentinel_cut
     )
@@ -143,18 +147,14 @@ def stage_replay(
     elif skip_chunks != chunks:
         raise ValueError("skip_chunks must be 0 (stage every chunk) or chunks (none)")
 
-    # Sentinel waves: past max_t + 3·horizon (the full chain's watermark
-    # lag), spaced 6h apart (within one horizon of each other, so wave w's
-    # error sentinel HAS a prior event and the example self-join emits a row
-    # that walks the whole chain). Each wave carries one error + one
-    # purchase row for entity -1, so every watermarked branch (any-event ×2,
-    # errors, purchases) advances every wave. 3 waves suffice: wave 1 lifts
-    # the source watermark past max_t + 3·horizon, wave 2's batch runs with
-    # that watermark and flushes every real probe through the chain (value-
-    # based watermark propagation crosses all six operators within one
-    # batch), wave 3 closes the groups wave 2 released. Waves 2+ also flow
-    # end-to-end themselves (wave w-1 is wave w's in-horizon prior event).
-    sentinel_base = max_t + timedelta(days=3 * horizon_days + 1)
+    # Sentinel waves: past max_t + horizon (the join's watermark lag), 6h
+    # apart. Each wave carries one error + one purchase row for entity -1,
+    # so both watermarked sides (errors, all events) advance every wave.
+    # Wave 0 lifts the source watermark past max_t + horizon; wave 1's batch
+    # runs with that watermark, so the join's output watermark passes every
+    # real probe and the aggregate emits them all in that batch. Two waves
+    # therefore suffice; ``waves`` defaults to 3, one spare.
+    sentinel_base = max_t + timedelta(days=horizon_days + 1)
     sentinel_cut = max_t + timedelta(hours=1, minutes=30)  # > any real label time
     for wave in range(skip_waves, waves):
         wts = sentinel_base + timedelta(hours=6 * wave)
@@ -171,88 +171,54 @@ def stage_replay(
 def build_pipeline_stream(
     stream: DataFrame, horizon_days: int, label_delay_hours: int = 1
 ) -> DataFrame:
-    """Assemble the six-operator chain over a raw ``(user_id, ts, event_type,
+    """Assemble the two-operator query over a raw ``(user_id, ts, event_type,
     value)`` event stream (``ts`` must be TIMESTAMP — EventTimeWatermark
     rejects NTZ); returns the unstarted streaming DataFrame."""
-    h = f"INTERVAL {horizon_days} DAYS"
-
-    # --- stage 1: examples = self interval join + arg-max agg (W1+P3) ------
-    # The current-event side only ever emits on LOSS rows (the post-agg
-    # filter), so push that filter to the source: the join buffers and the
-    # agg groups only error events. The prior side must stay all-events —
-    # "previous row" ranges over every event type.
+    delay = f"INTERVAL {label_delay_hours} HOURS"
+    # Probes are the error events (only they can be examples); the band side
+    # is every event, since "previous row" ranges over all event types.
     cur = (
         stream.filter(F.col("event_type") == LOSS)
-        .select(
-            F.col("user_id").alias("e_entity"),
-            F.col("ts").alias("e_ts"),
-        )
+        .select(F.col("user_id").alias("e_entity"), F.col("ts").alias("e_ts"))
         .withWatermark("e_ts", "0 seconds")
     )
-    pri = stream.select(
+    band = stream.select(
         F.col("user_id").alias("q_entity"),
         F.col("ts").alias("q_ts"),
         F.col("event_type").alias("q_type"),
+        F.col("value").cast("decimal(18,2)").alias("q_value"),
     ).withWatermark("q_ts", "0 seconds")
-    j_ex = cur.join(
-        pri,
-        F.expr(f"e_entity = q_entity AND q_ts < e_ts AND q_ts > e_ts - {h}"),
+    joined = cur.join(
+        band,
+        F.expr(
+            f"e_entity = q_entity AND q_ts > e_ts - INTERVAL {horizon_days} DAYS "
+            f"AND q_ts <= e_ts + {delay}"
+        ),
         "inner",
     )
-    # arg-max by q_ts = the previous row; q_ts enters the aggregate as a
-    # plain double so the agg sees exactly ONE event-time column (e_ts).
-    prev = (
-        j_ex.groupBy("e_entity", "e_ts")
-        .agg(
-            F.max(
-                F.struct(F.col("q_ts").cast("double").alias("o"), F.col("q_type").alias("t"))
-            ).alias("__prev")
-        )
+    q_ts, e_ts = F.col("q_ts"), F.col("e_ts")
+    is_loss = F.col("q_type") == LOSS
+    # k error rows tied at (e_entity, e_ts) are k probe copies: every band
+    # row joins each copy, and the tie matches itself k·k times, so SUM and
+    # COUNT are divided by k = sqrt(that self-match count).
+    agg = joined.groupBy("e_entity", "e_ts").agg(
+        # arg-max by q_ts = the previous row; q_ts enters the aggregate as a
+        # plain double so the agg sees exactly ONE event-time column (e_ts).
+        F.max(
+            F.when(
+                q_ts < e_ts,
+                F.struct(q_ts.cast("double").alias("o"), F.col("q_type").alias("t")),
+            )
+        ).alias("__prev"),
+        F.sum(F.when(is_loss & (q_ts <= e_ts), F.col("q_value"))).alias("__loss"),
+        F.count(F.when(F.col("q_type") == TARGET, 1)).alias("__c"),
+        F.sqrt(F.count(F.when(is_loss & (q_ts == e_ts), 1))).cast("long").alias("__k"),
     )
-    examples = prev.filter(F.col("__prev.t") == LOSS).select(
-        F.col("e_entity").alias("p_entity"),
-        F.col("e_ts").alias("p_ts"),
-        F.expr(f"e_ts + INTERVAL {label_delay_hours} HOURS").alias("p_label"),
+    return agg.filter(F.col("__prev.t") == LOSS).select(
+        F.col("e_entity").alias("_entity"),
+        F.col("e_ts").alias("_prediction_time"),
+        F.expr(f"e_ts + {delay}").alias("_label_time"),
+        (F.col("__loss") / F.col("__k")).cast("double").alias("loss_value"),
+        # LEFT as-of with no prior version is NULL, not 0
+        F.when(F.col("__c") > 0, F.expr("__c div __k")).alias("cnt"),
     )
-
-    # --- stage 2: as-of @ prediction time, fused with the feature history --
-    errs = stream.filter(F.col("event_type") == LOSS).select(
-        F.col("user_id").alias("v_entity"),
-        F.col("ts").alias("v_ts"),
-        F.col("value").alias("v_value"),
-    ).withWatermark("v_ts", "0 seconds")
-    j1 = examples.join(
-        errs,
-        F.expr(f"p_entity = v_entity AND v_ts <= p_ts AND v_ts > p_ts - {h}"),
-        "leftOuter",
-    )
-    with_loss = j1.groupBy("p_entity", "p_ts", "p_label").agg(
-        F.sum(F.col("v_value").cast("decimal(18,2)")).cast("double").alias("loss_value")
-    )
-
-    # --- stage 3: as-of @ label time, fused with the target history --------
-    purch = stream.filter(F.col("event_type") == TARGET).select(
-        F.col("user_id").alias("w_entity"),
-        F.col("ts").alias("w_ts"),
-    ).withWatermark("w_ts", "0 seconds")
-    j2 = with_loss.join(
-        purch,
-        F.expr(
-            f"p_entity = w_entity AND w_ts <= p_ts + INTERVAL {label_delay_hours} HOURS "
-            f"AND w_ts > p_ts - {h}"
-        ),
-        "leftOuter",
-    )
-    final = (
-        j2.groupBy("p_entity", "p_ts", "p_label", "loss_value")
-        .agg(F.count("w_entity").alias("__c"))
-        .select(
-            F.col("p_entity").alias("_entity"),
-            F.col("p_ts").alias("_prediction_time"),
-            F.col("p_label").alias("_label_time"),
-            "loss_value",
-            # LEFT as-of with no prior version is NULL, not 0
-            F.when(F.col("__c") > 0, F.col("__c")).alias("cnt"),
-        )
-    )
-    return final

@@ -12,10 +12,10 @@ new events arrive"), done watermark-correctly:
   it is folded into the per-key running aggregate IN EVENT-TIME ORDER and
   one version row ``(key, _change_time, value)`` is emitted per distinct
   event time (ties collapse, matching the batch RANGE frame);
-- the running aggregate carries exact decimal arithmetic (quantized like
-  Spark's ``CAST(x AS DECIMAL(18,2))``) so the emitted doubles are
-  bit-identical to the batch history — the stream CONVERGES to
-  ``version_history`` exactly, row for row.
+- the running aggregate carries exact decimal arithmetic (the values are
+  cast to ``DECIMAL(18,2)`` in Spark, as in the batch history) so the
+  emitted doubles are bit-identical to the batch history — the stream
+  CONVERGES to ``version_history`` exactly, row for row.
 
 State per key is O(watermark window), not O(history): emitted events are
 folded into a single running value and dropped from the buffer.
@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import pickle
 from collections.abc import Iterator
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import Decimal
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -48,7 +48,6 @@ from pyspark.sql.types import (
 from flink_example_spark.streaming.staging import drain_to_table, read_chunks
 
 _STATE_SCHEMA = StructType([StructField("pkl", BinaryType(), True)])
-_Q = Decimal("0.01")
 
 
 def incremental_version_history(
@@ -85,15 +84,12 @@ def incremental_version_history(
         ]
     )
 
-    cols = [
+    v = F.col(value_col) if agg == "sum" else F.lit(1)
+    src = events.select(
         F.col(key).alias("_k"),
         F.col(time_col).cast("timestamp").alias("_t"),
-    ]
-    if agg == "sum":
-        cols.append(F.col(value_col).cast("double").alias("_v"))
-    else:
-        cols.append(F.lit(1.0).alias("_v"))
-    src = events.select(*cols).withWatermark("_t", watermark_delay)
+        v.cast("decimal(18,2)").alias("_v"),
+    ).withWatermark("_t", watermark_delay)
 
     def process(
         k: tuple[Any, ...],
@@ -124,12 +120,7 @@ def incremental_version_history(
             while i < len(ready):
                 t = ready[i][0]
                 while i < len(ready) and ready[i][0] == t:
-                    if agg == "sum":
-                        # mirror Spark's CAST(double AS DECIMAL(18,2)):
-                        # shortest-repr decimal, HALF_UP to 2 places
-                        cum += Decimal(repr(ready[i][1])).quantize(_Q, ROUND_HALF_UP)
-                    else:
-                        cum += 1
+                    cum += ready[i][1]
                     i += 1
                 val = float(cum) if agg == "sum" else int(cum)
                 out_rows.append((k[0], t, val))

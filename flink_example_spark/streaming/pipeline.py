@@ -23,7 +23,7 @@ partitions).
 from __future__ import annotations
 
 import os
-import uuid
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,10 +46,7 @@ def _read_batches(spark: SparkSession, outdir: str) -> DataFrame:
 def _staged_dir(src_file: str) -> str:
     """File-stream sources need a *directory*; stage the (read-only) harness
     parquet file into a temp dir via symlink."""
-    import os
-
-    d = f"/tmp/stream_src_{uuid.uuid4().hex[:8]}"
-    os.makedirs(d, exist_ok=True)
+    d = tempfile.mkdtemp(prefix="stream_src_")
     os.symlink(src_file, os.path.join(d, os.path.basename(src_file)))
     return d
 

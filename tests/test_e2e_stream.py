@@ -32,10 +32,10 @@ def test_e2e_chunks_fast_path_identical(spark):
     assert fast == two
 
 
-def test_e2e_is_one_streaming_query_with_six_stateful_ops(spark):
+def test_e2e_is_one_streaming_query_with_two_stateful_ops(spark):
     """Structural pin: the assembled plan is ONE streaming DataFrame whose
-    analyzed plan chains 3 stream-stream joins + 3 streaming aggregations —
-    no foreachBatch, no intermediate materialization."""
+    analyzed plan is 1 stream-stream join + 1 streaming aggregation — no
+    foreachBatch, no intermediate materialization."""
     from flink_example_spark.streaming.e2e import build_pipeline_stream
     from flink_example_spark.tables import load_table
 
@@ -52,13 +52,13 @@ def test_e2e_is_one_streaming_query_with_six_stateful_ops(spark):
     final = build_pipeline_stream(stream, horizon_days=30)
     assert final.isStreaming
     plan = final._jdf.queryExecution().analyzed().toString()
-    assert plan.count("Join ") == 3
-    assert plan.count("Aggregate ") == 3
-    assert plan.count("EventTimeWatermark ") == 4  # cur, prior, errors, purchases
+    assert plan.count("Join ") == 1
+    assert plan.count("Aggregate ") == 1
+    assert plan.count("EventTimeWatermark ") == 2  # errors, all events
 
 
 def test_e2e_checkpoint_recovery(spark, tmp_path):
-    """Exactly-once restartability of the six-operator chain: run the replay
+    """Exactly-once restartability of the two-operator query: run the replay
     with only the first half of the data staged, drain it (availableNow),
     then stage the remaining chunks + sentinel waves and RESTART from the
     same checkpoint into the same parquet sink. The restarted query resumes
@@ -127,3 +127,36 @@ def test_e2e_checkpoint_recovery(spark, tmp_path):
     # the first run alone must NOT have produced the full result (the
     # restart really continued work rather than redoing a finished job)
     assert interim < batch.count()
+
+
+def test_e2e_tied_errors_count_each_event_once(spark, tmp_path):
+    """Two error events of one entity at the same instant are one probe,
+    and every event in its band counts once in ``loss_value`` and ``cnt``
+    (the join puts one copy of the probe per tied error on the probe
+    side; the aggregate must not count the band rows once per copy)."""
+    from datetime import datetime as D
+
+    import pandas as pd
+
+    from flink_example_spark.streaming.e2e import run_streaming_pipeline_e2e
+
+    rows = [
+        (1, D(2024, 1, 1, 10), 1, "error", 1.0),
+        (2, D(2024, 1, 1, 11), 1, "error", 2.0),
+        (3, D(2024, 1, 1, 11), 1, "error", 3.0),
+        (4, D(2024, 1, 1, 11, 10), 1, "purchase", 0.0),
+        (5, D(2024, 1, 1, 11, 20), 1, "purchase", 0.0),
+        (6, D(2024, 1, 1, 10), 2, "error", 1.5),
+        (7, D(2024, 1, 1, 12), 2, "error", 2.5),
+        (8, D(2024, 1, 1, 12), 2, "error", 0.25),
+        (9, D(2024, 1, 1, 12), 2, "error", 0.1),
+    ]
+    pd.DataFrame(
+        rows, columns=["event_id", "ts", "user_id", "event_type", "value"]
+    ).to_parquet(tmp_path / "events.parquet", index=False)
+
+    streamed = rows_set(run_streaming_pipeline_e2e(spark, str(tmp_path)))
+    assert streamed == {
+        (1, D(2024, 1, 1, 11), D(2024, 1, 1, 12), 6.0, 2),
+        (2, D(2024, 1, 1, 12), D(2024, 1, 1, 13), 4.35, None),
+    }

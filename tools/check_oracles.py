@@ -39,7 +39,7 @@ TABLES = (
 # ~100s of Spark-side wall plus their oracle runs). Driver keys are
 # never eligible (asserted in main).
 FAST_SKIP: set[str] = {
-    "streaming_asof_interval",      # 27.7s: the e2e replay minus `cnt`
+    "streaming_asof_interval",      # 14.2s: the e2e replay minus `cnt`
     "streaming_interval_join",      # 15.2s
     "streaming_cep_funnel_ooo",     # 13.0s
     "streaming_bm25",               # 10.1s
