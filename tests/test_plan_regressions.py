@@ -1259,3 +1259,16 @@ def test_dyadic_quantiles_single_udaf_aggregation(spark):
     plan = physical(dyadic_quantiles(df, "g", "v", k=64))
     assert "partial_dyadic_hist64" in plan
     assert "Join" not in plan
+
+
+def test_backfill_pipeline_one_exchange_one_window(spark):
+    """The backfill pass is one scan, one shuffle on ``user_id``, one sort and
+    one window: the examples and both as-of lookups are frames of the same
+    window, not the three-scan, five-shuffle composed plan."""
+    from flink_example_spark.plans.events_demo import pipeline
+
+    plan = physical(pipeline(spark, SF))
+    assert plan.count("Exchange") == 1
+    assert plan.count("Sort [") == 1
+    assert plan.count("Window [") == 1
+    assert plan.count("FileScan parquet") == 1
