@@ -13,6 +13,10 @@ Build chain: the JDK (required by Spark itself) compiles
 cached next to the sources and rebuilt when any source is newer.
 Registration is runtime-only (``ADD JAR`` + ``registerJavaUDAF``), so
 it works on ANY running session — including the driver's vanilla one.
+
+The backfill's per-entity fold (``fes.BackfillFold``, a
+``mapPartitions`` function) builds with javac alone into a jar of its
+own, so a cold backfill does not wait on the Scala compiler.
 """
 
 from __future__ import annotations
@@ -23,6 +27,9 @@ import subprocess
 
 _SRC_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "src")
 _JAR = os.path.join(_SRC_DIR, "fes_udaf.jar")
+# The backfill fold builds alone (javac only) into its own jar.
+_FOLD_SOURCES = ("BackfillFold.java",)
+_FOLD_JAR = os.path.join(_SRC_DIR, "fes_fold.jar")
 _KS = (8, 16, 32, 64, 128)
 _REGISTERED: set = set()
 
@@ -45,28 +52,37 @@ def _jar_list() -> list[str]:
     )
 
 
+def _sources(ext: str, fold: bool) -> list[str]:
+    """The ``fes`` sources with extension ``ext``: the fold's own, or the rest."""
+    fes_dir = os.path.join(_SRC_DIR, "fes")
+    return [
+        os.path.join(fes_dir, f)
+        for f in sorted(os.listdir(fes_dir))
+        if f.endswith(ext) and (f in _FOLD_SOURCES) == fold
+    ]
+
+
 def ensure_jar() -> str:
     """Compile the Java aggregates — plus the Scala typed (zero-copy
     buffer) twins when the pyspark-bundled scala-compiler jar is present
     — into one jar (cached; rebuilt when any source is newer). Raises a
     clear error when no JDK compiler is available (runtime-only JREs);
     a Scala compile failure is non-fatal (the UDAF forms remain)."""
-    fes_dir = os.path.join(_SRC_DIR, "fes")
-    src_files = [
-        os.path.join(fes_dir, f)
-        for f in sorted(os.listdir(fes_dir))
-        if f.endswith(".java")
-    ]
-    scala_files = [
-        os.path.join(fes_dir, f)
-        for f in sorted(os.listdir(fes_dir))
-        if f.endswith(".scala")
-    ]
-    if os.path.exists(_JAR) and all(
-        os.path.getmtime(_JAR) >= os.path.getmtime(s)
+    return _build(_JAR, _sources(".java", False), _sources(".scala", False))
+
+
+def ensure_fold_jar() -> str:
+    """Compile the backfill fold into its own jar with javac alone, so a
+    cold backfill does not wait on the Scala compiler."""
+    return _build(_FOLD_JAR, _sources(".java", True), [])
+
+
+def _build(dest: str, src_files: list[str], scala_files: list[str]) -> str:
+    if os.path.exists(dest) and all(
+        os.path.getmtime(dest) >= os.path.getmtime(s)
         for s in src_files + scala_files
     ):
-        return _JAR
+        return dest
     javac = shutil.which("javac") or os.path.join(
         os.environ.get("JAVA_HOME", ""), "bin", "javac"
     )
@@ -75,19 +91,21 @@ def ensure_jar() -> str:
     )
     if not (javac and os.path.exists(javac)):
         raise RuntimeError(
-            "JVM aggregates need a JDK compiler (javac); found none. "
-            "Use kmv_distinct(method='window'|'merge') instead."
+            "JVM functions need a JDK compiler (javac); found none. "
+            "kmv_distinct(method='window'|'merge') runs without one."
         )
     # Compile into a per-process temp dir (-d) and jar from THERE: two
     # drivers compiling concurrently must not share .class files or the
     # tmp jar path, and a fresh dir can never pack stale .class files
     # from removed/renamed sources. os.replace keeps the publish atomic.
+    # The sources are UTF-8 whatever the locale says.
     import tempfile
 
     build = tempfile.mkdtemp(prefix="fes_udaf_")
     try:
         subprocess.run(
-            [javac, "-cp", _pyspark_jars(), "-d", build, *src_files],
+            [javac, "-encoding", "UTF-8", "-cp", _pyspark_jars(), "-d", build,
+             *src_files],
             check=True,
             capture_output=True,
         )
@@ -104,6 +122,7 @@ def ensure_jar() -> str:
                 subprocess.run(
                     [
                         java_bin, "-cp", cp, "scala.tools.nsc.Main",
+                        "-encoding", "UTF-8",
                         "-classpath", cp, "-d", build, *scala_files,
                     ],
                     check=True,
@@ -116,18 +135,18 @@ def ensure_jar() -> str:
         # destination: os.replace across filesystems (mkdtemp is often
         # tmpfs) raises EXDEV and would not be atomic anyway
         # (ADVICE-r13). Same-dir replace is always same-fs + atomic.
-        tmp = os.path.join(build, "fes_udaf.jar")
+        tmp = os.path.join(build, os.path.basename(dest))
         subprocess.run(
             [jar, "cf", tmp, "-C", build, "fes"],
             check=True,
             capture_output=True,
         )
-        stage = f"{_JAR}.{os.getpid()}.tmp"
+        stage = f"{dest}.{os.getpid()}.tmp"
         shutil.copyfile(tmp, stage)
-        os.replace(stage, _JAR)
+        os.replace(stage, dest)
     finally:
         shutil.rmtree(build, ignore_errors=True)
-    return _JAR
+    return dest
 
 
 def typed_available() -> bool:
@@ -142,6 +161,40 @@ def typed_available() -> bool:
         return False
 
 
+def _load_class(spark, name: str):
+    """The class ``name`` from a jar this session added (ADD JAR)."""
+    try:
+        loader = spark._jvm.org.apache.spark.util.Utils.getContextOrSparkClassLoader()
+        return loader.loadClass(name)
+    except Exception:
+        return (
+            spark._jsparkSession.sharedState().jarClassLoader().loadClass(name)
+        )
+
+
+def backfill_fold(df, label_delay_micros: int):
+    """``fes.BackfillFold.apply(df, label_delay_micros)``: the examples of
+    ``df`` with their features, one row each (BackfillFold.java). The
+    fold's jar is added once per session."""
+    from pyspark.sql import DataFrame
+
+    spark = df.sparkSession
+    key = (spark.sparkContext.applicationId, "BackfillFold")
+    if key not in _REGISTERED:
+        spark.sql(f"ADD JAR '{ensure_fold_jar()}'")
+        _REGISTERED.add(key)
+    jvm = spark._jvm
+    gw = spark.sparkContext._gateway
+    argt = gw.new_array(jvm.java.lang.Class, 2)
+    argt[0] = jvm.java.lang.Class.forName("org.apache.spark.sql.Dataset")
+    argt[1] = jvm.java.lang.Long.TYPE
+    args = gw.new_array(jvm.java.lang.Object, 2)
+    args[0] = df._jdf
+    args[1] = label_delay_micros
+    apply = _load_class(spark, "fes.BackfillFold").getMethod("apply", argt)
+    return DataFrame(apply.invoke(None, args), spark)
+
+
 def _register_scala(spark, method: str, name: str, *ks: int) -> None:
     """Invoke ``fes.ScalaReg.<method>(name, *ks)`` through the
     session's ADD JAR classloader (py4j reflection): registers the
@@ -152,15 +205,7 @@ def _register_scala(spark, method: str, name: str, *ks: int) -> None:
     relies on."""
     jvm = spark._jvm
     gw = spark.sparkContext._gateway
-    try:
-        loader = jvm.org.apache.spark.util.Utils.getContextOrSparkClassLoader()
-        cls = loader.loadClass("fes.ScalaReg")
-    except Exception:
-        cls = (
-            spark._jsparkSession.sharedState()
-            .jarClassLoader()
-            .loadClass("fes.ScalaReg")
-        )
+    cls = _load_class(spark, "fes.ScalaReg")
     argt = gw.new_array(jvm.java.lang.Class, 1 + len(ks))
     argt[0] = jvm.java.lang.Class.forName("java.lang.String")
     for i in range(len(ks)):

@@ -13,20 +13,22 @@ The pieces (App.java:47, 52, 64-77, 200-233) stay callable on their own:
 ``examples`` (W1 + P3, label 1 h later, F2), composed by
 ``plans.training.training_examples`` (J1 + J2).
 
-``pipeline`` runs all of it as ONE window over the log, ``PARTITION BY
-user_id ORDER BY ts``, with three frames. Both histories are running
-aggregates of the log the examples come from, and an inclusive as-of join
-against a running aggregate is that aggregate over a RANGE frame ending at
-the probe instant (the RANGE frame takes tied rows in, like ``<=``):
+``pipeline`` runs all of it as ONE per-entity fold over the log. Both
+histories are running aggregates of the log the examples come from, and an
+inclusive as-of join against a running aggregate is that aggregate over
+the entity's rows up to and including the probe instant. So the log is
+shuffled on ``user_id``, sorted on ``user_id`` alone, and
+``fes.BackfillFold`` (``jvm/src/fes/BackfillFold.java``) buffers each
+entity's rows, orders them by ``(ts, event_id)`` and walks them once:
 
-- ``ROWS 1 PRECEDING``: COUNT of errors = 2 finds the examples;
-- ``RANGE UNBOUNDED PRECEDING .. CURRENT ROW``: SUM of error values is the
-  feature as of ``_prediction_time``;
-- ``RANGE UNBOUNDED PRECEDING .. INTERVAL 1 HOUR FOLLOWING``: COUNT of
-  purchases is the target as of ``_label_time``.
+- an error whose predecessor is an error is an example;
+- a forward pointer sums error values up to the example's ``ts``: the
+  feature as of ``_prediction_time``, exact in DECIMAL;
+- a second one counts purchases up to ``ts`` + 1 h: the target as of
+  ``_label_time``.
 
-So one scan, one shuffle on ``user_id``, one sort and one window, where
-the composed form plans 3 scans and 5 of each of the others.
+So one scan, one shuffle, one sort on one key and no window, where the
+composed form plans 3 scans and 5 exchanges, sorts and windows.
 
 All timestamps are cast TIMESTAMP_NTZ and the session timezone pinned UTC so
 results hash identically to the DuckDB oracle.
@@ -37,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_example_spark.jvm import backfill_fold
 from flink_example_spark.operators.versioned import version_history
 from flink_example_spark.plans.training import consecutive_loss_examples
 from flink_example_spark.session import tune
@@ -82,37 +85,41 @@ def examples(events: DataFrame) -> DataFrame:
     )
 
 
-_OVER = "OVER (PARTITION BY user_id ORDER BY ts {})"
-_LAST_TWO = _OVER.format("ROWS BETWEEN 1 PRECEDING AND CURRENT ROW")
-_TO_PREDICTION = _OVER.format("RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
-_TO_LABEL = _OVER.format(
-    f"RANGE BETWEEN UNBOUNDED PRECEDING AND INTERVAL {LABEL_DELAY_HOURS} HOURS FOLLOWING"
+# Event kinds as the fold reads them (fes.BackfillFold.ERROR / PURCHASE).
+_KIND = (
+    f"CAST(CASE event_type WHEN '{LOSS_TYPE}' THEN 1 WHEN '{TARGET_TYPE}' THEN 2 END"
+    " AS TINYINT)"
 )
-_LOSS = f"event_type = '{LOSS_TYPE}'"
-_TARGET = f"event_type = '{TARGET_TYPE}'"
 
 
 def pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship query: full point-in-time-correct training-example generation.
 
     Equal to ``training_examples(examples(ev), feature_history(ev),
-    target_history(ev))``, computed by the one window of the module
-    docstring. NULL ``ts`` rows sort first and are peers of each other, so
-    they fall inside every RANGE frame of a row with a known ``ts``, as they
-    fall inside the running aggregates of the histories. A history has no
-    version at a NULL time: an example with a NULL ``ts`` gets NULL
-    features, and ``cnt`` is NULL until a purchase with a known ``ts`` is at
-    or before the label time.
+    target_history(ev))``, computed by the one fold of the module
+    docstring. An entity's rows are taken in ``(ts, event_id)`` order, NULLs
+    first, so NULL ``ts`` rows fall inside the feature and target frames of
+    every row with a known ``ts``, as they fall inside the running
+    aggregates of the histories. A history has no version at a NULL time:
+    an example with a NULL ``ts`` gets NULL features, and ``cnt`` is NULL
+    until a purchase with a known ``ts`` is at or before the label time.
     """
-    ev = load_events(spark, sf_dir)
-    return ev.selectExpr(
+    # ts as µs since the epoch in the session zone, which load_events pins to
+    # UTC; the last projection turns it back.
+    ev = load_events(spark, sf_dir).selectExpr(
+        "user_id",
+        "unix_micros(CAST(ts AS TIMESTAMP)) AS ts",
+        "CAST(event_id AS BIGINT) AS event_id",
+        f"{_KIND} AS kind",
+        f"CASE WHEN event_type = '{LOSS_TYPE}' THEN CAST(value AS DECIMAL(18,2)) END AS value",
+    )
+    clustered = ev.repartition("user_id").sortWithinPartitions("user_id")
+    folded = backfill_fold(clustered, LABEL_DELAY_HOURS * 3600 * 10**6)
+    prediction_time = "CAST(timestamp_micros(ts) AS TIMESTAMP_NTZ)"
+    return folded.selectExpr(
         "user_id AS _entity",
-        "ts AS _prediction_time",
-        f"timestampadd(HOUR, {LABEL_DELAY_HOURS}, ts) AS _label_time",
-        f"count(CASE WHEN {_LOSS} THEN 1 END) {_LAST_TWO} AS __losses",
-        f"""CASE WHEN ts IS NOT NULL THEN CAST(
-              sum(CASE WHEN {_LOSS} THEN CAST(value AS DECIMAL(18,2)) END) {_TO_PREDICTION}
-            AS DOUBLE) END AS loss_value""",
-        f"""CASE WHEN count(CASE WHEN {_TARGET} AND ts IS NOT NULL THEN 1 END) {_TO_LABEL} > 0
-            THEN count(CASE WHEN {_TARGET} THEN 1 END) {_TO_LABEL} END AS cnt""",
-    ).filter("__losses = 2").drop("__losses")
+        f"{prediction_time} AS _prediction_time",
+        f"timestampadd(HOUR, {LABEL_DELAY_HOURS}, {prediction_time}) AS _label_time",
+        "CAST(loss AS DOUBLE) AS loss_value",
+        "cnt",
+    )

@@ -4,7 +4,10 @@ stage-level goldens from FIXTURES.md."""
 
 from __future__ import annotations
 
+import random
+import re
 from collections import Counter
+from contextlib import contextmanager
 from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
@@ -165,14 +168,62 @@ _NULL_LOG = _EDGE_LOG + [
 ]
 
 
+# Sums past 2^53 and past 2^63 cents: the fold must add exactly.
+_BIG_LOG = [(_at(i), 1, "error", 9.0e15) for i in range(12)] + [
+    (_at(0), 2, "error", 0.07),
+    (_at(1), 2, "error", 1.0e15),
+]
+
+# One entity with 5,000 events, written in shuffled order: the fold's
+# buffer grows and it has to order what it reads. Instants are distinct.
+_rng = random.Random(8)
+_HOT_LOG = [
+    (_at(0, 1000 * i), 9, _rng.choice(("error", "error", "purchase", "click")),
+     _rng.randrange(100, 100_000) / 100)
+    for i in range(5000)
+]
+_rng.shuffle(_HOT_LOG)
+
+# An error and a click of one user share an instant; the fold orders them
+# by event_id (the position in this list). User 1: error, click, error, so
+# no example. User 2: error, error, click, so one example at _at(5).
+_TIE_LOG = [
+    (_at(0), 1, "error", 1.0),
+    (_at(5), 1, "click", 0.0),
+    (_at(5), 1, "error", 2.0),
+    (_at(0), 2, "error", 1.0),
+    (_at(5), 2, "error", 2.0),
+    (_at(5), 2, "click", 0.0),
+]
+
+
 def _write_events(spark, tmp_path, log):
+    """The log as ``events.parquet`` with ``event_id`` = position in ``log``,
+    written newest row first so that no path can lean on the file order."""
     rows = [(i, ts, u, kind, v, None) for i, (ts, u, kind, v) in enumerate(log)]
     path = str(tmp_path / "events.parquet")
-    spark.createDataFrame(rows, _EVENTS_SCHEMA).coalesce(1).write.parquet(path)
+    spark.createDataFrame(rows[::-1], _EVENTS_SCHEMA).coalesce(1).write.parquet(path)
     return str(tmp_path), path
 
 
-def _fused_and_composed(spark, sf_dir):
+@contextmanager
+def _shuffle_partitions(spark, n):
+    """``n`` shuffle partitions, none coalesced, for the calls inside
+    (``load_events`` re-applies the session's runtime confs)."""
+    from flink_example_spark import session
+
+    saved = dict(session.RUNTIME_CONF)
+    session.RUNTIME_CONF["spark.sql.shuffle.partitions"] = str(n)
+    session.RUNTIME_CONF["spark.sql.adaptive.coalescePartitions.enabled"] = "false"
+    try:
+        yield
+    finally:
+        session.RUNTIME_CONF.clear()
+        session.RUNTIME_CONF.update(saved)
+        session.tune(spark)
+
+
+def _fused_and_composed(spark, sf_dir, partitions):
     from flink_example_spark.plans.events_demo import (
         examples,
         feature_history,
@@ -186,41 +237,67 @@ def _fused_and_composed(spark, sf_dir):
     fused = pipeline(spark, sf_dir)
     composed = training_examples(examples(ev), feature_history(ev), target_history(ev))
     assert fused.dtypes == composed.dtypes
-    return Counter(map(tuple, fused.collect())), Counter(map(tuple, composed.collect()))
+    rows = Counter(map(tuple, fused.collect()))
+    plan = fused._jdf.queryExecution().executedPlan().toString()
+    one = "SinglePartition" if partitions == 1 else rf"hashpartitioning\(user_id#\d+L?, {partitions}\)"
+    assert re.search(rf"Exchange {one}", plan)
+    return rows, Counter(map(tuple, composed.collect()))
 
 
 def test_fused_backfill_matches_composed_asof(spark, tmp_path):
-    """``events_demo.pipeline`` (one window, three frames) returns the same
+    """``events_demo.pipeline`` (the per-entity fold) returns the same
     multiset as the composed as-of joins over the two version histories and
-    as the DuckDB ``training_examples`` twin, on a log of as-of edge cases.
+    as the DuckDB ``training_examples`` twin, on logs of as-of edge cases, at
+    1, 7 and 32 shuffle partitions.
 
-    A second log adds NULL ``user_id`` and NULL ``ts`` rows; there only
-    fused == composed is asserted. DuckDB's ASOF join never matches a NULL
-    key and orders NULL times differently from Spark's window, and settling
-    those semantics is ROADMAP item 9, out of scope here."""
+    The NULL log adds NULL ``user_id`` and NULL ``ts`` rows and the big log
+    sums past 2^53 and 2^63 cents; there only fused == composed is asserted.
+    DuckDB's ASOF join never matches a NULL key and orders NULL times
+    differently from Spark (ROADMAP item 9), and its DECIMAL to DOUBLE cast
+    is not correctly rounded. On the tie log the composed path and the twin
+    order an error tied with a click arbitrarily (ROADMAP item 2), so only
+    the fold's answer is pinned there, at every partition count."""
     import duckdb
 
     import __spark_entry__
 
-    sf_dir, path = _write_events(spark, tmp_path / "edge", _EDGE_LOG)
-    fused, composed = _fused_and_composed(spark, sf_dir)
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}/*.parquet')")
-    twin = Counter(con.execute(__spark_entry__._all_oracles()["training_examples"]).fetchall())
-    assert fused == composed == twin
+    twin_sql = __spark_entry__._all_oracles()["training_examples"]
+    logs, twins = {}, {}
+    for name, log in (("edge", _EDGE_LOG), ("nulls", _NULL_LOG), ("big", _BIG_LOG),
+                      ("hot", _HOT_LOG), ("ties", _TIE_LOG)):
+        logs[name], path = _write_events(spark, tmp_path / name, log)
+        if name in ("edge", "hot"):
+            con = duckdb.connect()
+            con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}/*.parquet')")
+            twins[name] = Counter(con.execute(twin_sql).fetchall())
     h = timedelta(hours=1)
-    assert fused[(1, _at(5), _at(5) + h, 0.3, 2)] == 1
-    assert fused[(2, _at(120), _at(120) + h, 6.0, 1)] == 2
-    assert fused[(2, _at(240), _at(240) + h, 15.0, 1)] == 1
-    assert fused[(3, _at(30), _at(30) + h, 4.0, None)] == 1
-    assert fused[(4, _at(1), _at(1) + h, 2.0, 1)] == 1
-    assert sum(fused.values()) == 6
+    for n in (1, 7, 32):
+        with _shuffle_partitions(spark, n):
+            fused, composed = _fused_and_composed(spark, logs["edge"], n)
+            assert fused == composed == twins["edge"]
+            assert fused[(1, _at(5), _at(5) + h, 0.3, 2)] == 1
+            assert fused[(2, _at(120), _at(120) + h, 6.0, 1)] == 2
+            assert fused[(2, _at(240), _at(240) + h, 15.0, 1)] == 1
+            assert fused[(3, _at(30), _at(30) + h, 4.0, None)] == 1
+            assert fused[(4, _at(1), _at(1) + h, 2.0, 1)] == 1
+            assert sum(fused.values()) == 6
 
-    sf_dir, _ = _write_events(spark, tmp_path / "nulls", _NULL_LOG)
-    fused, composed = _fused_and_composed(spark, sf_dir)
-    assert fused == composed
-    assert fused[(None, _at(5), _at(5) + h, 3.0, 1)] == 1
-    assert fused[(6, None, None, None, None)] == 1
-    assert fused[(6, _at(0), _at(0) + h, 7.0, None)] == 1
-    assert fused[(7, _at(5), _at(5) + h, 2.0, None)] == 1
-    assert fused[(7, _at(190), _at(190) + h, 4.0, 2)] == 1
+            fused, composed = _fused_and_composed(spark, logs["nulls"], n)
+            assert fused == composed
+            assert fused[(None, _at(5), _at(5) + h, 3.0, 1)] == 1
+            assert fused[(6, None, None, None, None)] == 1
+            assert fused[(6, _at(0), _at(0) + h, 7.0, None)] == 1
+            assert fused[(7, _at(5), _at(5) + h, 2.0, None)] == 1
+            assert fused[(7, _at(190), _at(190) + h, 4.0, 2)] == 1
+
+            fused, composed = _fused_and_composed(spark, logs["big"], n)
+            assert fused == composed
+            assert fused[(1, _at(11), _at(11) + h, 1.08e17, None)] == 1
+            assert fused[(2, _at(1), _at(1) + h, 1000000000000000.125, None)] == 1
+
+            fused, composed = _fused_and_composed(spark, logs["hot"], n)
+            assert fused == composed == twins["hot"]
+            assert sum(fused.values()) > 1000
+
+            fused, _ = _fused_and_composed(spark, logs["ties"], n)
+            assert fused == Counter({(2, _at(5), _at(5) + h, 3.0, None): 1})

@@ -3,6 +3,8 @@ must stay visible in the physical plan (SURVEY.md §4, PERF.md)."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -1261,14 +1263,17 @@ def test_dyadic_quantiles_single_udaf_aggregation(spark):
     assert "Join" not in plan
 
 
-def test_backfill_pipeline_one_exchange_one_window(spark):
-    """The backfill pass is one scan, one shuffle on ``user_id``, one sort and
-    one window: the examples and both as-of lookups are frames of the same
-    window, not the three-scan, five-shuffle composed plan."""
+def test_backfill_pipeline_one_exchange_one_sort_no_window(spark):
+    """The backfill pass is one scan, one shuffle on ``user_id``, one sort on
+    ``user_id`` alone and one per-entity fold: no window, and none of the
+    three-scan, five-shuffle composed plan."""
     from flink_example_spark.plans.events_demo import pipeline
 
     plan = physical(pipeline(spark, SF))
-    assert plan.count("Exchange") == 1
-    assert plan.count("Sort [") == 1
-    assert plan.count("Window [") == 1
     assert plan.count("FileScan parquet") == 1
+    assert plan.count("Exchange") == 1
+    assert plan.count("MapPartitions") == 1
+    assert plan.count("Window [") == 0
+    sort_keys = re.findall(r"Sort \[([^\]]*)\]", plan)
+    assert len(sort_keys) == 1
+    assert re.fullmatch(r"user_id#\d+L? ASC NULLS FIRST", sort_keys[0])

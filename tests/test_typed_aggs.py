@@ -16,6 +16,12 @@ UDAF forms used. These tests pin
 
 from __future__ import annotations
 
+import os
+import shutil
+import subprocess
+import sys
+import zipfile
+
 from pyspark.sql import functions as F
 
 from flink_example_spark import jvm as J
@@ -25,6 +31,32 @@ def test_typed_twins_built():
     """The jar must carry the Scala typed classes — a regression here
     means the bundled scala-compiler vanished or the compile broke."""
     assert J.typed_available()
+
+
+def test_jars_build_in_the_c_locale(tmp_path):
+    """The sources hold non-ASCII characters, so javac and scalac must read
+    them as UTF-8 whatever the locale. Under ``LC_ALL=C`` Python does not
+    coerce the child processes to a UTF-8 locale and both compilers would
+    fall back to US-ASCII."""
+    src = tmp_path / "src"
+    shutil.copytree(os.path.join(J._SRC_DIR, "fes"), src / "fes")
+    code = (
+        "from flink_example_spark import jvm\n"
+        f"jvm._SRC_DIR = {str(src)!r}\n"
+        f"jvm._JAR = {str(src / 'fes_udaf.jar')!r}\n"
+        f"jvm._FOLD_JAR = {str(src / 'fes_fold.jar')!r}\n"
+        "jvm.ensure_jar()\n"
+        "jvm.ensure_fold_jar()\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(J.__file__)))
+    env = {**os.environ, "LC_ALL": "C", "PYTHONPATH": root}
+    subprocess.run([sys.executable, "-c", code], env=env, check=True, timeout=600)
+    with zipfile.ZipFile(src / "fes_udaf.jar") as zf:
+        names = set(zf.namelist())
+    assert {"fes/DyadicHist.class", "fes/ScalaReg.class"} <= names
+    assert "fes/BackfillFold.class" not in names
+    with zipfile.ZipFile(src / "fes_fold.jar") as zf:
+        assert "fes/BackfillFold.class" in zf.namelist()
 
 
 def _plan(df) -> str:
