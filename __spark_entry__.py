@@ -7647,10 +7647,9 @@ DRIVER_KEYS = [
     # the slot showcases the streaming CDC net-change MERGE instead
     "streaming_cdc_apply",
     "streaming_session_windows",
-    # the standalone interval-join row moves to extras (the fused e2e
-    # pipeline runs an interval join under watermarks, keeping the
-    # class driver-exercised); the slot records the live PPJoin — the
-    # stateful prefix index with exactly-once pair emission
+    # the standalone interval-join row lives in extras; the slot records
+    # the live PPJoin — the stateful prefix index with exactly-once pair
+    # emission
     "streaming_ppjoin",
     # relational operator classes
     "q1_pricing_summary",

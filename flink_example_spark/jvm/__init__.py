@@ -14,9 +14,11 @@ cached next to the sources and rebuilt when any source is newer.
 Registration is runtime-only (``ADD JAR`` + ``registerJavaUDAF``), so
 it works on ANY running session — including the driver's vanilla one.
 
-The backfill's per-entity fold (``fes.BackfillFold``, a
-``mapPartitions`` function) builds with javac alone into a jar of its
-own, so a cold backfill does not wait on the Scala compiler.
+The temporal join's per-entity walk (``fes.EntityWalk``) and its two
+callers, the backfill's ``mapPartitions`` fold (``fes.BackfillFold``) and
+the stream's ``transformWithState`` processor (``fes.StreamFold``), build
+with javac alone into a jar of their own, so a cold backfill does not
+wait on the Scala compiler.
 """
 
 from __future__ import annotations
@@ -27,8 +29,8 @@ import subprocess
 
 _SRC_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "src")
 _JAR = os.path.join(_SRC_DIR, "fes_udaf.jar")
-# The backfill fold builds alone (javac only) into its own jar.
-_FOLD_SOURCES = ("BackfillFold.java",)
+# The walk and its two callers build alone (javac only) into their own jar.
+_FOLD_SOURCES = ("BackfillFold.java", "EntityWalk.java", "StreamFold.java")
 _FOLD_JAR = os.path.join(_SRC_DIR, "fes_fold.jar")
 _KS = (8, 16, 32, 64, 128)
 _REGISTERED: set = set()
@@ -72,8 +74,8 @@ def ensure_jar() -> str:
 
 
 def ensure_fold_jar() -> str:
-    """Compile the backfill fold into its own jar with javac alone, so a
-    cold backfill does not wait on the Scala compiler."""
+    """Compile the walk and its callers into their own jar with javac
+    alone, so a cold backfill does not wait on the Scala compiler."""
     return _build(_FOLD_JAR, _sources(".java", True), [])
 
 
@@ -174,12 +176,24 @@ def _load_class(spark, name: str):
 
 def backfill_fold(df, label_delay_micros: int):
     """``fes.BackfillFold.apply(df, label_delay_micros)``: the examples of
-    ``df`` with their features, one row each (BackfillFold.java). The
-    fold's jar is added once per session."""
+    ``df`` with their features, one row each (BackfillFold.java)."""
+    return _fold("fes.BackfillFold", df, label_delay_micros)
+
+
+def stream_fold(df, label_delay_micros: int):
+    """``fes.StreamFold.apply(df, label_delay_micros)``: the same examples
+    of the watermarked stream ``df``, each once its label frame is complete
+    (StreamFold.java)."""
+    return _fold("fes.StreamFold", df, label_delay_micros)
+
+
+def _fold(cls: str, df, label_delay_micros: int):
+    """``cls.apply(df, label_delay_micros)``; the fold jar is added once per
+    session."""
     from pyspark.sql import DataFrame
 
     spark = df.sparkSession
-    key = (spark.sparkContext.applicationId, "BackfillFold")
+    key = (spark.sparkContext.applicationId, "fold")
     if key not in _REGISTERED:
         spark.sql(f"ADD JAR '{ensure_fold_jar()}'")
         _REGISTERED.add(key)
@@ -191,7 +205,7 @@ def backfill_fold(df, label_delay_micros: int):
     args = gw.new_array(jvm.java.lang.Object, 2)
     args[0] = df._jdf
     args[1] = label_delay_micros
-    apply = _load_class(spark, "fes.BackfillFold").getMethod("apply", argt)
+    apply = _load_class(spark, cls).getMethod("apply", argt)
     return DataFrame(apply.invoke(None, args), spark)
 
 

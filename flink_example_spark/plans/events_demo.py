@@ -18,8 +18,9 @@ histories are running aggregates of the log the examples come from, and an
 inclusive as-of join against a running aggregate is that aggregate over
 the entity's rows up to and including the probe instant. So the log is
 shuffled on ``user_id``, sorted on ``user_id`` alone, and
-``fes.BackfillFold`` (``jvm/src/fes/BackfillFold.java``) buffers each
-entity's rows, orders them by ``(ts, event_id)`` and walks them once:
+``fes.BackfillFold`` (``jvm/src/fes/BackfillFold.java``) runs each entity
+through the walk ``fes.EntityWalk``, which buffers the entity's rows,
+orders them by ``(ts, event_id)`` and walks them once:
 
 - an error whose predecessor is an error is an example;
 - a forward pointer sums error values up to the example's ``ts``: the
@@ -85,11 +86,36 @@ def examples(events: DataFrame) -> DataFrame:
     )
 
 
-# Event kinds as the fold reads them (fes.BackfillFold.ERROR / PURCHASE).
+# Event kinds as the walk reads them (fes.EntityWalk.ERROR / PURCHASE).
 _KIND = (
     f"CAST(CASE event_type WHEN '{LOSS_TYPE}' THEN 1 WHEN '{TARGET_TYPE}' THEN 2 END"
     " AS TINYINT)"
 )
+
+
+def fold_input(events: DataFrame, *keep: str) -> DataFrame:
+    """The walk's input columns (``user_id``, ``ts`` as µs since the epoch
+    in the session zone, ``event_id``, kind, error value), then ``keep``."""
+    return events.selectExpr(
+        "user_id",
+        "unix_micros(CAST(ts AS TIMESTAMP)) AS micros",
+        "CAST(event_id AS BIGINT) AS event_id",
+        f"{_KIND} AS kind",
+        f"CASE WHEN event_type = '{LOSS_TYPE}' THEN CAST(value AS DECIMAL(18,2)) END AS value",
+        *keep,
+    )
+
+
+def fold_output(folded: DataFrame) -> DataFrame:
+    """The walk's output as training examples, ``ts`` back to TIMESTAMP_NTZ."""
+    prediction_time = "CAST(timestamp_micros(ts) AS TIMESTAMP_NTZ)"
+    return folded.selectExpr(
+        "user_id AS _entity",
+        f"{prediction_time} AS _prediction_time",
+        f"timestampadd(HOUR, {LABEL_DELAY_HOURS}, {prediction_time}) AS _label_time",
+        "CAST(loss AS DOUBLE) AS loss_value",
+        "cnt",
+    )
 
 
 def pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -104,22 +130,7 @@ def pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     an example with a NULL ``ts`` gets NULL features, and ``cnt`` is NULL
     until a purchase with a known ``ts`` is at or before the label time.
     """
-    # ts as µs since the epoch in the session zone, which load_events pins to
-    # UTC; the last projection turns it back.
-    ev = load_events(spark, sf_dir).selectExpr(
-        "user_id",
-        "unix_micros(CAST(ts AS TIMESTAMP)) AS ts",
-        "CAST(event_id AS BIGINT) AS event_id",
-        f"{_KIND} AS kind",
-        f"CASE WHEN event_type = '{LOSS_TYPE}' THEN CAST(value AS DECIMAL(18,2)) END AS value",
-    )
+    # load_events pins the session zone to UTC, so the µs round-trip exactly.
+    ev = fold_input(load_events(spark, sf_dir))
     clustered = ev.repartition("user_id").sortWithinPartitions("user_id")
-    folded = backfill_fold(clustered, LABEL_DELAY_HOURS * 3600 * 10**6)
-    prediction_time = "CAST(timestamp_micros(ts) AS TIMESTAMP_NTZ)"
-    return folded.selectExpr(
-        "user_id AS _entity",
-        f"{prediction_time} AS _prediction_time",
-        f"timestampadd(HOUR, {LABEL_DELAY_HOURS}, {prediction_time}) AS _label_time",
-        "CAST(loss AS DOUBLE) AS loss_value",
-        "cnt",
-    )
+    return fold_output(backfill_fold(clustered, LABEL_DELAY_HOURS * 3600 * 10**6))

@@ -31,8 +31,17 @@ RUNTIME_CONF = {
 }
 
 
+_TUNED: set = set()
+
+
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (driver-provided or ours)."""
+    """Apply runtime confs to an existing session (a caller's or ours),
+    once per application, so a conf scoped around a call (such as
+    ``shuffle_partitions``) holds inside it."""
+    app = spark.sparkContext.applicationId
+    if app in _TUNED:
+        return spark
+    _TUNED.add(app)
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
@@ -71,6 +80,32 @@ def get_spark(app_name: str = "flink-example-spark") -> SparkSession:
 
 
 @contextmanager
+def _scoped_conf(spark: SparkSession, key: str, value: str):
+    """``key`` set to ``value`` inside; the session's value (or its absence)
+    is restored on exit."""
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def rocksdb_state_store(spark: SparkSession):
+    """Start the streaming queries inside on the bundled RocksDB state
+    store, which ``transformWithState`` requires; other stateful queries
+    keep the session's provider. A query restarted from a checkpoint reads
+    its provider from the checkpoint."""
+    return _scoped_conf(
+        spark,
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+
+
 def shuffle_partitions(spark: SparkSession, n: int):
     """Temporarily lower spark.sql.shuffle.partitions — bounded streaming
     replays pay per-partition state-store overhead EVERY micro-batch, so a
@@ -78,9 +113,4 @@ def shuffle_partitions(spark: SparkSession, n: int):
     stream-stream interval join 34.7s → 22.6s at sf0.01). Restores the
     session value on exit; safe because each bounded replay starts a fresh
     query (no checkpoint partition-count compatibility concerns)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    return _scoped_conf(spark, "spark.sql.shuffle.partitions", str(n))

@@ -8,9 +8,9 @@ Reference mapping:
 - T3/T4 changelog→versioned table (AddWatermark.java) → unnecessary: version
   history is computed directly from event time (SURVEY.md §7.1)
 - J1/J2 temporal join → ``streaming/e2e.py``: ONE streaming query from the
-  raw events to training examples, each as-of fused with the history it
-  probes into an interval join + aggregate with state in the JVM; it
-  converges exactly to the batch result.
+  raw events to training examples, one ``transformWithState`` running the
+  batch backfill's per-entity walk up to the watermark; it converges
+  exactly to the batch result.
 
 ``stream_events`` is a file stream over the harness events parquet
 (maxFilesPerTrigger simulates arrival); production would swap in a

@@ -208,19 +208,12 @@ def _write_events(spark, tmp_path, log):
 
 @contextmanager
 def _shuffle_partitions(spark, n):
-    """``n`` shuffle partitions, none coalesced, for the calls inside
-    (``load_events`` re-applies the session's runtime confs)."""
-    from flink_example_spark import session
+    """``n`` shuffle partitions, none coalesced, for the calls inside."""
+    from flink_example_spark.session import _scoped_conf, shuffle_partitions
 
-    saved = dict(session.RUNTIME_CONF)
-    session.RUNTIME_CONF["spark.sql.shuffle.partitions"] = str(n)
-    session.RUNTIME_CONF["spark.sql.adaptive.coalescePartitions.enabled"] = "false"
-    try:
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    with shuffle_partitions(spark, n), _scoped_conf(spark, coalesce, "false"):
         yield
-    finally:
-        session.RUNTIME_CONF.clear()
-        session.RUNTIME_CONF.update(saved)
-        session.tune(spark)
 
 
 def _fused_and_composed(spark, sf_dir, partitions):

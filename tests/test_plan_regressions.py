@@ -1277,3 +1277,16 @@ def test_backfill_pipeline_one_exchange_one_sort_no_window(spark):
     sort_keys = re.findall(r"Sort \[([^\]]*)\]", plan)
     assert len(sort_keys) == 1
     assert re.fullmatch(r"user_id#\d+L? ASC NULLS FIRST", sort_keys[0])
+
+
+def test_shuffle_partitions_hold_around_the_backfill(spark):
+    """A partition count scoped with ``session.shuffle_partitions`` holds
+    through ``pipeline``: loading the events does not re-apply the
+    session's runtime confs."""
+    from flink_example_spark.plans.events_demo import pipeline
+    from flink_example_spark.session import shuffle_partitions
+
+    with shuffle_partitions(spark, 7):
+        plan = physical(pipeline(spark, SF))
+        assert re.search(r"hashpartitioning\(user_id#\d+L?, 7\)", plan)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
