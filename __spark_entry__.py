@@ -7894,13 +7894,16 @@ def _streaming_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "streaming_features_agg": run_streaming_features,
         "streaming_training_examples": _run_streaming_pipeline_e2e,
-        # the whole flagship graph (examples + both as-ofs, histories fused
-        # into one interval join + one aggregation) as ONE streaming query,
-        # all state JVM-side; converges exactly to batch training_examples
+        # the whole flagship graph (examples + both as-ofs) as ONE streaming
+        # query: one JVM transformWithState processor runs the backfill's
+        # per-entity walk (fes.EntityWalk) as the watermark passes each
+        # entity's rows; converges exactly to batch training_examples
         # → shares its oracle
         "streaming_pipeline_e2e": _run_streaming_pipeline_e2e,
-        # incremental feature-cache maintenance: converges exactly to the
-        # batch feature_history relation → shares its oracle
+        # incremental feature-cache maintenance: the same processor runs a
+        # version-history walk (fes.HistoryWalk) over the e2e replay;
+        # converges exactly to the batch feature_history relation → shares
+        # its oracle
         "streaming_incremental_history": run_incremental_feature_history,
         # dedup-on-ingest: running (content → min id, copies) aggregate;
         # converges exactly to batch exact_dedup → shares its oracle
@@ -8191,10 +8194,12 @@ def _run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_streaming_exact_dedup(spark, sf_dir)
 
 
+# The DECIMAL sum goes to DOUBLE through text: DuckDB's direct cast is not
+# correctly rounded past 2^53 cents, the text parse is (as Spark's cast).
 _FH_SQL = """
   SELECT DISTINCT user_id AS _entity, ts AS _change_time,
-         CAST(SUM(CAST(value AS DECIMAL(18,2)))
-              OVER (PARTITION BY user_id ORDER BY ts) AS DOUBLE) AS loss_value
+         CAST(CAST(SUM(CAST(value AS DECIMAL(18,2)))
+              OVER (PARTITION BY user_id ORDER BY ts) AS VARCHAR) AS DOUBLE) AS loss_value
   FROM events WHERE event_type = 'error'
 """
 

@@ -14,9 +14,10 @@ cached next to the sources and rebuilt when any source is newer.
 Registration is runtime-only (``ADD JAR`` + ``registerJavaUDAF``), so
 it works on ANY running session — including the driver's vanilla one.
 
-The temporal join's per-entity walk (``fes.EntityWalk``) and its two
+The temporal join's per-entity walk (``fes.EntityWalk``), its two
 callers, the backfill's ``mapPartitions`` fold (``fes.BackfillFold``) and
-the stream's ``transformWithState`` processor (``fes.StreamFold``), build
+the stream's ``transformWithState`` processor (``fes.StreamFold``), and the
+processor's second walk, the version history (``fes.HistoryWalk``), build
 with javac alone into a jar of their own, so a cold backfill does not
 wait on the Scala compiler.
 """
@@ -29,8 +30,10 @@ import subprocess
 
 _SRC_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "src")
 _JAR = os.path.join(_SRC_DIR, "fes_udaf.jar")
-# The walk and its two callers build alone (javac only) into their own jar.
-_FOLD_SOURCES = ("BackfillFold.java", "EntityWalk.java", "StreamFold.java")
+# The walks and their callers build alone (javac only) into their own jar.
+_FOLD_SOURCES = (
+    "BackfillFold.java", "EntityWalk.java", "HistoryWalk.java", "StreamFold.java", "Walk.java",
+)
 _FOLD_JAR = os.path.join(_SRC_DIR, "fes_fold.jar")
 _KS = (8, 16, 32, 64, 128)
 _REGISTERED: set = set()
@@ -74,7 +77,7 @@ def ensure_jar() -> str:
 
 
 def ensure_fold_jar() -> str:
-    """Compile the walk and its callers into their own jar with javac
+    """Compile the walks and their callers into their own jar with javac
     alone, so a cold backfill does not wait on the Scala compiler."""
     return _build(_FOLD_JAR, _sources(".java", True), [])
 
@@ -177,19 +180,24 @@ def _load_class(spark, name: str):
 def backfill_fold(df, label_delay_micros: int):
     """``fes.BackfillFold.apply(df, label_delay_micros)``: the examples of
     ``df`` with their features, one row each (BackfillFold.java)."""
-    return _fold("fes.BackfillFold", df, label_delay_micros)
+    return _fold("fes.BackfillFold", "apply", df, label_delay_micros)
 
 
 def stream_fold(df, label_delay_micros: int):
-    """``fes.StreamFold.apply(df, label_delay_micros)``: the same examples
-    of the watermarked stream ``df``, each once its label frame is complete
-    (StreamFold.java)."""
-    return _fold("fes.StreamFold", df, label_delay_micros)
+    """``fes.StreamFold.examples(df, label_delay_micros)``: the same
+    examples of the watermarked stream ``df``, each once its label frame is
+    complete (StreamFold.java)."""
+    return _fold("fes.StreamFold", "examples", df, label_delay_micros)
 
 
-def _fold(cls: str, df, label_delay_micros: int):
-    """``cls.apply(df, label_delay_micros)``; the fold jar is added once per
-    session."""
+def history_fold(df):
+    """``fes.StreamFold.history(df)``: the version rows of the watermarked
+    stream ``df``, each once the watermark is past its ts (HistoryWalk.java)."""
+    return _fold("fes.StreamFold", "history", df)
+
+
+def _fold(cls: str, method: str, df, *longs: int):
+    """``cls.method(df, *longs)``; the fold jar is added once per session."""
     from pyspark.sql import DataFrame
 
     spark = df.sparkSession
@@ -199,14 +207,15 @@ def _fold(cls: str, df, label_delay_micros: int):
         _REGISTERED.add(key)
     jvm = spark._jvm
     gw = spark.sparkContext._gateway
-    argt = gw.new_array(jvm.java.lang.Class, 2)
+    argt = gw.new_array(jvm.java.lang.Class, 1 + len(longs))
     argt[0] = jvm.java.lang.Class.forName("org.apache.spark.sql.Dataset")
-    argt[1] = jvm.java.lang.Long.TYPE
-    args = gw.new_array(jvm.java.lang.Object, 2)
+    args = gw.new_array(jvm.java.lang.Object, 1 + len(longs))
     args[0] = df._jdf
-    args[1] = label_delay_micros
-    apply = _load_class(spark, cls).getMethod("apply", argt)
-    return DataFrame(apply.invoke(None, args), spark)
+    for i, v in enumerate(longs, 1):
+        argt[i] = jvm.java.lang.Long.TYPE
+        args[i] = v
+    fold = _load_class(spark, cls).getMethod(method, argt)
+    return DataFrame(fold.invoke(None, args), spark)
 
 
 def _register_scala(spark, method: str, name: str, *ks: int) -> None:

@@ -40,12 +40,10 @@ import org.apache.spark.sql.types.StructType;
  * Output: (entity, ts in microseconds, loss as DECIMAL(28,2), cnt), one
  * row per example.
  */
-final class EntityWalk {
+final class EntityWalk implements Walk {
   static final byte ERROR = 1;
   static final byte PURCHASE = 2;
   static final long NO_LIMIT = Long.MAX_VALUE;
-  /** {@link #nextLabel} when no example can come out before more rows do. */
-  static final long NONE = Long.MIN_VALUE;
 
   // Per-row flag bits next to the kind.
   private static final int KIND = 0x3;
@@ -108,7 +106,8 @@ final class EntityWalk {
     pending.clear();
   }
 
-  void add(Row r) {
+  @Override
+  public void add(Row r) {
     int kind = r.isNullAt(3) ? 0 : r.getByte(3) & KIND;
     int f = kind;
     long t = 0;
@@ -170,7 +169,8 @@ final class EntityWalk {
   }
 
   /** Orders {@code order[0, n)}; rows usually arrive in order already. */
-  void sort() {
+  @Override
+  public void sort() {
     for (int i = 1; i < n; i++) {
       if (compare(order[i - 1], order[i]) > 0) {
         mergeSort(order, spare, 0, n);
@@ -219,7 +219,8 @@ final class EntityWalk {
    * {@code out} every example whose label frame ends at or before it. The
    * caller must have added every row with ts at or before {@code limit}.
    */
-  void advance(Object entity, long limit, Collection<Row> out) {
+  @Override
+  public void advance(Object entity, long limit, Collection<Row> out) {
     for (; k < n && atOrBefore(order[k], limit); k++) {
       int row = order[k];
       boolean error = (flags[row] & KIND) == ERROR;
@@ -283,7 +284,8 @@ final class EntityWalk {
    * oldest pending example's, else the one the next unwalked row would
    * have; {@link #NONE} when every row is walked and no example pends.
    */
-  long nextLabel() {
+  @Override
+  public long due() {
     if (!pending.isEmpty()) {
       return pending.peek().ts + labelDelayMicros;
     }
@@ -295,7 +297,8 @@ final class EntityWalk {
    * walked row taken (no later example precedes a walked row), the pending
    * examples and the rows a pointer has not passed, in walk order.
    */
-  void save(DataOutput out) throws IOException {
+  @Override
+  public void save(DataOutput out) throws IOException {
     for (; p < k; p++) {
       takeValue(order[p]);
     }
@@ -318,19 +321,20 @@ final class EntityWalk {
     out.writeInt(q - from);
     out.writeBoolean(prevError);
     out.writeLong(sum);
-    writeDecimal(out, bigSum);
+    Walk.writeDecimal(out, bigSum);
     out.writeBoolean(anyValue);
     out.writeLong(purchases);
     out.writeLong(timedPurchases);
     out.writeInt(pending.size());
     for (Probe e : pending) {
       out.writeLong(e.ts);
-      writeDecimal(out, e.loss);
+      Walk.writeDecimal(out, e.loss);
     }
   }
 
   /** Restores what {@link #save} wrote into this (reset) walk. */
-  void load(DataInput in) throws IOException {
+  @Override
+  public void load(DataInput in) throws IOException {
     reset();
     for (int rows = in.readInt(); n < rows; ) {
       append(in.readLong(), in.readLong(), in.readLong(), in.readByte());
@@ -340,21 +344,12 @@ final class EntityWalk {
     q = in.readInt();
     prevError = in.readBoolean();
     sum = in.readLong();
-    bigSum = readDecimal(in);
+    bigSum = Walk.readDecimal(in);
     anyValue = in.readBoolean();
     purchases = in.readLong();
     timedPurchases = in.readLong();
     for (int i = in.readInt(); i > 0; i--) {
-      pending.add(new Probe(in.readLong(), readDecimal(in)));
+      pending.add(new Probe(in.readLong(), Walk.readDecimal(in)));
     }
-  }
-
-  private static void writeDecimal(DataOutput out, BigDecimal d) throws IOException {
-    out.writeUTF(d == null ? "" : d.toString());
-  }
-
-  private static BigDecimal readDecimal(DataInput in) throws IOException {
-    String s = in.readUTF();
-    return s.isEmpty() ? null : new BigDecimal(s);
   }
 }

@@ -8,6 +8,7 @@ import java.io.IOException;
 import java.io.UncheckedIOException;
 import java.util.ArrayList;
 import java.util.List;
+import java.util.function.Function;
 import org.apache.spark.api.java.function.MapFunction;
 import org.apache.spark.sql.Dataset;
 import org.apache.spark.sql.Encoders;
@@ -26,39 +27,56 @@ import scala.collection.Iterator;
 import scala.jdk.javaapi.CollectionConverters;
 
 /**
- * The stream's temporal join (streaming/e2e.py): the {@link EntityWalk} of
- * each entity, advanced as the event-time watermark passes its rows.
+ * One entity's {@link Walk}, advanced as the event-time watermark passes its
+ * rows: the stream's temporal join with {@link EntityWalk}
+ * (streaming/e2e.py), its version history with {@link HistoryWalk}
+ * (streaming/incremental.py).
  *
- * Input: a watermarked stream of {@link EntityWalk} rows with no NULL
- * entity or ts. The watermark is a completeness bound with a strict edge:
- * a row at exactly the watermark can still arrive, so a walk advances to
- * one microsecond before it. Spark drops an input row at or before the
- * previous batch's watermark, so the rows a batch brings all sort after the
- * rows walked before it. Each entity keeps one state value: the walk's
- * unpassed rows, pending examples and sums, and the one event-time timer
- * set for the first watermark that completes its next label frame. Output:
- * the walk's, in append mode.
+ * Input: a watermarked stream of the walk's rows (for {@link EntityWalk}
+ * with no NULL entity or ts; for {@link HistoryWalk} with no NULL ts, and a
+ * NULL entity is one entity). The watermark is a completeness bound with a
+ * strict edge: a row at exactly the watermark can still arrive, so a walk
+ * advances to one microsecond before it. Spark drops an input row at or
+ * before the previous batch's watermark, so the rows a batch brings all
+ * sort after the rows walked before it. Each entity keeps one state value:
+ * what its walk saves, and the one event-time timer set for the first
+ * watermark past the walk's {@link Walk#due} limit. Output: the walk's, in
+ * append mode.
  */
 public final class StreamFold extends StatefulProcessor<Row, Row, Row> {
-  private final long labelDelayMicros;
+  private final Walk.Factory walks;
   private transient ValueState<byte[]> state;
 
-  public StreamFold(long labelDelayMicros) {
-    this.labelDelayMicros = labelDelayMicros;
+  private StreamFold(Walk.Factory walks) {
+    this.walks = walks;
   }
 
-  /** The processor over {@code events}, grouped by their entity column. */
-  public static Dataset<Row> apply(Dataset<Row> events, long labelDelayMicros) {
+  /** The training examples of {@code events} (the rows of {@link EntityWalk}). */
+  public static Dataset<Row> examples(Dataset<Row> events, long labelDelayMicros) {
+    return apply(events, () -> new EntityWalk(labelDelayMicros), EntityWalk::output);
+  }
+
+  /** The version history of {@code events} (the rows of {@link HistoryWalk}). */
+  public static Dataset<Row> history(Dataset<Row> events) {
+    return apply(events, HistoryWalk::new, HistoryWalk::output);
+  }
+
+  /**
+   * The processor over {@code events}, grouped by their entity column;
+   * {@code output} gives the walk's output schema for that column.
+   */
+  private static Dataset<Row> apply(
+      Dataset<Row> events, Walk.Factory walks, Function<StructField, StructType> output) {
     StructField entity = events.schema().fields()[0];
     return events
         .groupByKey(
             (MapFunction<Row, Row>) r -> RowFactory.create(r.get(0)),
             Encoders.row(new StructType().add(entity)))
         .transformWithState(
-            new StreamFold(labelDelayMicros),
+            new StreamFold(walks),
             TimeMode.EventTime(),
             OutputMode.Append(),
-            Encoders.row(EntityWalk.output(entity)));
+            Encoders.row(output.apply(entity)));
   }
 
   @Override
@@ -68,7 +86,7 @@ public final class StreamFold extends StatefulProcessor<Row, Row, Row> {
 
   @Override
   public Iterator<Row> handleInputRows(Row key, Iterator<Row> rows, TimerValues timers) {
-    EntityWalk walk = new EntityWalk(labelDelayMicros);
+    Walk walk = walks.create();
     long timer = load(walk);
     while (rows.hasNext()) {
       walk.add(rows.next());
@@ -80,16 +98,16 @@ public final class StreamFold extends StatefulProcessor<Row, Row, Row> {
   @Override
   public Iterator<Row> handleExpiredTimer(
       Row key, TimerValues timers, ExpiredTimerInfo expired) {
-    EntityWalk walk = new EntityWalk(labelDelayMicros);
+    Walk walk = walks.create();
     load(walk);
     // Spark deletes the expired timer itself after this call.
-    return step(key, walk, EntityWalk.NONE, timers);
+    return step(key, walk, Walk.NONE, timers);
   }
 
   /** The state into {@code walk}; returns the timer it set. */
-  private long load(EntityWalk walk) {
+  private long load(Walk walk) {
     if (!state.exists()) {
-      return EntityWalk.NONE;
+      return Walk.NONE;
     }
     try {
       DataInputStream in = new DataInputStream(new ByteArrayInputStream(state.get()));
@@ -101,17 +119,17 @@ public final class StreamFold extends StatefulProcessor<Row, Row, Row> {
     }
   }
 
-  private Iterator<Row> step(Row key, EntityWalk walk, long timer, TimerValues timers) {
+  private Iterator<Row> step(Row key, Walk walk, long timer, TimerValues timers) {
     List<Row> out = new ArrayList<>();
     walk.advance(key.get(0), timers.getCurrentWatermarkInMs() * 1000 - 1, out);
-    // The first watermark W with W * 1000 > the next label time.
-    long label = walk.nextLabel();
-    long next = label == EntityWalk.NONE ? EntityWalk.NONE : Math.floorDiv(label, 1000) + 1;
+    // The first watermark W with W * 1000 > the due limit.
+    long due = walk.due();
+    long next = due == Walk.NONE ? Walk.NONE : Math.floorDiv(due, 1000) + 1;
     if (next != timer) {
-      if (timer != EntityWalk.NONE) {
+      if (timer != Walk.NONE) {
         getHandle().deleteTimer(timer);
       }
-      if (next != EntityWalk.NONE) {
+      if (next != Walk.NONE) {
         getHandle().registerTimer(next);
       }
     }

@@ -25,8 +25,9 @@ before it, and a bounded replay's data ends before the last label time.
 So ``stage_replay`` appends sentinel waves of one row each, past every
 real label time: wave 0 lifts the watermark past them, and the no-data
 batch that Spark then runs for the timers emits the last examples. A
-sentinel row is a purchase of entity -1 after every label frame, so it is
-never an example and is in no example's frame.
+sentinel row is an event of entity -1 with a NULL ``event_type`` after
+every label frame: it moves the watermark and is evidence for no walk, so
+``streaming.incremental`` replays the same staging.
 """
 
 from __future__ import annotations
@@ -41,7 +42,6 @@ from pyspark.sql import functions as F
 from flink_example_spark.jvm import stream_fold
 from flink_example_spark.plans.events_demo import (
     LABEL_DELAY_HOURS,
-    TARGET_TYPE,
     fold_input,
     fold_output,
     load_events,
@@ -115,7 +115,7 @@ def stage_replay(
     sentinel_base = max_t + timedelta(hours=LABEL_DELAY_HOURS + 1)
     for wave in range(skip_waves, waves):
         spark.createDataFrame(
-            [(-1 - wave, -1, sentinel_base + timedelta(hours=wave), TARGET_TYPE, 0.0)],
+            [(-1 - wave, -1, sentinel_base + timedelta(hours=wave), None, 0.0)],
             src.schema,
         ).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(tmpdir, f"chunk_{chunks + wave}_sentinel")

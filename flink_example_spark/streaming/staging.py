@@ -57,9 +57,11 @@ def stamp_chunk_mtimes(tmpdir: str) -> None:
 def split_chunks(df, order_col: str, chunks: int, tmpdir: str) -> None:
     """Write ``df`` as ``chunk_0`` .. ``chunk_<chunks-1>`` parquet dirs under
     ``tmpdir``, cut at approximate ``order_col`` quantiles so chunk ``i``
-    holds the i-th range. Range filters only — no row data crosses the
-    driver, and any disjoint split works, so approximate cutpoints are
-    fine. Callers add their sentinel waves, then ``stamp_chunk_mtimes``."""
+    holds the i-th range; rows with a NULL ``order_col`` go to ``chunk_0``,
+    so every chunk count stages the same rows. Range filters only — no row
+    data crosses the driver, and any disjoint split works, so approximate
+    cutpoints are fine. Callers add their sentinel waves, then
+    ``stamp_chunk_mtimes``."""
     from pyspark.sql import functions as F
 
     key = F.col(order_col).cast("double")
@@ -76,7 +78,8 @@ def split_chunks(df, order_col: str, chunks: int, tmpdir: str) -> None:
         if bounds[i] is not None:
             part = part.filter(key >= bounds[i])
         if bounds[i + 1] is not None:
-            part = part.filter(key < bounds[i + 1])
+            below = key < bounds[i + 1]
+            part = part.filter(below | key.isNull() if i == 0 else below)
         part.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(tmpdir, f"chunk_{i}")
         )

@@ -243,11 +243,10 @@ def test_fused_backfill_matches_composed_asof(spark, tmp_path):
     as the DuckDB ``training_examples`` twin, on logs of as-of edge cases, at
     1, 7 and 32 shuffle partitions.
 
-    The NULL log adds NULL ``user_id`` and NULL ``ts`` rows and the big log
-    sums past 2^53 and 2^63 cents; there only fused == composed is asserted.
-    DuckDB's ASOF join never matches a NULL key and orders NULL times
-    differently from Spark (ROADMAP item 9), and its DECIMAL to DOUBLE cast
-    is not correctly rounded. On the tie log the composed path and the twin
+    The NULL log adds NULL ``user_id`` and NULL ``ts`` rows; there only
+    fused == composed is asserted: DuckDB's ASOF join never matches a NULL
+    key and orders NULL times differently from Spark (ROADMAP item 9). The
+    big log sums past 2^53 and 2^63 cents. On the tie log the composed path and the twin
     order an error tied with a click arbitrarily (ROADMAP item 2), so only
     the fold's answer is pinned there, at every partition count."""
     import duckdb
@@ -259,7 +258,7 @@ def test_fused_backfill_matches_composed_asof(spark, tmp_path):
     for name, log in (("edge", _EDGE_LOG), ("nulls", _NULL_LOG), ("big", _BIG_LOG),
                       ("hot", _HOT_LOG), ("ties", _TIE_LOG)):
         logs[name], path = _write_events(spark, tmp_path / name, log)
-        if name in ("edge", "hot"):
+        if name in ("edge", "big", "hot"):
             con = duckdb.connect()
             con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}/*.parquet')")
             twins[name] = Counter(con.execute(twin_sql).fetchall())
@@ -284,7 +283,7 @@ def test_fused_backfill_matches_composed_asof(spark, tmp_path):
             assert fused[(7, _at(190), _at(190) + h, 4.0, 2)] == 1
 
             fused, composed = _fused_and_composed(spark, logs["big"], n)
-            assert fused == composed
+            assert fused == composed == twins["big"]
             assert fused[(1, _at(11), _at(11) + h, 1.08e17, None)] == 1
             assert fused[(2, _at(1), _at(1) + h, 1000000000000000.125, None)] == 1
 

@@ -24,7 +24,8 @@ def test_streaming_features_converges_to_batch(spark):
 def test_split_chunks_stages_input_in_order(spark, tmp_path):
     """The one replay splitter: chunk_0..chunk_2 hold the input multiset
     (duplicates included) in disjoint, increasing ranges of the order
-    column, and after stamp_chunk_mtimes their files arrive in chunk order."""
+    column, rows with a NULL order value in chunk_0, and after
+    stamp_chunk_mtimes their files arrive in chunk order."""
     import os
 
     from pyspark.sql import functions as F
@@ -32,6 +33,7 @@ def test_split_chunks_stages_input_in_order(spark, tmp_path):
     from flink_example_spark.streaming.staging import split_chunks, stamp_chunk_mtimes
 
     rows = [(i % 7, i * 60, f"r{i}") for i in range(60)] + [(3, 600, "dup")] * 2
+    rows += [(5, None, "null")] * 2 + [(6, None, "null")]
     df = spark.createDataFrame(rows, "k long, t long, s string").withColumn(
         "t", F.timestamp_seconds("t")
     )
@@ -41,6 +43,7 @@ def test_split_chunks_stages_input_in_order(spark, tmp_path):
     parts = [spark.read.parquet(str(tmp_path / d)) for d in dirs]
     back = parts[0].unionByName(parts[1]).unionByName(parts[2])
     assert back.exceptAll(df).isEmpty() and df.exceptAll(back).isEmpty()
+    assert parts[0].filter(F.col("t").isNull()).count() == 3
     spans = [p.agg(F.min("t"), F.max("t")).first() for p in parts]
     assert all(lo[1] < hi[0] for lo, hi in zip(spans, spans[1:]))
 

@@ -54,7 +54,10 @@ def test_jars_build_in_the_c_locale(tmp_path):
     with zipfile.ZipFile(src / "fes_udaf.jar") as zf:
         names = set(zf.namelist())
     assert {"fes/DyadicHist.class", "fes/ScalaReg.class"} <= names
-    fold = {"fes/EntityWalk.class", "fes/BackfillFold.class", "fes/StreamFold.class"}
+    fold = {
+        "fes/EntityWalk.class", "fes/BackfillFold.class", "fes/StreamFold.class",
+        "fes/HistoryWalk.class", "fes/Walk.class",
+    }
     assert not fold & names
     with zipfile.ZipFile(src / "fes_fold.jar") as zf:
         assert fold <= set(zf.namelist())
