@@ -102,9 +102,9 @@ def _q_feature_history_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from flink_example_spark.operators.versioned import salted_version_history
-    from flink_example_spark.plans.events_demo import LOSS_TYPE, load_events
+    from flink_example_spark.plans.events_demo import LOSS_TYPE, evidence, load_events
 
-    ev = load_events(spark, sf_dir)
+    ev = evidence(load_events(spark, sf_dir))
     errs = ev.filter(F.col("event_type") == LOSS_TYPE).withColumn(
         "__v", F.col("value").cast("decimal(18,2)")
     )
@@ -8194,22 +8194,25 @@ def _run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_streaming_exact_dedup(spark, sf_dir)
 
 
+# The rows the temporal join reads (plans.events_demo.evidence).
+_EVIDENCE = "user_id IS NOT NULL AND ts IS NOT NULL"
+
 # The DECIMAL sum goes to DOUBLE through text: DuckDB's direct cast is not
 # correctly rounded past 2^53 cents, the text parse is (as Spark's cast).
-_FH_SQL = """
+_FH_SQL = f"""
   SELECT DISTINCT user_id AS _entity, ts AS _change_time,
          CAST(CAST(SUM(CAST(value AS DECIMAL(18,2)))
               OVER (PARTITION BY user_id ORDER BY ts) AS VARCHAR) AS DOUBLE) AS loss_value
-  FROM events WHERE event_type = 'error'
+  FROM events WHERE event_type = 'error' AND {_EVIDENCE}
 """
 
-_TH_SQL = """
+_TH_SQL = f"""
   SELECT DISTINCT user_id AS _entity, ts AS _change_time,
          COUNT(*) OVER (PARTITION BY user_id ORDER BY ts) AS cnt
-  FROM events WHERE event_type = 'purchase'
+  FROM events WHERE event_type = 'purchase' AND {_EVIDENCE}
 """
 
-_EX_SQL = """
+_EX_SQL = f"""
   SELECT user_id AS _entity, ts AS _prediction_time,
          ts + INTERVAL 1 HOUR AS _label_time
   FROM (
@@ -8217,7 +8220,7 @@ _EX_SQL = """
            COUNT(CASE WHEN event_type = 'error' THEN 1 END)
              OVER (PARTITION BY user_id ORDER BY ts
                    ROWS BETWEEN 1 PRECEDING AND CURRENT ROW) AS defeat_count
-    FROM events
+    FROM events WHERE {_EVIDENCE}
   ) WHERE defeat_count = 2
 """
 

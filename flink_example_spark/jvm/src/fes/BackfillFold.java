@@ -13,9 +13,8 @@ import org.apache.spark.sql.Row;
  * The backfill's temporal join as one per-entity fold (plans/events_demo.py).
  *
  * Input: a partition of {@link EntityWalk} rows clustered by entity, so
- * each entity's rows arrive together (a NULL entity is one entity). Each
- * entity's rows go through one {@link EntityWalk} with no limit. Output:
- * the walk's, one row per example.
+ * each entity's rows arrive together. Each entity's rows go through one
+ * {@link EntityWalk} with no limit. Output: the walk's, one row per example.
  */
 public final class BackfillFold implements MapPartitionsFunction<Row, Row> {
   private final long labelDelayMicros;

@@ -19,24 +19,24 @@ import org.apache.spark.sql.types.StructType;
  * ({@link StreamFold}).
  *
  * Rows are (entity, ts in microseconds, event_id, kind, value as
- * DECIMAL(18,2)); kind is {@link #ERROR}, {@link #PURCHASE} or anything
- * else, and value is read only on errors. The walk buffers an entity's rows
- * in primitive arrays, orders them by (ts NULLS FIRST, event_id NULLS FIRST)
- * and walks them once. A row is an example when it and its predecessor in
- * that order are errors. Two forward pointers give its features, with
- * NULL-ts rows first and so inside every frame of a row with a known ts:
+ * DECIMAL(18,2)), the log's evidence (plans/events_demo.py); kind is
+ * {@link #ERROR}, {@link #PURCHASE} or anything else, and value is read only
+ * on errors. The walk buffers an entity's rows in primitive arrays, orders
+ * them by (ts, event_id NULLS FIRST) and walks them once. A row is an
+ * example when it and its predecessor in that order are errors. Two forward
+ * pointers give its features:
  *
  *   - loss: the exact sum of the error values of every row with ts at or
  *     before the example's ts (its peers included); NULL while no error
  *     value is in the frame;
- *   - cnt: the purchases with ts at or before ts + label delay; NULL until
- *     a purchase with a known ts is in the frame.
+ *   - cnt: the purchases with ts at or before ts + label delay; NULL while
+ *     no purchase is in the frame.
  *
- * Both are NULL on an example with a NULL ts. {@link #advance} walks only
- * the rows with ts at or before a limit and emits only the examples whose
- * label frame ends at or before it, so a caller that learns the rows up to
- * a limit at a time (the stream, up to its watermark) gets the rows a
- * caller with every row (the backfill, with {@link #NO_LIMIT}) gets.
+ * {@link #advance} walks only the rows with ts at or before a limit and
+ * emits only the examples whose label frame ends at or before it, so a
+ * caller that learns the rows up to a limit at a time (the stream, up to its
+ * watermark) gets the rows a caller with every row (the backfill, with
+ * {@link #NO_LIMIT}) gets.
  * Output: (entity, ts in microseconds, loss as DECIMAL(28,2), cnt), one
  * row per example.
  */
@@ -47,9 +47,8 @@ final class EntityWalk implements Walk {
 
   // Per-row flag bits next to the kind.
   private static final int KIND = 0x3;
-  private static final int TS_NULL = 0x4;
-  private static final int ID_NULL = 0x8;
-  private static final int NO_VALUE = 0x10; // not an error, or a NULL value
+  private static final int ID_NULL = 0x4;
+  private static final int NO_VALUE = 0x8; // not an error, or a NULL value
 
   private final long labelDelayMicros;
 
@@ -70,7 +69,6 @@ final class EntityWalk implements Walk {
   private BigDecimal bigSum; // set once the long sum would overflow
   private boolean anyValue;
   private long purchases;
-  private long timedPurchases;
   // Examples walked whose label frame is not complete yet, oldest first.
   private final ArrayDeque<Probe> pending = new ArrayDeque<>();
 
@@ -101,7 +99,7 @@ final class EntityWalk implements Walk {
   void reset() {
     n = k = p = q = 0;
     prevError = anyValue = false;
-    sum = purchases = timedPurchases = 0;
+    sum = purchases = 0;
     bigSum = null;
     pending.clear();
   }
@@ -110,14 +108,8 @@ final class EntityWalk implements Walk {
   public void add(Row r) {
     int kind = r.isNullAt(3) ? 0 : r.getByte(3) & KIND;
     int f = kind;
-    long t = 0;
     long i = 0;
     long c = 0;
-    if (r.isNullAt(1)) {
-      f |= TS_NULL;
-    } else {
-      t = r.getLong(1);
-    }
     if (r.isNullAt(2)) {
       f |= ID_NULL;
     } else {
@@ -129,7 +121,7 @@ final class EntityWalk implements Walk {
     } else {
       f |= NO_VALUE;
     }
-    append(t, i, c, (byte) f);
+    append(r.getLong(1), i, c, (byte) f);
   }
 
   private void append(long t, long i, long c, byte f) {
@@ -152,16 +144,11 @@ final class EntityWalk implements Walk {
 
   /** -1, 0 or 1 as row a is before, tied with or after row b. */
   private int compare(int a, int b) {
-    int na = flags[a] & TS_NULL;
-    int nb = flags[b] & TS_NULL;
-    if (na != nb) {
-      return na != 0 ? -1 : 1;
-    }
-    if (na == 0 && ts[a] != ts[b]) {
+    if (ts[a] != ts[b]) {
       return ts[a] < ts[b] ? -1 : 1;
     }
-    na = flags[a] & ID_NULL;
-    nb = flags[b] & ID_NULL;
+    int na = flags[a] & ID_NULL;
+    int nb = flags[b] & ID_NULL;
     if (na != nb) {
       return na != 0 ? -1 : 1;
     }
@@ -210,10 +197,6 @@ final class EntityWalk implements Walk {
     }
   }
 
-  private boolean atOrBefore(int row, long t) {
-    return (flags[row] & TS_NULL) != 0 || ts[row] <= t;
-  }
-
   /**
    * Walks the sorted rows with ts at or before {@code limit} and adds to
    * {@code out} every example whose label frame ends at or before it. The
@@ -221,7 +204,7 @@ final class EntityWalk implements Walk {
    */
   @Override
   public void advance(Object entity, long limit, Collection<Row> out) {
-    for (; k < n && atOrBefore(order[k], limit); k++) {
+    for (; k < n && ts[order[k]] <= limit; k++) {
       int row = order[k];
       boolean error = (flags[row] & KIND) == ERROR;
       boolean example = error && prevError;
@@ -229,12 +212,8 @@ final class EntityWalk implements Walk {
       if (!example) {
         continue;
       }
-      if ((flags[row] & TS_NULL) != 0) {
-        out.add(RowFactory.create(entity, null, null, null));
-        continue;
-      }
       long t = ts[row];
-      for (; p < n && atOrBefore(order[p], t); p++) {
+      for (; p < n && ts[order[p]] <= t; p++) {
         takeValue(order[p]);
       }
       pending.add(new Probe(t, anyValue ? (bigSum != null ? bigSum : BigDecimal.valueOf(sum, 2)) : null));
@@ -247,10 +226,10 @@ final class EntityWalk implements Walk {
     while (!pending.isEmpty() && pending.peek().ts <= limit - labelDelayMicros) {
       Probe e = pending.poll();
       long label = e.ts + labelDelayMicros;
-      for (; q < n && atOrBefore(order[q], label); q++) {
+      for (; q < n && ts[order[q]] <= label; q++) {
         takePurchase(order[q]);
       }
-      out.add(RowFactory.create(entity, e.ts, e.loss, timedPurchases > 0 ? purchases : null));
+      out.add(RowFactory.create(entity, e.ts, e.loss, purchases > 0 ? purchases : null));
     }
   }
 
@@ -273,9 +252,6 @@ final class EntityWalk implements Walk {
   private void takePurchase(int r) {
     if ((flags[r] & KIND) == PURCHASE) {
       purchases++;
-      if ((flags[r] & TS_NULL) == 0) {
-        timedPurchases++;
-      }
     }
   }
 
@@ -324,7 +300,6 @@ final class EntityWalk implements Walk {
     Walk.writeDecimal(out, bigSum);
     out.writeBoolean(anyValue);
     out.writeLong(purchases);
-    out.writeLong(timedPurchases);
     out.writeInt(pending.size());
     for (Probe e : pending) {
       out.writeLong(e.ts);
@@ -347,7 +322,6 @@ final class EntityWalk implements Walk {
     bigSum = Walk.readDecimal(in);
     anyValue = in.readBoolean();
     purchases = in.readLong();
-    timedPurchases = in.readLong();
     for (int i = in.readInt(); i > 0; i--) {
       pending.add(new Probe(in.readLong(), Walk.readDecimal(in)));
     }

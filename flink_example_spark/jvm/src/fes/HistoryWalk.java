@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.StructType;
  * {@code version_history} of operators/versioned.py, one limit at a time
  * (streaming/incremental.py).
  *
- * Rows are (entity, ts in microseconds, value as DECIMAL(18,2)) with no
- * NULL ts. The walk keeps the rows it has not folded as one exact sum per
+ * Rows are (entity, ts in microseconds, value as DECIMAL(18,2)), the log's
+ * evidence (plans/events_demo.py). The walk keeps the rows it has not folded as one exact sum per
  * distinct ts, and {@link #advance} folds those at or before the limit in
  * ts order into the running sum, one output row per ts: tied rows are one
  * version, as in the batch RANGE frame. The sum is NULL while no value is

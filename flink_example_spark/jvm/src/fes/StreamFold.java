@@ -32,16 +32,14 @@ import scala.jdk.javaapi.CollectionConverters;
  * (streaming/e2e.py), its version history with {@link HistoryWalk}
  * (streaming/incremental.py).
  *
- * Input: a watermarked stream of the walk's rows (for {@link EntityWalk}
- * with no NULL entity or ts; for {@link HistoryWalk} with no NULL ts, and a
- * NULL entity is one entity). The watermark is a completeness bound with a
- * strict edge: a row at exactly the watermark can still arrive, so a walk
- * advances to one microsecond before it. Spark drops an input row at or
- * before the previous batch's watermark, so the rows a batch brings all
- * sort after the rows walked before it. Each entity keeps one state value:
- * what its walk saves, and the one event-time timer set for the first
- * watermark past the walk's {@link Walk#due} limit. Output: the walk's, in
- * append mode.
+ * Input: a watermarked stream of the walk's rows. The watermark is a
+ * completeness bound with a strict edge: a row at exactly the watermark can
+ * still arrive, so a walk advances to one microsecond before it. Spark
+ * drops an input row at or before the previous batch's watermark, so the
+ * rows a batch brings all sort after the rows walked before it. Each entity
+ * keeps one state value: what its walk saves, and the one event-time timer
+ * set for the first watermark past the walk's {@link Walk#due} limit.
+ * Output: the walk's, in append mode.
  */
 public final class StreamFold extends StatefulProcessor<Row, Row, Row> {
   private final Walk.Factory walks;

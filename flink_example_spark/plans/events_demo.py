@@ -57,8 +57,15 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 
 
+def evidence(events: DataFrame) -> DataFrame:
+    """The rows every path of the temporal join reads, batch and stream: a
+    row with no ``user_id`` is of no entity, and one with no ``ts`` has no
+    place in the as-of order nor in a watermark."""
+    return events.filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
+
+
 def feature_history(events: DataFrame) -> DataFrame:
-    errs = events.filter(F.col("event_type") == LOSS_TYPE).withColumn(
+    errs = evidence(events).filter(F.col("event_type") == LOSS_TYPE).withColumn(
         "__v", F.col("value").cast("decimal(18,2)")
     )
     hist = version_history(
@@ -70,7 +77,7 @@ def feature_history(events: DataFrame) -> DataFrame:
 
 
 def target_history(events: DataFrame) -> DataFrame:
-    purchases = events.filter(F.col("event_type") == TARGET_TYPE)
+    purchases = evidence(events).filter(F.col("event_type") == TARGET_TYPE)
     return version_history(
         purchases, key="user_id", time_col="ts", aggs={"cnt": F.count(F.lit(1))}
     )
@@ -78,7 +85,7 @@ def target_history(events: DataFrame) -> DataFrame:
 
 def examples(events: DataFrame) -> DataFrame:
     return consecutive_loss_examples(
-        events,
+        evidence(events),
         key="user_id",
         time_col="ts",
         loss_col=F.when(F.col("event_type") == LOSS_TYPE, F.lit(1)),
@@ -123,14 +130,8 @@ def pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Equal to ``training_examples(examples(ev), feature_history(ev),
     target_history(ev))``, computed by the one fold of the module
-    docstring. An entity's rows are taken in ``(ts, event_id)`` order, NULLs
-    first, so NULL ``ts`` rows fall inside the feature and target frames of
-    every row with a known ``ts``, as they fall inside the running
-    aggregates of the histories. A history has no version at a NULL time:
-    an example with a NULL ``ts`` gets NULL features, and ``cnt`` is NULL
-    until a purchase with a known ``ts`` is at or before the label time.
-    """
+    docstring over the log's ``evidence``."""
     # load_events pins the session zone to UTC, so the µs round-trip exactly.
-    ev = fold_input(load_events(spark, sf_dir))
+    ev = fold_input(evidence(load_events(spark, sf_dir)))
     clustered = ev.repartition("user_id").sortWithinPartitions("user_id")
     return fold_output(backfill_fold(clustered, LABEL_DELAY_HOURS * 3600 * 10**6))

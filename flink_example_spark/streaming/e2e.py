@@ -6,7 +6,7 @@ two temporal joins) as ONE Flink job (App.java:87 executing the graph built
 in App.java:143-234). This module is the Spark counterpart, one Structured
 Streaming query with one stateful operator:
 
-    events ─► filter (user_id, ts NOT NULL) ─► withWatermark(ts, 0 s)
+    events ─► evidence ─► withWatermark(ts, 0 s)
            ─► groupByKey(user_id).transformWithState(fes.StreamFold)
 
 ``fes.StreamFold`` (``jvm/src/fes/StreamFold.java``) runs the batch
@@ -26,7 +26,7 @@ So ``stage_replay`` appends sentinel waves of one row each, past every
 real label time: wave 0 lifts the watermark past them, and the no-data
 batch that Spark then runs for the timers emits the last examples. A
 sentinel row is an event of entity -1 with a NULL ``event_type`` after
-every label frame: it moves the watermark and is evidence for no walk, so
+every label frame: it moves the watermark and counts in no walk, so
 ``streaming.incremental`` replays the same staging.
 """
 
@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import os
 import tempfile
-from datetime import timedelta
+from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from flink_example_spark.jvm import stream_fold
 from flink_example_spark.plans.events_demo import (
     LABEL_DELAY_HOURS,
+    evidence,
     fold_input,
     fold_output,
     load_events,
@@ -66,9 +67,7 @@ def run_streaming_pipeline_e2e(
 ) -> DataFrame:
     """Bounded replay of the full flagship pipeline as ONE streaming query;
     equals batch ``plans.events_demo.pipeline`` for any ``chunks`` and any
-    ``waves >= WAVES`` on a log with no NULL ``user_id`` or ``ts`` (the
-    stream drops such rows, the batch folds them). The third positional
-    slot takes only ``None``."""
+    ``waves >= WAVES``. The third positional slot takes only ``None``."""
     if _horizon is not None:
         raise ValueError("the stream has no horizon; pass None or nothing")
     tmpdir, src_schema = stage_replay(spark, sf_dir, chunks, waves)
@@ -86,15 +85,14 @@ def stage_replay(
     waves: int = WAVES,
     tmpdir: str | None = None,
     skip_chunks: int = 0,
-    skip_waves: int = 0,
 ):
     """Stage the bounded replay: time-split chunk files + sentinel waves.
 
-    Returns ``(tmpdir, src_schema)``. ``skip_chunks`` (0 or ``chunks``) and
-    ``skip_waves`` let a caller stage the replay in PARTS into the same
-    ``tmpdir`` (checkpoint-recovery tests run the query, stage more files,
-    and restart it from the same checkpoint — the file source picks up the
-    new files and the state store carries on).
+    Returns ``(tmpdir, src_schema)``. ``skip_chunks`` (0 or ``chunks``) lets
+    a caller stage the replay in two parts into the same ``tmpdir``
+    (checkpoint-recovery tests run the query, stage the sentinel waves, and
+    restart it from the same checkpoint — the file source picks up the new
+    files and the state store carries on).
     """
     src = load_events(spark, sf_dir).select(
         "event_id",
@@ -103,7 +101,8 @@ def stage_replay(
         "event_type",
         F.col("value").cast("double").alias("value"),
     )
-    max_t = src.agg(F.max("ts")).first()[0]
+    # any instant will do for the sentinels' base when no row has a ts
+    max_t = src.agg(F.max("ts")).first()[0] or datetime(1970, 1, 1)
 
     tmpdir = tmpdir or tempfile.mkdtemp(prefix="e2e_stream_")
     if skip_chunks == 0:
@@ -113,7 +112,7 @@ def stage_replay(
 
     # Sentinel waves: hourly from an hour past the last label time.
     sentinel_base = max_t + timedelta(hours=LABEL_DELAY_HOURS + 1)
-    for wave in range(skip_waves, waves):
+    for wave in range(waves):
         spark.createDataFrame(
             [(-1 - wave, -1, sentinel_base + timedelta(hours=wave), None, 0.0)],
             src.schema,
@@ -128,10 +127,8 @@ def build_pipeline_stream(stream: DataFrame) -> DataFrame:
     """Assemble the one-operator query over a raw ``(event_id, user_id, ts,
     event_type, value)`` event stream (``ts`` must be TIMESTAMP —
     EventTimeWatermark rejects NTZ); returns the unstarted streaming
-    DataFrame. Rows with a NULL ``user_id`` or ``ts`` are not evidence."""
-    events = stream.filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    ).withWatermark("ts", "0 seconds")
+    DataFrame."""
+    events = evidence(stream).withWatermark("ts", "0 seconds")
     # the watermarked ts rides along so the operator drops late rows
     folded = stream_fold(fold_input(events, "ts"), LABEL_DELAY_HOURS * 3600 * 10**6)
     return fold_output(folded)

@@ -7,7 +7,7 @@ reference describes (App.java:45-46: "populate a cache of features ... as
 new events arrive"), done watermark-correctly, on the stream processor of
 ``streaming.e2e``:
 
-    events ─► filter (ts NOT NULL) ─► withWatermark(ts, 0 s)
+    events ─► evidence ─► withWatermark(ts, 0 s)
            ─► filter (event_type, above the watermark)
            ─► groupByKey(user_id).transformWithState(fes.StreamFold, fes.HistoryWalk)
 
@@ -19,10 +19,6 @@ time (ties collapse, matching the batch RANGE frame). The sum is an exact
 DECIMAL(18,2) sum, emitted as double, so the stream CONVERGES to
 ``version_history`` exactly, row for row. State per key is the sum and the
 rows the watermark has not passed, not the history.
-
-A NULL ``user_id`` is one entity, as in the batch history. A row with a
-NULL ``ts`` is not evidence in the stream (it has no place in event time),
-as in ``streaming.e2e``; the batch history folds it.
 """
 
 from __future__ import annotations
@@ -31,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_example_spark.jvm import history_fold
-from flink_example_spark.plans.events_demo import LOSS_TYPE, TARGET_TYPE
+from flink_example_spark.plans.events_demo import LOSS_TYPE, TARGET_TYPE, evidence
 from flink_example_spark.session import rocksdb_state_store
 from flink_example_spark.streaming.e2e import stage_replay
 from flink_example_spark.streaming.staging import drain_to_table, read_chunks
@@ -50,7 +46,7 @@ def build_history_stream(stream: DataFrame, agg: str) -> DataFrame:
         if agg == "sum"
         else (TARGET_TYPE, "1", "CAST(sum AS BIGINT) AS cnt")
     )
-    events = stream.filter(F.col("ts").isNotNull()).withWatermark("ts", "0 seconds")
+    events = evidence(stream).withWatermark("ts", "0 seconds")
     # The rows of the folded type, by a test on the watermarked ts: Spark
     # pushes a filter that does not read it below the watermark, and the
     # sentinel, of no type, would then not move the watermark.
@@ -74,12 +70,11 @@ def run_incremental_feature_history(
 ) -> DataFrame:
     """Bounded replay of the harness event stream through
     ``build_history_stream``; converges exactly to the batch
-    ``feature_history`` (sum) / ``target_history`` (count) relation over the
-    log's rows with a known ``ts``.
+    ``feature_history`` (sum) / ``target_history`` (count) relation.
 
     The replay is ``streaming.e2e``'s: time-ordered chunk files, then its
-    sentinel wave, which lifts the watermark past every real event and is
-    evidence for neither history (its ``event_type`` is NULL)."""
+    sentinel wave, which lifts the watermark past every real event and
+    counts in neither history (its ``event_type`` is NULL)."""
     tmpdir, src_schema = stage_replay(spark, sf_dir, chunks)
     hist = build_history_stream(read_chunks(spark, tmpdir, src_schema), agg)
     with rocksdb_state_store(spark):

@@ -72,7 +72,9 @@ def split_chunks(df, order_col: str, chunks: int, tmpdir: str) -> None:
         if chunks > 1
         else []
     )
-    bounds = [None, *cuts, None]
+    # The quantiles are NULL when no row has an order_col value; cutting at
+    # +inf then puts every row in chunk_0.
+    bounds = [None, *(cuts or [float("inf")] * (chunks - 1)), None]
     for i in range(chunks):
         part = df
         if bounds[i] is not None:

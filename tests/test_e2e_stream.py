@@ -208,3 +208,34 @@ def test_e2e_rejects_a_horizon(spark):
 
     with pytest.raises(ValueError):
         run_streaming_pipeline_e2e(spark, SF, 30)
+
+
+def test_empty_log_gives_no_rows_on_every_core_path(spark, tmp_path):
+    """A log with no rows, and one whose rows all lack a ``ts``, give 0
+    rows with the schema of a non-empty run on every core path: the batch
+    fold, the e2e stream and both history streams."""
+    from pyspark.sql import functions as F
+
+    from flink_example_spark.plans.events_demo import pipeline
+    from flink_example_spark.streaming.e2e import run_streaming_pipeline_e2e
+    from flink_example_spark.streaming.incremental import run_incremental_feature_history
+
+    (tmp_path / "full").mkdir()
+    full = _write_log(tmp_path / "full", _TIE_ROWS)
+    log = spark.read.parquet(f"{full}/events.parquet")
+    empty, untimed = str(tmp_path / "empty"), str(tmp_path / "untimed")
+    log.limit(0).write.parquet(f"{empty}/events.parquet")
+    log.withColumn("ts", F.lit(None).cast(log.schema["ts"].dataType)).write.parquet(
+        f"{untimed}/events.parquet"
+    )
+    for run in (
+        pipeline,
+        run_streaming_pipeline_e2e,
+        lambda s, sf: run_incremental_feature_history(s, sf, agg="sum"),
+        lambda s, sf: run_incremental_feature_history(s, sf, agg="count"),
+    ):
+        schema = run(spark, full).schema
+        for sf in (empty, untimed):
+            out = run(spark, sf)
+            assert out.count() == 0
+            assert out.schema == schema

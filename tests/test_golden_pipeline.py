@@ -143,17 +143,17 @@ _EDGE_LOG = [
     (_at(1), 4, "error", 1.0),
 ]
 
+# A row with no user_id or no ts is not evidence (events_demo.evidence).
 _NULL_LOG = _EDGE_LOG + [
-    # NULL user_id: its rows form one partition of their own
+    # NULL user_id: no example
     (_at(0), None, "error", 1.0),
     (_at(5), None, "error", 2.0),
     (_at(30), None, "purchase", 1.0),
-    # user 6: two NULL-ts errors sort first, then a timed error
+    # user 6: two NULL-ts errors, then one timed error: no example
     (None, 6, "error", 1.0),
     (None, 6, "error", 2.0),
     (_at(0), 6, "error", 4.0),
-    # user 7: a NULL-ts purchase; cnt stays NULL until a timed purchase is
-    # at or before _label_time, then it counts the NULL-ts one too
+    # user 7: a NULL-ts purchase counts in no label
     (None, 7, "purchase", 1.0),
     (_at(0), 7, "error", 1.0),
     (_at(5), 7, "error", 1.0),
@@ -243,25 +243,27 @@ def test_fused_backfill_matches_composed_asof(spark, tmp_path):
     as the DuckDB ``training_examples`` twin, on logs of as-of edge cases, at
     1, 7 and 32 shuffle partitions.
 
-    The NULL log adds NULL ``user_id`` and NULL ``ts`` rows; there only
-    fused == composed is asserted: DuckDB's ASOF join never matches a NULL
-    key and orders NULL times differently from Spark (ROADMAP item 9). The
-    big log sums past 2^53 and 2^63 cents. On the tie log the composed path and the twin
-    order an error tied with a click arbitrarily (ROADMAP item 2), so only
-    the fold's answer is pinned there, at every partition count."""
+    The NULL log adds NULL ``user_id`` and NULL ``ts`` rows, which are no
+    evidence on any path; the e2e stream gives the same multiset there. The
+    big log sums past 2^53 and 2^63 cents. On the tie log the composed path
+    and the twin order an error tied with a click arbitrarily (ROADMAP item
+    2), so only the fold's answer is pinned there, at every partition
+    count."""
     import duckdb
 
     import __spark_entry__
+    from flink_example_spark.streaming.e2e import run_streaming_pipeline_e2e
 
     twin_sql = __spark_entry__._all_oracles()["training_examples"]
     logs, twins = {}, {}
     for name, log in (("edge", _EDGE_LOG), ("nulls", _NULL_LOG), ("big", _BIG_LOG),
                       ("hot", _HOT_LOG), ("ties", _TIE_LOG)):
         logs[name], path = _write_events(spark, tmp_path / name, log)
-        if name in ("edge", "big", "hot"):
+        if name != "ties":
             con = duckdb.connect()
             con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}/*.parquet')")
             twins[name] = Counter(con.execute(twin_sql).fetchall())
+    streamed = Counter(map(tuple, run_streaming_pipeline_e2e(spark, logs["nulls"]).collect()))
     h = timedelta(hours=1)
     for n in (1, 7, 32):
         with _shuffle_partitions(spark, n):
@@ -275,12 +277,12 @@ def test_fused_backfill_matches_composed_asof(spark, tmp_path):
             assert sum(fused.values()) == 6
 
             fused, composed = _fused_and_composed(spark, logs["nulls"], n)
-            assert fused == composed
-            assert fused[(None, _at(5), _at(5) + h, 3.0, 1)] == 1
-            assert fused[(6, None, None, None, None)] == 1
-            assert fused[(6, _at(0), _at(0) + h, 7.0, None)] == 1
+            assert fused == composed == twins["nulls"] == streamed
+            assert not [r for r in fused if r[0] is None or r[0] == 6]
             assert fused[(7, _at(5), _at(5) + h, 2.0, None)] == 1
-            assert fused[(7, _at(190), _at(190) + h, 4.0, 2)] == 1
+            assert fused[(7, _at(190), _at(190) + h, 4.0, 1)] == 1
+            assert fused[(8, _at(5), _at(5) + h, 2.0, None)] == 1
+            assert sum(fused.values()) == 9
 
             fused, composed = _fused_and_composed(spark, logs["big"], n)
             assert fused == composed == twins["big"]
@@ -293,3 +295,36 @@ def test_fused_backfill_matches_composed_asof(spark, tmp_path):
 
             fused, _ = _fused_and_composed(spark, logs["ties"], n)
             assert fused == Counter({(2, _at(5), _at(5) + h, 3.0, None): 1})
+
+
+def test_histories_on_null_log_match_stream_and_twin(spark, tmp_path):
+    """On the NULL log ``feature_history`` and ``target_history`` equal
+    their DuckDB twins and the ``sum`` / ``count`` history streams as
+    multisets, at 1, 7 and 32 shuffle partitions: a row with no
+    ``user_id`` or no ``ts`` is in no version."""
+    import duckdb
+
+    import __spark_entry__
+    from flink_example_spark.plans.events_demo import (
+        feature_history,
+        load_events,
+        target_history,
+    )
+    from flink_example_spark.streaming.incremental import run_incremental_feature_history
+
+    sf_dir, path = _write_events(spark, tmp_path, _NULL_LOG)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}/*.parquet')")
+    for agg, batch, twin_sql in (
+        ("sum", feature_history, __spark_entry__._FH_SQL),
+        ("count", target_history, __spark_entry__._TH_SQL),
+    ):
+        twin = Counter(con.execute(twin_sql).fetchall())
+        streamed = Counter(
+            map(tuple, run_incremental_feature_history(spark, sf_dir, agg=agg).collect())
+        )
+        assert streamed == twin
+        assert not [r for r in twin if r[0] is None or r[1] is None]
+        for n in (1, 7, 32):
+            with _shuffle_partitions(spark, n):
+                assert Counter(map(tuple, batch(load_events(spark, sf_dir)).collect())) == twin

@@ -25,7 +25,8 @@ def test_split_chunks_stages_input_in_order(spark, tmp_path):
     """The one replay splitter: chunk_0..chunk_2 hold the input multiset
     (duplicates included) in disjoint, increasing ranges of the order
     column, rows with a NULL order value in chunk_0, and after
-    stamp_chunk_mtimes their files arrive in chunk order."""
+    stamp_chunk_mtimes their files arrive in chunk order. A frame with no
+    order value at all goes whole to chunk_0 at every chunk count."""
     import os
 
     from pyspark.sql import functions as F
@@ -53,6 +54,14 @@ def test_split_chunks_stages_input_in_order(spark, tmp_path):
         for d in dirs
     ]
     assert all(max(a) < min(b) for a, b in zip(mtimes, mtimes[1:]))
+
+    nulls = df.filter(F.col("t").isNull())
+    for chunks in (1, 2, 3):
+        out = tmp_path / f"nulls_{chunks}"
+        split_chunks(nulls, "t", chunks, str(out))
+        staged = [spark.read.parquet(str(out / f"chunk_{i}")) for i in range(chunks)]
+        assert staged[0].exceptAll(nulls).isEmpty() and nulls.exceptAll(staged[0]).isEmpty()
+        assert all(p.isEmpty() for p in staged[1:])
 
 
 def test_drain_restores_partitions_on_failure(spark, tmp_path):
