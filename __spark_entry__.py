@@ -76,10 +76,7 @@ def _q_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").alias("_entity"),
         F.col("ts").alias("_probe_time"),
     )
-    return asof_nearest(
-        probes, feature_history(ev), on="_entity",
-        probe_time="_probe_time", probe_id="event_id",
-    )
+    return asof_nearest(probes, feature_history(ev), on="_entity", probe_time="_probe_time")
 
 
 def _q_feature_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7842,8 +7839,8 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "features_agg": _q_features_agg,
         "target_agg": _q_target_agg,
         "feature_history": _q_feature_history,
-        # nearest-in-time as-of (merge_asof direction='nearest'): two
-        # directional as-ofs composed, backward wins distance ties
+        # nearest-in-time as-of (merge_asof direction='nearest'): both
+        # directional windows over one union, backward wins distance ties
         "asof_nearest_labels": _q_asof_nearest,
         # snapshot-expiry dry run over the versioned feature table:
         # retain-last-3 per entity, auditable reclaim counts

@@ -33,6 +33,7 @@ every label frame: it moves the watermark and counts in no walk, so
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 from datetime import datetime, timedelta
 
@@ -71,11 +72,15 @@ def run_streaming_pipeline_e2e(
     if _horizon is not None:
         raise ValueError("the stream has no horizon; pass None or nothing")
     tmpdir, src_schema = stage_replay(spark, sf_dir, chunks, waves)
-    final = build_pipeline_stream(read_chunks(spark, tmpdir, src_schema))
-    # 4 partitions: a stateful operator pays per-partition state-store cost
-    # every micro-batch.
-    with rocksdb_state_store(spark):
-        return drain_to_table(final, "append", partitions=4)
+    try:
+        final = build_pipeline_stream(read_chunks(spark, tmpdir, src_schema))
+        # 4 partitions: a stateful operator pays per-partition state-store
+        # cost every micro-batch.
+        with rocksdb_state_store(spark):
+            return drain_to_table(final, "append", partitions=4)
+    finally:
+        # the memory sink holds the result; the staged files are spent
+        shutil.rmtree(tmpdir)
 
 
 def stage_replay(
@@ -83,16 +88,11 @@ def stage_replay(
     sf_dir: str,
     chunks: int = 2,
     waves: int = WAVES,
-    tmpdir: str | None = None,
-    skip_chunks: int = 0,
 ):
     """Stage the bounded replay: time-split chunk files + sentinel waves.
 
-    Returns ``(tmpdir, src_schema)``. ``skip_chunks`` (0 or ``chunks``) lets
-    a caller stage the replay in two parts into the same ``tmpdir``
-    (checkpoint-recovery tests run the query, stage the sentinel waves, and
-    restart it from the same checkpoint — the file source picks up the new
-    files and the state store carries on).
+    Returns ``(tmpdir, src_schema)``: a fresh directory the caller removes
+    once its query has drained.
     """
     src = load_events(spark, sf_dir).select(
         "event_id",
@@ -104,11 +104,8 @@ def stage_replay(
     # any instant will do for the sentinels' base when no row has a ts
     max_t = src.agg(F.max("ts")).first()[0] or datetime(1970, 1, 1)
 
-    tmpdir = tmpdir or tempfile.mkdtemp(prefix="e2e_stream_")
-    if skip_chunks == 0:
-        split_chunks(src, "ts", chunks, tmpdir)
-    elif skip_chunks != chunks:
-        raise ValueError("skip_chunks must be 0 (stage every chunk) or chunks (none)")
+    tmpdir = tempfile.mkdtemp(prefix="e2e_stream_")
+    split_chunks(src, "ts", chunks, tmpdir)
 
     # Sentinel waves: hourly from an hour past the last label time.
     sentinel_base = max_t + timedelta(hours=LABEL_DELAY_HOURS + 1)

@@ -23,6 +23,8 @@ rows the watermark has not passed, not the history.
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -76,6 +78,9 @@ def run_incremental_feature_history(
     sentinel wave, which lifts the watermark past every real event and
     counts in neither history (its ``event_type`` is NULL)."""
     tmpdir, src_schema = stage_replay(spark, sf_dir, chunks)
-    hist = build_history_stream(read_chunks(spark, tmpdir, src_schema), agg)
-    with rocksdb_state_store(spark):
-        return drain_to_table(hist, "append", partitions=4)
+    try:
+        hist = build_history_stream(read_chunks(spark, tmpdir, src_schema), agg)
+        with rocksdb_state_store(spark):
+            return drain_to_table(hist, "append", partitions=4)
+    finally:
+        shutil.rmtree(tmpdir)

@@ -121,29 +121,47 @@ def test_inclusive_boundary_and_null_extension(spark):
 
 
 def test_duplicate_version_rows_tie_break_deterministically(spark):
-    """Duplicate (key, version_time) rows: in both directions the winner is
-    the duplicate with the largest xxhash64 of its value struct, however
-    the versions are partitioned and on every run."""
+    """Duplicate (key, version_time) rows: in both directions, with a
+    tolerance and under ``asof_nearest``, the winner is the duplicate with
+    the largest xxhash64 of its value struct, however the versions are
+    partitioned and on every run. The tolerance and nearest structs also
+    carry the version time, after the value columns."""
     from pyspark.sql import functions as F
+
+    from flink_example_spark.operators.asof import asof_nearest
 
     dups = [("a", BASE, v) for v in range(1, 6)]
     versions = spark.createDataFrame(
         [("a", BASE - timedelta(hours=1), 100), *dups, ("a", BASE + timedelta(hours=1), 200)],
         VERSION_SCHEMA,
     ).repartition(3)
-    winner = (
-        spark.createDataFrame(dups, VERSION_SCHEMA)
-        .orderBy(F.xxhash64(F.struct("v")).desc())
-        .first()["v"]
-    )
-    cases = {"backward": BASE + timedelta(minutes=30), "forward": BASE - timedelta(minutes=30)}
-    for direction, t in cases.items():
+
+    def winner(*fields):
+        return (
+            spark.createDataFrame(dups, VERSION_SCHEMA)
+            .orderBy(F.xxhash64(F.struct(*fields)).desc())
+            .first()["v"]
+        )
+
+    plain, timed = winner("v"), winner("v", "_change_time")
+    before, after = BASE - timedelta(minutes=30), BASE + timedelta(minutes=30)
+    cases = [
+        ("backward", after, plain, {}),
+        ("forward", before, plain, {"direction": "forward"}),
+        ("backward tolerance", after, timed, {"tolerance": "1 hour"}),
+        ("forward tolerance", before, timed, {"direction": "forward", "tolerance": "1 hour"}),
+        # nearer to the duplicates than to either neighbour, on each side
+        ("nearest backward", BASE + timedelta(minutes=10), timed, None),
+        ("nearest forward", BASE - timedelta(minutes=10), timed, None),
+    ]
+    for name, t, expected, kw in cases:
         probes = spark.createDataFrame([("a", 0, t)], PROBE_SCHEMA)
         for _ in range(3):
-            rows = asof_join(
-                probes, versions, on="k", probe_time="t", direction=direction
-            ).collect()
-            assert [r["v"] for r in rows] == [winner], direction
+            if kw is None:
+                out = asof_nearest(probes, versions, on="k", probe_time="t")
+            else:
+                out = asof_join(probes, versions, on="k", probe_time="t", **kw)
+            assert [r["v"] for r in out.collect()] == [expected], name
 
 
 def test_forward_direction_first_at_or_after(spark):
@@ -266,11 +284,95 @@ def test_asof_nearest_picks_closer_side_and_tie_backward(spark):
     out = {
         r["event_id"]: r
         for r in asof_nearest(
-            probes, versions, on="_entity",
-            probe_time="_probe_time", probe_id="event_id",
+            probes, versions, on="_entity", probe_time="_probe_time"
         ).collect()
     }
     assert (out[1]["loss_value"], out[1]["_direction"]) == (10.0, "backward")
     assert (out[2]["loss_value"], out[2]["_direction"]) == (20.0, "forward")
     assert (out[3]["loss_value"], out[3]["_direction"]) == (10.0, "backward")
     assert out[4]["loss_value"] is None and out[4]["_direction"] is None
+
+
+def test_asof_nearest_one_row_per_probe_row(spark):
+    """Probe rows need no unique id: two rows sharing an ``event_id``, one
+    nearer its backward version and one nearer its forward version, give
+    two rows, each with its own match."""
+    from flink_example_spark.operators.asof import asof_nearest
+
+    versions = spark.createDataFrame(
+        [("u", BASE, 10.0), ("u", BASE + timedelta(seconds=100), 20.0)],
+        "_entity string, _change_time timestamp_ntz, loss_value double",
+    )
+    probes = spark.createDataFrame(
+        [(1, "u", BASE + timedelta(seconds=10)), (1, "u", BASE + timedelta(seconds=90))],
+        "event_id long, _entity string, _probe_time timestamp_ntz",
+    )
+    out = asof_nearest(probes, versions, on="_entity", probe_time="_probe_time")
+    assert sorted((r["loss_value"], r["_direction"]) for r in out.collect()) == [
+        (10.0, "backward"),
+        (20.0, "forward"),
+    ]
+
+
+def test_null_keys_match_nothing_as_in_duckdb(spark):
+    """A NULL key matches nothing, as in an equi-join: a NULL-key probe is
+    NULL-extended (dropped under ``how='inner'``) even when NULL-key
+    versions exist. Every direction, the tolerance and ``asof_nearest``
+    equal DuckDB's ASOF JOIN on the same frames."""
+    import duckdb
+    import pandas as pd
+
+    from flink_example_spark.operators.asof import asof_nearest
+
+    def at(m):
+        return BASE + timedelta(minutes=m)
+
+    versions = [("a", at(0), 1), ("a", at(10), 2), ("b", at(5), 3), (None, at(0), 7), (None, at(3), 8)]
+    probes = [("a", 0, at(2)), ("a", 1, at(20)), ("b", 2, at(0)), ("c", 3, at(0)), (None, 4, at(1))]
+    vdf = spark.createDataFrame(versions, "k string, _change_time timestamp_ntz, v bigint")
+    pdf = spark.createDataFrame(probes, "k string, pid int, t timestamp_ntz")
+    con = duckdb.connect()
+    con.register("vs", pd.DataFrame(versions, columns=["k", "_change_time", "v"]))
+    con.register("ps", pd.DataFrame(probes, columns=["k", "pid", "t"]))
+
+    def asof(op, join="ASOF LEFT JOIN"):
+        return f"ps {join} vs ON ps.k = vs.k AND ps.t {op} vs._change_time"
+
+    def twin(sql):
+        return sorted(con.execute(sql).fetchall())
+
+    def got(df):  # (pid, the columns after the probe's)
+        return sorted((r["pid"], *tuple(r)[3:]) for r in df.collect())
+
+    cases = [
+        ({}, f"SELECT pid, v FROM {asof('>=')}"),
+        ({"direction": "forward"}, f"SELECT pid, v FROM {asof('<=')}"),
+        ({"how": "inner"}, f"SELECT pid, v FROM {asof('>=', 'ASOF JOIN')}"),
+        (
+            {"tolerance": "6 minutes"},
+            "SELECT pid, CASE WHEN vs._change_time >= ps.t - INTERVAL 6 MINUTE"
+            f" THEN v END FROM {asof('>=')}",
+        ),
+        (
+            {"direction": "forward", "tolerance": "6 minutes"},
+            "SELECT pid, CASE WHEN vs._change_time <= ps.t + INTERVAL 6 MINUTE"
+            f" THEN v END FROM {asof('<=')}",
+        ),
+    ]
+    for kw, sql in cases:
+        assert got(asof_join(pdf, vdf, on="k", probe_time="t", **kw)) == twin(sql), kw
+
+    nearest = f"""
+        WITH b AS (SELECT pid, t, vs._change_time AS bt, v FROM {asof('>=')}),
+             f AS (SELECT pid, vs._change_time AS ft, v FROM {asof('<=')}),
+             pick AS (
+               SELECT pid, b.v AS bv, f.v AS fv, bt, ft,
+                      bt IS NOT NULL AND (ft IS NULL OR
+                        epoch_us(t) - epoch_us(bt) <= epoch_us(ft) - epoch_us(t)) AS use_b
+               FROM b JOIN f USING (pid))
+        SELECT pid, CASE WHEN use_b THEN bv ELSE fv END,
+               CASE WHEN use_b THEN bt ELSE ft END,
+               CASE WHEN use_b THEN 'backward' WHEN ft IS NOT NULL THEN 'forward' END
+        FROM pick
+    """
+    assert got(asof_nearest(pdf, vdf, on="k", probe_time="t")) == twin(nearest)

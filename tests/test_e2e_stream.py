@@ -61,12 +61,12 @@ def test_e2e_is_one_streaming_query_with_one_stateful_op(spark):
 
 
 def test_e2e_checkpoint_recovery(spark, tmp_path):
-    """Exactly-once restartability of the one-operator query: run the replay
-    with only the first half of the data staged, drain it (availableNow),
-    then stage the remaining chunks + sentinel waves and RESTART from the
-    same checkpoint into the same parquet sink. The restarted query resumes
-    from the committed offsets/state and the combined output equals the
-    batch flagship exactly — no lost rows, no duplicates."""
+    """Exactly-once restartability of the one-operator query: stage the
+    whole replay once, hold back its second chunk and its sentinel waves,
+    drain the first half (availableNow), then put them back and RESTART
+    from the same checkpoint into the same parquet sink. The restarted
+    query resumes from the committed offsets/state and the combined output
+    equals the batch flagship exactly — no lost rows, no duplicates."""
     import os
     import shutil
 
@@ -81,10 +81,9 @@ def test_e2e_checkpoint_recovery(spark, tmp_path):
 
     cp = str(tmp_path / "checkpoint")
     out = str(tmp_path / "out")
-    chunks = 2
-
-    # phase 1: only chunk 0 staged (no sentinels — nothing flushes yet)
-    tmpdir, schema = stage_replay(spark, SF, chunks=chunks, waves=0)
+    held = tmp_path / "held"
+    held.mkdir()
+    tmpdir, schema = stage_replay(spark, SF, chunks=2, waves=WAVES)
 
     def run_once():
         final = build_pipeline_stream(read_chunks(spark, tmpdir, schema))
@@ -99,20 +98,24 @@ def test_e2e_checkpoint_recovery(spark, tmp_path):
             )
             q.awaitTermination()
 
-    # phase-1 staging wrote BOTH chunks; remove chunk_1 before the first run
-    # so the restart genuinely sees new files afterwards
-    moved = str(tmp_path / "chunk_1_held")
-    shutil.move(os.path.join(tmpdir, "chunk_1"), moved)
-    run_once()
-    interim = spark.read.parquet(out).count() if os.listdir(out) else 0
+    try:
+        # phase 1: chunk_0 alone (no sentinels — nothing flushes yet). A
+        # rename keeps the mtimes stamped at staging, so the held-back
+        # files still sort after chunk_0 when they come back.
+        later = sorted(n for n in os.listdir(tmpdir) if n != "chunk_0")
+        assert later[0] == "chunk_1" and len(later) == 1 + WAVES
+        for name in later:
+            shutil.move(os.path.join(tmpdir, name), held / name)
+        run_once()
+        interim = spark.read.parquet(out).count() if os.listdir(out) else 0
 
-    # phase 2: put chunk_1 back and add the sentinel waves, restart from
-    # the same checkpoint
-    shutil.move(moved, os.path.join(tmpdir, "chunk_1"))
-    stage_replay(
-        spark, SF, chunks=chunks, waves=WAVES, tmpdir=tmpdir, skip_chunks=chunks
-    )
-    run_once()
+        # phase 2: put chunk_1 and the sentinel waves back, restart from
+        # the same checkpoint
+        for name in later:
+            shutil.move(held / name, os.path.join(tmpdir, name))
+        run_once()
+    finally:
+        shutil.rmtree(tmpdir)
 
     streamed = spark.read.parquet(out)
     batch = pipeline(spark, SF)
@@ -120,6 +123,41 @@ def test_e2e_checkpoint_recovery(spark, tmp_path):
     # the first run alone must NOT have produced the full result (the
     # restart really continued work rather than redoing a finished job)
     assert interim < batch.count()
+
+
+def test_core_replays_remove_their_staging(spark, tmp_path, monkeypatch):
+    """Both core replays remove the chunk files they stage once the query
+    has drained, also when the drain raises; the memory-sink results still
+    equal the batch relations afterwards."""
+    import os
+    import tempfile
+
+    import pytest
+
+    from flink_example_spark.plans.events_demo import (
+        feature_history,
+        load_events,
+        pipeline,
+    )
+    from flink_example_spark.streaming import e2e
+    from flink_example_spark.streaming.incremental import (
+        run_incremental_feature_history,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    streamed = e2e.run_streaming_pipeline_e2e(spark, SF)
+    hist = run_incremental_feature_history(spark, SF)
+    assert os.listdir(tmp_path) == []
+    assert rows_set(streamed) == rows_set(pipeline(spark, SF))
+    assert rows_set(hist) == rows_set(feature_history(load_events(spark, SF)))
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("drain failed")
+
+    monkeypatch.setattr(e2e, "drain_to_table", fail)
+    with pytest.raises(RuntimeError, match="drain failed"):
+        e2e.run_streaming_pipeline_e2e(spark, SF)
+    assert os.listdir(tmp_path) == []
 
 
 # Events tied in ts: two tied errors (entity 1), three (entity 2), and an

@@ -30,8 +30,15 @@ def test_version_history_single_exchange(spark):
     assert plan.count("Exchange") == 1  # one shuffle on the entity key
 
 
+def over_union(plan: str) -> str:
+    """The part of ``plan`` above its one Union: the tree string prints
+    every ancestor of a node before the node."""
+    assert plan.count("Union") == 1, plan
+    return plan[: plan.index("Union")]
+
+
 def test_asof_union_single_exchange_over_union(spark):
-    from flink_example_spark.operators.asof import asof_join
+    from flink_example_spark.operators.asof import asof_join, asof_nearest
     from flink_example_spark.plans.events_demo import (
         examples,
         feature_history,
@@ -39,14 +46,22 @@ def test_asof_union_single_exchange_over_union(spark):
     )
 
     ev = load_events(spark, SF)
-    joined = asof_join(
-        examples(ev), feature_history(ev), on="_entity", probe_time="_prediction_time"
-    )
-    plan = physical(joined)
-    # the as-of itself adds exactly one Exchange above the Union (plus the
-    # per-input shuffles counted in the other tests)
-    assert "Union" in plan
-    assert "Window" in plan
+    ex, fh = examples(ev), feature_history(ev)
+    on = dict(on="_entity", probe_time="_prediction_time")
+    cases = {
+        "backward": (asof_join(ex, fh, **on), 1),
+        "forward": (asof_join(ex, fh, direction="forward", **on), 1),
+        "tolerance": (asof_join(ex, fh, tolerance="7 days", **on), 1),
+        "nearest": (asof_nearest(ex, fh, **on), 2),
+    }
+    for name, (joined, windows) in cases.items():
+        plan = physical(joined)
+        # the as-of itself adds exactly one Exchange above the Union (the
+        # inputs' own shuffles sit below it), one window per direction it
+        # reads, and no join back to the probes
+        assert over_union(plan).count("Exchange") == 1, name
+        assert over_union(plan).count("Window ") == windows, name
+        assert "Join" not in plan, name
 
 
 def test_q5_broadcasts_small_dims(spark):
